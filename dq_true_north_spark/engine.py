@@ -143,10 +143,11 @@ def run_catalog(
     # shared InMemoryRelation and every later rule reads it. The round-5
     # design ran blocking count() jobs per source before any rule could
     # start; round-6 measurement: that warm phase sat on the critical path
-    # and cost more than it saved at bench scale (3.3 s -> 2.7 s without),
-    # while lazy marking keeps the at-scale property that 6 rules over one
-    # source pay ~one scan, not six (two rules racing the first
-    # materialization at worst duplicate that one scan, never all six).
+    # and cost more than it saved at bench scale (3.3 s -> 2.7 s without).
+    # The price: dispatch below is one wave of up to 16 threads, so up to
+    # 16 rules over one source can race its first materialization, not
+    # two. Spark's block-level cache locking bounds how much of that scan
+    # they duplicate.
     for tbl in sources:
         try:
             spark.catalog.cacheTable(tbl)

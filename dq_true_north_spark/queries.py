@@ -1681,34 +1681,31 @@ def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 @df_query("near_dup_clusters_pages")
 def q_near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate cluster formation: MinHash LSH pairs → connected
-    components (min-label propagation) → (doc, cluster_id, is_representative).
+    components (star_contract_clusters; the few hundred pairs here finish
+    by union-find on the driver) → (doc, cluster_id, is_representative).
     The step between pair generation and actually dropping duplicates —
     keep-one-per-cluster with the same min-key tie-break as exact dedup.
-    Although the Spark algorithm is iterative, its OUTPUT is a pure
-    function of the pair graph, so since round 5 the sf0.01 driver check
-    is a full hash oracle: union-find over the scalar-mirror pairs
+    The OUTPUT is a pure function of the pair graph, so the sf0.01 driver
+    check is a full hash oracle: union-find over the scalar-mirror pairs
     (_register_minhash_oracles). Planted ground truth remains asserted in
     tests/test_dedup_similarity.py."""
     from pyspark.sql import functions as F
 
     from .corpus import n_pages_for_sf, pages_df
-    from .textquality.dedup import minhash_candidate_pairs, near_dup_clusters
+    from .textquality.dedup import minhash_candidate_pairs, star_contract_clusters
 
     pages = pages_df(spark, min(n_pages_for_sf(sf_dir), 10_000))
     pairs = minhash_candidate_pairs(pages, id_col="url", text_col="text")
-    return near_dup_clusters(pairs).select(
+    return star_contract_clusters(pairs).select(
         "doc", "cluster_id",
         (F.col("doc") == F.col("cluster_id")).cast("int").alias("is_representative"),
     )
 
 
-# near_dup_clusters_star_pages is deliberately NOT a registry entry: star
-# contraction produces output pinned IDENTICAL to near_dup_clusters_pages
-# (tests/test_dedup_similarity.py asserts equality against label propagation
-# AND a union-find reference), so a second rows-only driver entry added no
-# evidence while consuming a CORRECTNESS-window slot (VERDICT r3 wrong #1).
-# The algorithm stays first-class: keep_representatives(algorithm="star"),
-# the chain-convergence bench entry in bench.py, and the parity tests.
+# There is one connected-components algorithm (star_contract_clusters), so
+# there is no near_dup_clusters_star_pages entry; its distributed rounds are
+# checked against a union-find reference in tests/test_dedup_similarity.py,
+# with the driver-finish budget lowered so the rounds actually run.
 
 
 # bump when ivf_write_index's layout or training parameters change — part

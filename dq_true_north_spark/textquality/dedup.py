@@ -500,42 +500,6 @@ def losers_broadcastable(n_losers: int, n_total: int) -> bool:
 # ----------------------------------------- near-dup cluster formation ------
 
 
-class _iter_loop_conf:
-    """Scale-adaptive shuffle sizing for the iterative graph loops.
-
-    Every round of label propagation / star contraction runs 3-5 tiny
-    exchanges; with the session's cluster-sized shuffle.partitions and
-    AQE's per-stage replanning, the scheduler — not data — dominates each
-    round (guide §2.2: size partitions to the data, never a constant).
-    On entry: partitions = ceil(n_rows / 25k) clamped to [2, session
-    setting] — the measured sweet spot at bench scale, and past ~3.2M rows
-    the clamp returns the session value so a real corpus keeps its
-    cluster sizing; AQE is left ON above the same threshold (its skew
-    splitting matters there) and skipped below it where replanning is
-    pure latency. Runtime confs are restored on exit (the
-    test_bucketing.py save/restore discipline)."""
-
-    def __init__(self, spark, n_rows: int):
-        self.spark = spark
-        self.saved: dict[str, str] = {}
-        sess_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        parts = min(sess_parts, max(2, -(-n_rows // 25_000)))
-        self.new = {"spark.sql.shuffle.partitions": str(parts)}
-        if parts < sess_parts:
-            self.new["spark.sql.adaptive.enabled"] = "false"
-
-    def __enter__(self):
-        for k, v in self.new.items():
-            self.saved[k] = self.spark.conf.get(k)
-            self.spark.conf.set(k, v)
-        return self
-
-    def __exit__(self, *exc):
-        for k, v in self.saved.items():
-            self.spark.conf.set(k, v)
-        return False
-
-
 def _canonical_edges(pairs: DataFrame) -> DataFrame:
     """(hi, lo) canonical undirected edges, self-loops dropped."""
     return (
@@ -557,10 +521,11 @@ def _large_star(edges: DataFrame) -> DataFrame:
     Round-6 trims (output-identical; each exchange/scan is a whole extra
     stage per iteration and the loop is scheduler-bound at small sizes):
     `sym` explodes both orientations from ONE scan of the edge set instead
-    of a self-union, and the trailing distinct() is gone — _small_star
-    groups/aggregates per key and ends in its own distinct(), so duplicate
-    large-star rows cannot change the round's result, only its
-    intermediate size (bounded by 2x the input edge multiset)."""
+    of a self-union, and the trailing distinct() is gone — small-star
+    groups/aggregates per key and the round ends in one (hi, lo)
+    aggregation, so duplicate large-star rows cannot change the round's
+    result, only its intermediate size (bounded by 2x the input edge
+    multiset)."""
     sym = edges.select(
         F.explode(
             F.array(
@@ -595,169 +560,119 @@ def _small_star_raw(edges: DataFrame) -> DataFrame:
     return rewired.union(kept)
 
 
-def _small_star(edges: DataFrame) -> DataFrame:
-    """Small-star round (distinct output) — kept as the readable spec of
-    one contraction step."""
-    return _small_star_raw(edges).distinct()
+# Live canonical edges at or below this count finish on the driver: one
+# Arrow collect plus a vectorized union-find there costs no more than a
+# single distributed star round at the same size (about 3 s against 7 s at
+# 1M edges on 4 cores), while every round pays ~0.7 s of driver analysis
+# and scheduling however small the graph is.
+_DRIVER_FINISH_MAX_EDGES = 1_000_000
+
+
+def _driver_finish(edges: DataFrame) -> DataFrame:
+    """Connected components of a collected canonical edge set → (doc,
+    cluster_id). Nodes get codes in value order (Arrow sorts strings by
+    bytes, as Spark does) and union-find hooks each root under the smaller
+    root across an edge, so every component's final root is the code of its
+    minimum member."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    tbl = edges.toArrow()
+    ends = pa.chunked_array(tbl["hi"].chunks + tbl["lo"].chunks,
+                            tbl.schema.field("hi").type)
+    nodes = pc.unique(ends)
+    nodes = nodes.take(pc.sort_indices(nodes))
+    codes = pc.index_in(ends, value_set=nodes).to_numpy()
+    hi, lo = codes[:tbl.num_rows], codes[tbl.num_rows:]
+    root = np.arange(len(nodes))
+    while True:
+        a, b = root[hi], root[lo]
+        cross = a != b
+        if not cross.any():
+            break
+        np.minimum.at(root, np.maximum(a, b)[cross], np.minimum(a, b)[cross])
+        while not np.array_equal(nxt := root[root], root):
+            root = nxt
+    schema = edges.selectExpr("hi AS doc", "lo AS cluster_id").schema
+    return edges.sparkSession.createDataFrame(
+        pa.table({"doc": nodes, "cluster_id": nodes.take(root)}), schema
+    )
 
 
 def star_contract_clusters(pairs: DataFrame, max_rounds: int = 20,
                            stats: dict | None = None) -> DataFrame:
-    """Connected components via alternating large-star/small-star
-    contraction — O(log n) rounds on ANY graph shape, vs O(diameter) for
-    label propagation. This is the 10^12-doc path the label-propagation
-    docstring promised: a 10^6-long chain converges in ~20 rounds here
-    where propagation would need 10^6.
-
-    At convergence the edge set is a union of stars, every member pointing
-    DIRECTLY at its component's minimum node; labels read straight off the
-    final edges. Same output contract as near_dup_clusters:
-    (doc, cluster_id), cluster_id = lexicographically smallest member.
-    Convergence is CHECKED (set-difference, not a count heuristic) and
-    raises if max_rounds was hit while edges still moved. Pass `stats` to
-    receive {'rounds': n} — the O(log n) claim is measured, not asserted
-    (bench.py times a planted 10k-node chain, the label-propagation
-    worst case, through here)."""
-    edges = _canonical_edges(pairs).localCheckpoint(eager=True)
-    spark = pairs.sparkSession
-    with _iter_loop_conf(spark, edges.count()):
-        moved = -1   # bound even when max_rounds <= 0
-        for rnd in range(max_rounds):
-            # ONE keyed exchange per round does triple duty (round 6): the
-            # un-distinct small-star output and the previous edge set are
-            # tagged and union'ed, and a single (hi, lo) aggregation
-            # yields membership on each side — that IS small-star's
-            # distinct, the new edge set, AND the symmetric difference.
-            # The checkpoint is LAZY: the moved-count below materializes
-            # it (the count itself is a shuffle-free scan of the cached
-            # rows), and next round's edges is a cheap filter over the
-            # same cached frame.
-            tagged = _small_star_raw(_large_star(edges)).select(
-                "hi", "lo", F.lit(True).alias("_new")
-            ).union(
-                edges.select("hi", "lo", F.lit(False).alias("_new"))
-            )
-            merged = tagged.groupBy("hi", "lo").agg(
-                F.max(F.col("_new")).alias("_in_new"),
-                F.max(~F.col("_new")).alias("_in_old"),
-            ).localCheckpoint(eager=False)
-            moved = merged.filter(
-                F.col("_in_new") != F.col("_in_old")
-            ).count()
-            edges = merged.filter(F.col("_in_new")).select("hi", "lo")
-            if moved == 0:
-                if stats is not None:
-                    stats["rounds"] = rnd + 1
-                members = edges.select(
-                    F.col("hi").alias("doc"), F.col("lo").alias("cluster_id")
-                )
-                roots = (
-                    edges.select(F.col("lo").alias("doc"))
-                    .distinct()
-                    .join(edges.select(F.col("hi").alias("doc")), "doc",
-                          "left_anti")
-                    .withColumn("cluster_id", F.col("doc"))
-                )
-                return members.union(roots)
-    raise RuntimeError(
-        f"star_contract_clusters did not converge in {max_rounds} rounds "
-        f"({moved} edge moves in the last round)"
-    )
-
-
-def near_dup_clusters(pairs: DataFrame, max_iters: int = 10) -> DataFrame:
     """Connected components over candidate pairs → (doc, cluster_id), with
     cluster_id = the lexicographically smallest member (the keep-first
     representative, same tie-break discipline as exact dedup).
 
     Input: pairs(doc_a, doc_b) from minhash_candidate_pairs /
-    simhash_near_pairs. Algorithm: iterative min-label propagation — each
-    round every node takes the min label among itself and its neighbors
-    (one symmetric-edge join + one groupBy per round), until a fixpoint.
-    Rounds needed = component diameter; LSH components are near-cliques
-    (every member shared a bucket with the seed), so diameter is tiny by
-    construction — max_iters=10 covers pathological chains; convergence is
-    CHECKED, not assumed (raises if the cap was hit while still moving,
-    mirroring the capped-bucket honesty rule). For long-chain / unknown-
-    diameter graphs use `star_contract_clusters` above — the alternating
-    large-star/small-star contraction (O(log n) rounds on any shape), same
-    output contract, tested equal to a union-find reference.
+    simhash_near_pairs, or any graph. A graph whose live canonical edge set
+    fits _DRIVER_FINISH_MAX_EDGES is collected and finished by union-find on
+    the driver — checked before the first round and after every round.
+    Larger graphs run alternating large-star/small-star contraction rounds
+    (Kiveris et al., SOCC'14), O(log n) rounds on ANY graph shape, until
+    they fit or converge. At convergence the edge set is a union of stars,
+    every member pointing DIRECTLY at its component's minimum node; labels
+    read straight off the final edges. Convergence is CHECKED
+    (set-difference, not a count heuristic) and raises if max_rounds was hit
+    while edges still moved. Pass `stats` to receive {'rounds': n}, the
+    number of distributed rounds run (0 when the driver finishes at once).
 
-    Lineage is cut with localCheckpoint each round: an iterative join loop
-    otherwise compounds the logical plan and re-executes round 1 at round k.
-    """
-    # ONE evaluation of the pairs plan: the symmetric edge set comes from a
-    # per-row explode of both orientations, not a self-union — union(pairs,
-    # pairs.swapped) evaluated the (expensive: generation + signatures +
-    # LSH) pairs subtree twice inside the same job (round-6 plan audit)
-    edges = (
-        pairs.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-                    ),
-                    F.struct(
-                        F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")
-                    ),
-                )
-            ).alias("e")
+    The pairs plan is evaluated once, into a local checkpoint; every later
+    read, the driver collect included, comes from checkpointed rows."""
+    if stats is None:
+        stats = {}
+    stats["rounds"] = 0
+    edges = _canonical_edges(pairs).localCheckpoint(eager=True)
+    live, moved = edges.count(), -1
+    while live > _DRIVER_FINISH_MAX_EDGES:
+        if stats["rounds"] == max_rounds:
+            raise RuntimeError(
+                f"star_contract_clusters did not converge in {max_rounds} "
+                f"rounds ({moved} edge moves in the last round)"
+            )
+        # ONE keyed exchange per round does triple duty (round 6): the
+        # un-distinct small-star output and the previous edge set are
+        # tagged and union'ed, and a single (hi, lo) aggregation yields
+        # membership on each side — that IS small-star's distinct, the new
+        # edge set, AND the symmetric difference. The checkpoint is LAZY:
+        # the one global aggregate below materializes it while counting
+        # both the moved and the live edges, and next round's edges is a
+        # cheap filter over the same cached frame.
+        tagged = _small_star_raw(_large_star(edges)).select(
+            "hi", "lo", F.lit(True).alias("_new")
+        ).union(
+            edges.select("hi", "lo", F.lit(False).alias("_new"))
         )
-        .select("e.src", "e.dst")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    labels = (
-        edges.select(F.col("src").alias("doc"))
-        .distinct()
-        .withColumn("cluster_id", F.col("doc"))
-        .localCheckpoint(eager=True)
-    )
-    spark = pairs.sparkSession
-    with _iter_loop_conf(spark, edges.count()):
-        moved = -1   # bound even when max_iters <= 0
-        for _ in range(max_iters):
-            neighbor_min = (
-                edges.join(labels, edges.dst == labels.doc)
-                .groupBy(F.col("src").alias("doc"))
-                .agg(F.min("cluster_id").alias("nbr_min"))
+        merged = tagged.groupBy("hi", "lo").agg(
+            F.max(F.col("_new")).alias("_in_new"),
+            F.max(~F.col("_new")).alias("_in_old"),
+        ).localCheckpoint(eager=False)
+        moved, live = merged.agg(
+            F.count_if(F.col("_in_new") != F.col("_in_old")),
+            F.count_if(F.col("_in_new")),
+        ).first()
+        edges = merged.filter(F.col("_in_new")).select("hi", "lo")
+        stats["rounds"] += 1
+        if moved == 0:
+            members = edges.select(
+                F.col("hi").alias("doc"), F.col("lo").alias("cluster_id")
             )
-            new_label = F.least(
-                F.col("cluster_id"), F.coalesce("nbr_min", "cluster_id")
+            roots = (
+                edges.select(F.col("lo").alias("doc"))
+                .distinct()
+                .join(edges.select(F.col("hi").alias("doc")), "doc",
+                      "left_anti")
+                .withColumn("cluster_id", F.col("doc"))
             )
-            # the convergence flag rides INSIDE the checkpointed frame, so
-            # the moved-count is a cheap filter over already-materialized
-            # rows — not a second labels-vs-updated join job per round
-            # (select exprs resolve against the INPUT frame, so aliasing
-            # the new value as cluster_id cannot shadow the old column it
-            # compares against)
-            updated = (
-                labels.join(neighbor_min, "doc", "left")
-                .select(
-                    "doc",
-                    new_label.alias("cluster_id"),
-                    (new_label != F.col("cluster_id")).alias("__changed"),
-                )
-                # LAZY: the moved-count below materializes the checkpoint
-                # in the same job (eager=True was a second job per round)
-                .localCheckpoint(eager=False)
-            )
-            moved = updated.filter(F.col("__changed")).count()
-            labels = updated.drop("__changed")
-            if moved == 0:
-                return labels
-    raise RuntimeError(
-        f"near_dup_clusters did not converge in {max_iters} rounds "
-        f"({moved} labels still moving) — raise max_iters or use "
-        "star contraction for long-chain graphs"
-    )
+            return members.union(roots)
+    return _driver_finish(edges)
 
 
 def keep_representatives(df: DataFrame, pairs: DataFrame,
                          id_col: str = "url",
                          broadcast_losers: bool | None = None,
-                         n_total: int | None = None,
-                         algorithm: str = "label") -> DataFrame:
+                         n_total: int | None = None) -> DataFrame:
     """Drop every near-duplicate except its cluster representative (the
     min-id member). Docs in no pair are kept.
 
@@ -768,24 +683,13 @@ def keep_representatives(df: DataFrame, pairs: DataFrame,
     corpus and an unconditional broadcast OOMs the executors (the round-1
     exact-dedup lesson; VERDICT r2 #4) — those fall through to a keys-only
     sort-merge anti-join. Cost of measuring: losers.count() is a cheap
-    re-read (the cluster labels are localCheckpointed); the corpus size is
-    a count() whose plan prunes every column (UDF projections included) —
-    still, pass n_total when the caller already knows it (a pipeline that
-    counted its input), or pin True/False when the dup fraction is known
-    out-of-band.
-
-    algorithm: 'label' (default — min-label propagation, right for the
-    near-clique graphs LSH pairs produce) or 'star' (large/small-star
-    contraction, O(log n) rounds for unknown-diameter graphs); the two are
-    tested output-identical."""
-    algorithms = {"label": near_dup_clusters, "star": star_contract_clusters}
-    if algorithm not in algorithms:
-        raise ValueError(
-            f"algorithm must be one of {sorted(algorithms)}, got {algorithm!r}"
-        )
-    cluster_fn = algorithms[algorithm]
+    re-read (the cluster labels are driver-built or read checkpointed
+    edges); the corpus size is a count() whose plan prunes every column (UDF
+    projections included) — still, pass n_total when the caller already
+    knows it (a pipeline that counted its input), or pin True/False when the
+    dup fraction is known out-of-band."""
     losers = (
-        cluster_fn(pairs)
+        star_contract_clusters(pairs)
         .filter(F.col("doc") != F.col("cluster_id"))
         .select(F.col("doc").alias(id_col))
     )

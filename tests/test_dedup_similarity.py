@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import random
+
 from pyspark.sql import functions as F
 
 from dq_true_north_spark.corpus import pages_df
@@ -222,14 +224,15 @@ def test_near_dup_clusters_chain_and_representatives(spark):
     keep_representatives."""
     from dq_true_north_spark.textquality.dedup import (
         keep_representatives,
-        near_dup_clusters,
+        star_contract_clusters,
     )
 
     pairs = spark.createDataFrame(
         [("b", "a"), ("b", "c"), ("c", "d"), ("x", "y")],
         "doc_a string, doc_b string",
     )
-    got = {r["doc"]: r["cluster_id"] for r in near_dup_clusters(pairs).collect()}
+    got = {r["doc"]: r["cluster_id"]
+           for r in star_contract_clusters(pairs).collect()}
     assert got == {"a": "a", "b": "a", "c": "a", "d": "a", "x": "x", "y": "x"}
 
     docs = spark.createDataFrame(
@@ -247,13 +250,14 @@ def test_near_dup_clusters_on_planted_corpus(spark):
 
     from dq_true_north_spark.textquality.dedup import (
         keep_representatives,
-        near_dup_clusters,
+        star_contract_clusters,
     )
 
     n = 600
     pages = pages_df(spark, n, partitions=4)
     pairs = minhash_candidate_pairs(pages, id_col="url", text_col="text")
-    labels = {r["doc"]: r["cluster_id"] for r in near_dup_clusters(pairs).collect()}
+    labels = {r["doc"]: r["cluster_id"]
+              for r in star_contract_clusters(pairs).collect()}
 
     def idx(url):
         return int(re.search(r"page-(\d+)\.html", url).group(1))
@@ -295,45 +299,49 @@ def test_ann_ivf_recall_vs_bruteforce(spark):
     emb.unpersist()
 
 
+def _union_find_labels(edges):
+    """Reference connected components: node -> min member of its component."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    comp = {}
+    for x in list(parent):
+        comp.setdefault(find(x), set()).add(x)
+    return {x: min(m) for m in comp.values() for x in m}
+
+
+def _random_graph(seed, n_nodes, n_edges):
+    rng = random.Random(seed)
+    nodes = [f"n{i:03d}" for i in range(n_nodes)]
+    return sorted({tuple(sorted(rng.sample(nodes, 2))) for _ in range(n_edges)})
+
+
 def test_near_dup_clusters_matches_union_find_reference(spark):
-    """min-label propagation == driver-side union-find on seeded random
-    graphs (including long chains that need several rounds)."""
-    import random
+    """star_contract_clusters == driver-side union-find on seeded random
+    graphs with an 8-node chain, and on a 200-node chain; under the default
+    budget each finishes on the driver without a distributed round."""
+    from dq_true_north_spark.textquality.dedup import star_contract_clusters
 
-    from dq_true_north_spark.textquality.dedup import near_dup_clusters
-
-    def union_find_labels(edges):
-        parent = {}
-
-        def find(x):
-            parent.setdefault(x, x)
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for a, b in edges:
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        # label = min member of the component
-        comp = {}
-        for x in list(parent):
-            comp.setdefault(find(x), set()).add(x)
-        return {x: min(m) for r, m in comp.items() for x in m}
-
-    for seed in (1, 2, 3):
-        rng = random.Random(seed)
-        nodes = [f"n{i:03d}" for i in range(40)]
-        edges = {tuple(sorted(rng.sample(nodes, 2))) for _ in range(30)}
-        # plus a deliberate 8-node chain (worst case for label propagation)
-        chain = [(f"c{i:02d}", f"c{i + 1:02d}") for i in range(8)]
-        all_edges = sorted(edges) + chain
-        expected = union_find_labels(all_edges)
-        pairs = spark.createDataFrame(all_edges, "doc_a string, doc_b string")
-        got = {r["doc"]: r["cluster_id"]
-               for r in near_dup_clusters(pairs, max_iters=15).collect()}
-        assert got == expected, f"seed {seed}"
+    chain = [(f"c{i:02d}", f"c{i + 1:02d}") for i in range(8)]
+    long_chain = [(f"c{i:04d}", f"c{i + 1:04d}") for i in range(200)]
+    graphs = [_random_graph(seed, 40, 30) + chain for seed in (1, 2, 3)]
+    for edges in graphs + [long_chain]:
+        pairs = spark.createDataFrame(edges, "doc_a string, doc_b string")
+        stats: dict = {}
+        got = {r["doc"]: r["cluster_id"] for r in star_contract_clusters(
+            pairs, max_rounds=15, stats=stats).collect()}
+        assert got == _union_find_labels(edges)
+        assert stats == {"rounds": 0}
 
 
 def test_keep_representatives_join_strategies_agree(spark):
@@ -520,88 +528,66 @@ def test_gif_frame_count_codec_free(spark):
     assert (row["format"], row["width"], row["height"]) == ("gif", 3, 2)
 
 
-def test_star_contraction_matches_union_find_and_handles_long_chains(spark):
-    """Alternating large-star/small-star == driver-side union-find on
-    seeded random graphs AND on a 200-node chain (diameter 200) that
-    min-label propagation could never finish in its round budget —
-    the documented 10^12-doc upgrade path, now real."""
-    import random
-
+def test_star_contraction_matches_union_find_and_handles_long_chains(
+        spark, monkeypatch):
+    """With the driver finish disabled, alternating large-star/small-star
+    rounds == union-find on seeded random graphs AND on a 200-node chain
+    (diameter 200), which converges in O(log n) rounds — the round COUNT is
+    measured via stats, not just implied by convergence. A round budget too
+    small for the chain must REFUSE, not silently return partial labels."""
     import pytest
 
-    from dq_true_north_spark.textquality.dedup import (
-        near_dup_clusters,
-        star_contract_clusters,
-    )
+    from dq_true_north_spark.textquality import dedup
 
-    def union_find_labels(edges):
-        parent = {}
-
-        def find(x):
-            parent.setdefault(x, x)
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for a, b in edges:
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        comp = {}
-        for x in list(parent):
-            comp.setdefault(find(x), set()).add(x)
-        return {x: min(m) for m in comp.values() for x in m}
-
+    monkeypatch.setattr(dedup, "_DRIVER_FINISH_MAX_EDGES", 0)
     for seed in (7, 8):
-        rng = random.Random(seed)
-        nodes = [f"n{i:03d}" for i in range(60)]
-        edges = sorted({tuple(sorted(rng.sample(nodes, 2))) for _ in range(45)})
-        expected = union_find_labels(edges)
+        edges = _random_graph(seed, 60, 45)
         pairs = spark.createDataFrame(edges, "doc_a string, doc_b string")
-        got = {r["doc"]: r["cluster_id"]
-               for r in star_contract_clusters(pairs).collect()}
-        assert got == expected, f"seed {seed}"
+        stats: dict = {}
+        got = {r["doc"]: r["cluster_id"] for r in
+               dedup.star_contract_clusters(pairs, stats=stats).collect()}
+        assert got == _union_find_labels(edges), f"seed {seed}"
+        assert stats["rounds"] >= 1, stats
 
     chain = [(f"c{i:04d}", f"c{i + 1:04d}") for i in range(200)]
     pairs = spark.createDataFrame(chain, "doc_a string, doc_b string")
-    # label propagation needs diameter rounds — it must REFUSE, not silently
-    # return partial labels
     with pytest.raises(RuntimeError, match="did not converge"):
-        near_dup_clusters(pairs, max_iters=4)
-    # star contraction collapses the same chain in O(log n) rounds — the
-    # round COUNT is measured via stats, not just implied by convergence
-    # (bench.py measures the same on a 10k chain: ~15 rounds vs 10k for
-    # propagation)
-    stats: dict = {}
+        dedup.star_contract_clusters(pairs, max_rounds=4)
+    stats = {}
     got = {r["doc"]: r["cluster_id"]
-           for r in star_contract_clusters(
+           for r in dedup.star_contract_clusters(
                pairs, max_rounds=15, stats=stats).collect()}
-    assert got == union_find_labels(chain)
+    assert got == _union_find_labels(chain)
     assert set(got.values()) == {"c0000"}
     assert stats["rounds"] <= 15, stats
 
 
-def test_star_and_label_clusters_agree_on_corpus(spark):
-    """Both cluster algorithms produce identical (doc, cluster_id) labels
-    over the real LSH candidate pairs from the synthetic corpus."""
-    from dq_true_north_spark.textquality.dedup import (
-        minhash_candidate_pairs,
-        near_dup_clusters,
-        star_contract_clusters,
-    )
+def test_star_contraction_hands_off_to_driver_mid_run(spark, monkeypatch):
+    """A budget between a graph's starting and converged edge counts runs
+    distributed rounds until the live edges fit, then finishes on the
+    driver: fewer rounds than the all-distributed run, same labels."""
+    from dq_true_north_spark.textquality import dedup
 
-    pages = pages_df(spark, 1000)
-    pairs = minhash_candidate_pairs(pages, id_col="url", text_col="text").cache()
-    try:
-        label = {(r["doc"], r["cluster_id"])
-                 for r in near_dup_clusters(pairs).collect()}
-        star = {(r["doc"], r["cluster_id"])
-                for r in star_contract_clusters(pairs).collect()}
-        assert star == label
-        assert len(star) > 0
-    finally:
-        pairs.unpersist()
+    chain = [(f"c{i:04d}", f"c{i + 1:04d}") for i in range(200)]
+    # two-hop chords put the chain above its converged edge count
+    chords = [(f"c{i:04d}", f"c{i + 2:04d}") for i in range(199)]
+    graphs = [_random_graph(seed, 60, 45) for seed in (7, 8)] + [chain + chords]
+    for edges in graphs:
+        expected = _union_find_labels(edges)
+        # a converged edge set is one edge per non-minimum member
+        converged = len(expected) - len(set(expected.values()))
+        assert len(edges) > converged
+        pairs = spark.createDataFrame(edges, "doc_a string, doc_b string")
+        monkeypatch.setattr(dedup, "_DRIVER_FINISH_MAX_EDGES", 0)
+        full: dict = {}
+        dedup.star_contract_clusters(pairs, stats=full)
+        # the round before convergence already holds the converged edges
+        monkeypatch.setattr(dedup, "_DRIVER_FINISH_MAX_EDGES", converged)
+        stats: dict = {}
+        got = {r["doc"]: r["cluster_id"] for r in
+               dedup.star_contract_clusters(pairs, stats=stats).collect()}
+        assert got == expected
+        assert 1 <= stats["rounds"] < full["rounds"], (stats, full)
 
 
 def test_bmp_resize_and_wav_features_are_real(spark):
@@ -693,33 +679,6 @@ def test_bmp_variants_decode(spark):
         _decode_bmp(hdr(h, 8, 0, 16) + bytes(16))           # palette bmp
     with _pytest.raises(ValueError, match="unsupported BMP"):
         _decode_bmp(hdr(h, 24, 1, 16) + bytes(16))          # RLE compressed
-
-
-def test_keep_representatives_star_algorithm_agrees(spark):
-    from dq_true_north_spark.textquality.dedup import keep_representatives
-
-    pairs = spark.createDataFrame(
-        [("b", "a"), ("b", "c"), ("x", "y")], "doc_a string, doc_b string"
-    )
-    docs = spark.createDataFrame(
-        [(u, u) for u in "abcxyz"], "url string, text string"
-    )
-    via_label = {r["url"] for r in
-                 keep_representatives(docs, pairs, algorithm="label").collect()}
-    via_star = {r["url"] for r in
-                keep_representatives(docs, pairs, algorithm="star").collect()}
-    assert via_label == via_star == {"a", "x", "z"}
-
-
-def test_keep_representatives_rejects_unknown_algorithm(spark):
-    import pytest as _pytest
-
-    from dq_true_north_spark.textquality.dedup import keep_representatives
-
-    pairs = spark.createDataFrame([("b", "a")], "doc_a string, doc_b string")
-    docs = spark.createDataFrame([("a", "a")], "url string, text string")
-    with _pytest.raises(ValueError, match="label.*star|star.*label"):
-        keep_representatives(docs, pairs, algorithm="labels")
 
 
 def test_pq_adc_recall_and_code_shape(spark):
@@ -933,7 +892,7 @@ def test_minhash_mirror_equals_spark_pipeline(spark):
     from dq_true_north_spark.corpus import generate_pages_pdf, pages_df
     from dq_true_north_spark.textquality.dedup import (
         minhash_candidate_pairs,
-        near_dup_clusters,
+        star_contract_clusters,
     )
     from dq_true_north_spark.textquality.dedup_mirror import (
         minhash_pairs_mirror,
@@ -953,7 +912,7 @@ def test_minhash_mirror_equals_spark_pipeline(spark):
     sp_clusters = sorted(
         (r["doc"], r["cluster_id"],
          int(r["doc"] == r["cluster_id"]))
-        for r in near_dup_clusters(sp_pairs_df).collect())
+        for r in star_contract_clusters(sp_pairs_df).collect())
     assert sp_clusters == mirror_clusters
 
 

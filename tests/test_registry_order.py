@@ -76,8 +76,8 @@ def test_window_is_oracle_dense():
 
 
 def test_star_clusters_not_registered():
-    """Star contraction is evidenced by algorithm-equality tests + the bench
-    chain entry, not by a second (identical-output) registry row."""
+    """Star contraction is evidenced by union-find equality tests, not by a
+    second (identical-output) registry row."""
     assert "near_dup_clusters_star_pages" not in Q.registry()
 
 
