@@ -12,7 +12,6 @@ Reference: dq_engine.main (dq_engine.py:20-141):
 from __future__ import annotations
 
 import json
-import traceback
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -74,7 +73,6 @@ def _run_one(spark: SparkSession, rule: dict, sink) -> tuple:
         res: RuleResult = executor(spark, rule, params, sink)
     except Exception as exc:                          # isolation (:125-138)
         res = RuleResult("", C.ERROR, f"{type(exc).__name__}: {exc}")
-        rule["_traceback"] = traceback.format_exc()
     return (
         int(rule["rule_id"]),
         rule["rule_name"],

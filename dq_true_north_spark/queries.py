@@ -66,11 +66,10 @@ def registry() -> dict[str, dict]:
     the FIRST `_DRIVER_WINDOW` entries only (the round-3 lesson: 7 load-
     bearing queries silently fell past the window because order was an
     accident of file layout). `_PRIORITY` pins the window contents —
-    flagship pipeline, scrub, langid, engine run and the frozen-oracle
-    media queries first, every oracle-checked query inside, and only
-    near-redundant entries (each locally tested and named in the tail
-    comment below) after the cut. tests/test_registry_order.py enforces
-    all of this."""
+    flagship pipeline, scrub, langid and engine run first, every entry
+    oracle-checked, and only near-redundant or no-oracle entries (each
+    locally tested and named in the tail comment below) after the cut.
+    tests/test_registry_order.py enforces all of this."""
     _register_spec_value_oracles()   # lazy: first access, never at import
     ordered = {n: _REGISTRY[n] for n in _PRIORITY if n in _REGISTRY}
     ordered.update(
@@ -83,21 +82,20 @@ def registry() -> dict[str, dict]:
 _DRIVER_WINDOW = 50
 
 # The window contents, most load-bearing first (so even a SMALLER window
-# still covers the flagship pipeline / scrub / langid / engine / media
-# queries). Entries registered but NOT listed here form the tail — each is
-# near-redundant with an in-window entry and keeps full local-pytest parity:
-#   minhash_pairs_pages   — exercised transitively by near_dup_clusters_pages
-#                           (both mirror-ORACLED at sf0.01 since round 5)
-#   simhash_pairs_pages   — second LSH family; planted + invariance tests
-#                           (mirror-ORACLED at sf0.01 since round 5)
-#   ann_lsh_embeddings    — second ANN family; recall tests (ann_ivf is
-#                           in-window); mirror-ORACLED at sf0.01 since r5
-#   ann_pq_embeddings     — third ANN family (product quantization); recall
-#                           + determinism tests
-#   host_counts_salted_vs_direct / approx_distinct_vs_exact — partitioning
-#                           demos, asserted exactly in tests (host_counts
-#                           mirror-ORACLED at sf0.01 since r5; approx HLL
-#                           sketch values are engine-specific, rows-only)
+# still covers the flagship pipeline / scrub / langid / engine queries).
+# Every window entry has an oracle. Entries registered but NOT listed here
+# form the tail — each is near-redundant with an in-window entry or has no
+# oracle, and keeps full local-pytest coverage:
+#   ann_ivf_embeddings    — k-means training (float-avg merge order) has no
+#                           oracle; recall + persisted-equals-in-memory
+#                           tests, rows-only parity test
+#   ann_ivfpq_embeddings  — IVF x PQ; no oracle for the same reason; recall
+#                           + persisted-equals-in-memory tests, and with
+#                           n_cells=1 it is plain PQ (ADC recall +
+#                           determinism test)
+#   approx_distinct_vs_exact — partitioning demo, asserted exactly in tests
+#                           (HLL sketch values are engine-specific,
+#                           rows-only)
 #   token_budget_packs    — the single-reducer spec form of ..._sharded
 #   dup_orders_cust_date  — same duplicate executor as dup_details_orders
 #   doc_top_bigram_fraction — supplementary quality metric (doc_quality_score
@@ -114,9 +112,6 @@ _PRIORITY: tuple[str, ...] = (
     "scrub_documents",
     "langid_documents",
     "dq_engine_summary",
-    "media_transforms_sample",
-    "audio_features_sample",
-    "media_meta_pages",
     "doc_fingerprints",
     "doc_metrics",
     "doc_drop_flags",
@@ -158,7 +153,10 @@ _PRIORITY: tuple[str, ...] = (
     "canonical_urls",
     "benchmark_contamination",
     "near_dup_clusters_pages",
-    "ann_ivf_embeddings",
+    "minhash_pairs_pages",
+    "simhash_pairs_pages",
+    "ann_lsh_embeddings",
+    "host_counts_salted_vs_direct",
 )
 
 
@@ -1749,26 +1747,6 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
                         n_cells=8, n_probe=4, index_path=index_path)
 
 
-@df_query("ann_pq_embeddings")
-def q_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Product-quantization ANN (Jégou et al. TPAMI 2011) — the
-    memory-compression scale path beside LSH and IVF: vectors stored as m
-    8-bit codes (256 B -> 8 B at dim 64/m 8), queries scored by ADC (a
-    broadcast m x k exact-distance table + one value-sorted-fold
-    aggregation; corpus float vectors never read at scan time). Iterative
-    training -> rows-only check; recall vs brute force + given-codebook
-    determinism pinned in tests/test_dedup_similarity.py (training itself
-    carries the same ~1-ulp float-avg caveat as IVF). Registered in the
-    tail: no-oracle by nature, and the window's oracle density takes
-    precedence."""
-    from .textquality.similarity import pq_topk
-
-    load_tables(spark, sf_dir, ("embeddings",))
-    emb = spark.table("embeddings")
-    return pq_topk(emb, query_filter="vec_id % 100 = 0", dim=64,
-                   m=8, n_cells=16)
-
-
 # bump when ivfpq_write_index's layout or training parameters change
 _IVFPQ_INDEX_VERSION = 1
 
@@ -1814,119 +1792,6 @@ def q_doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_tables(spark, sf_dir, ("documents",))
     return spark.table("documents").select(
         "doc_id", fingerprint_udf(F.col("text")).alias("fingerprint")
-    )
-
-
-@df_query("media_meta_pages")
-def q_media_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal plumbing: binary column → mapInPandas metadata extraction.
-    Header fields (byte_len, format, PNG/GIF/JPEG dimensions) are parsed for
-    real; codec-dependent decode is honestly NULL (multimodal.py). The
-    offsets array is serialized to JSON — the driver's pandas
-    canonicalization cannot sort raw list cells (round-1 err)."""
-    from pyspark.sql import functions as F
-
-    from .corpus import pages_df
-    from .textquality.multimodal import decode_media_meta
-
-    pages = pages_df(spark, 2_000)
-    meta = decode_media_meta(pages, binary_col="html")
-    return meta.select(
-        "url", "byte_len", "format", "width", "height", "n_frames",
-        F.to_json("sample_frame_offsets").alias("sample_frame_offsets_json"),
-        "decoder",
-    )
-
-
-@df_query(
-    "media_transforms_sample",
-    oracle="""
-SELECT url, op, status, CAST(out_byte_len AS BIGINT) AS out_byte_len
-FROM (VALUES
-  ('media://bmp',  'passthrough',  'ok',          134),
-  ('media://wav',  'passthrough',  'ok',          16044),
-  ('media://gif',  'passthrough',  'ok',          122),
-  ('media://png',  'passthrough',  'ok',          193),
-  ('media://jpeg', 'passthrough',  'ok',          640),
-  ('media://html', 'passthrough',  'ok',          35),
-  ('media://bmp',  'resize',       'ok',          78),
-  ('media://wav',  'resize',       'unsupported', NULL),
-  ('media://gif',  'resize',       'ok',          42),
-  ('media://png',  'resize',       'ok',          85),
-  ('media://jpeg', 'resize',       'ok',          659),
-  ('media://html', 'resize',       'unsupported', NULL),
-  ('media://bmp',  'frame_sample', 'unsupported', NULL),
-  ('media://wav',  'frame_sample', 'unsupported', NULL),
-  ('media://gif',  'frame_sample', 'ok',          74),
-  ('media://png',  'frame_sample', 'unsupported', NULL),
-  ('media://jpeg', 'frame_sample', 'unsupported', NULL),
-  ('media://html', 'frame_sample', 'unsupported', NULL),
-  ('media://bmp',  'resample',     'unsupported', NULL),
-  ('media://wav',  'resample',     'ok',          8044),
-  ('media://gif',  'resample',     'unsupported', NULL),
-  ('media://png',  'resample',     'unsupported', NULL),
-  ('media://jpeg', 'resample',     'unsupported', NULL),
-  ('media://html', 'resample',     'unsupported', NULL)
-) t(url, op, status, out_byte_len)""",
-)
-def q_media_transforms_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Media transforms over the frozen sample-media set — every image
-    format's pixel path is now REAL: BMP (raw bytes), PNG (stdlib-zlib
-    inflate + unfilter), GIF (LZW implemented outright) and baseline JPEG
-    (huffman + DCT in pure numpy, textquality/jpeg.py) all decode ->
-    nearest-neighbor resize -> re-encode. Round-4 deliberate frozen-oracle
-    updates: png 33->193 / resize ok/85; gif 106->122 (real LZW pixels) /
-    frame_sample 60->74 / resize ok/42; jpeg 41->640 (real baseline
-    stream) / resize ok/659; resample rows added (PCM16 WAV linear
-    resample to 4 kHz -> ok/8044, the audio analog of resize). GIF
-    container-level frame sampling emits a valid 2-frame GIF; non-audio
-    resample and non-GIF frame_sample stay honestly 'unsupported'. The
-    oracle is a FROZEN literal table (hand-audited expected outputs, not
-    recomputed) — any behavior drift in the binary paths fails the
-    hash."""
-    from functools import reduce
-
-    from .textquality.multimodal import sample_media_df, transform_media
-
-    media = sample_media_df(spark)
-    parts = [
-        transform_media(media, "html", op="passthrough"),
-        transform_media(media, "html", op="resize", width=3, height=2),
-        transform_media(media, "html", op="frame_sample", n_frames=2),
-        transform_media(media, "html", op="resample", rate=4000),
-    ]
-    return reduce(lambda a, b: a.unionByName(b), parts).select(
-        "url", "op", "status", "out_byte_len"
-    )
-
-
-@df_query(
-    "audio_features_sample",
-    oracle="""
-SELECT url, CAST(sample_rate AS INT) AS sample_rate,
-       CAST(n_channels AS INT) AS n_channels,
-       CAST(n_samples AS BIGINT) AS n_samples,
-       CAST(duration_s AS DOUBLE) AS duration_s,
-       CAST(rms AS DOUBLE) AS rms, CAST(peak AS DOUBLE) AS peak, status
-FROM (VALUES
-  ('media://bmp',  NULL, NULL, NULL, NULL, NULL, NULL, 'unsupported'),
-  ('media://wav',  8000, 1, 8000, 1.0, 0.353539, 0.5, 'ok'),
-  ('media://gif',  NULL, NULL, NULL, NULL, NULL, NULL, 'unsupported'),
-  ('media://png',  NULL, NULL, NULL, NULL, NULL, NULL, 'unsupported'),
-  ('media://jpeg', NULL, NULL, NULL, NULL, NULL, NULL, 'unsupported'),
-  ('media://html', NULL, NULL, NULL, NULL, NULL, NULL, 'unsupported')
-) t(url, sample_rate, n_channels, n_samples, duration_s, rms, peak, status)""",
-)
-def q_audio_features_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PCM16 WAV feature extraction (duration / RMS / peak via numpy over
-    raw samples — codec-free by format design) over the frozen sample-media
-    set; non-PCM rows degrade per-row to 'unsupported'. Frozen-literal
-    oracle, same discipline as media_transforms_sample."""
-    from .textquality.multimodal import extract_audio_features, sample_media_df
-
-    return extract_audio_features(sample_media_df(spark), "html").select(
-        "url", "sample_rate", "n_channels", "n_samples",
-        "duration_s", "rms", "peak", "status",
     )
 
 
@@ -2020,44 +1885,6 @@ def q_langid_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _spec_oracles_done = False
-
-
-def _register_media_meta_oracle() -> None:
-    """media_meta_pages upgraded from rows-only: the corpus generator is
-    pure Python and per-index seeded, so the expected metadata for its
-    2,000 pages is computed driver-side (plain pandas rows → _meta_one)
-    and frozen into a VALUES oracle. What this actually verifies is the
-    DISTRIBUTED half — mapInPandas scheduling, Arrow binary-column round
-    trip, batch boundaries — against a no-Spark reference of the same
-    parser; the parser itself is additionally pinned by the frozen-literal
-    sample-media oracle and unit tests. sf-independent (the query always
-    reads 2,000 generated pages)."""
-    from .corpus import generate_pages_pdf
-    from .textquality.multimodal import _meta_one
-
-    import json as _json
-
-    def esc(s: str) -> str:
-        return s.replace("'", "''")
-
-    rows = []
-    pdf = generate_pages_pdf(2_000)
-    for url, blob in zip(pdf["url"], pdf["html"]):
-        (u, blen, fmt, w, h, nf, offs, dec) = _meta_one(url, bytes(blob))
-        rows.append(
-            f"('{esc(u)}', {blen}, '{esc(fmt)}', "
-            f"{'NULL' if w is None else w}, {'NULL' if h is None else h}, "
-            f"{'NULL' if nf is None else nf}, "
-            f"'{esc(_json.dumps(offs, separators=(',', ':')))}', '{esc(dec)}')"
-        )
-    _REGISTRY["media_meta_pages"]["oracle"] = (
-        "SELECT url, CAST(byte_len AS BIGINT) AS byte_len, format, "
-        "CAST(width AS INT) AS width, CAST(height AS INT) AS height, "
-        "CAST(n_frames AS INT) AS n_frames, sample_frame_offsets_json, "
-        "decoder "
-        f"FROM (VALUES {', '.join(rows)}) t(url, byte_len, format, width, "
-        "height, n_frames, sample_frame_offsets_json, decoder)"
-    )
 
 
 def _register_pages_verdicts_oracle(pages_pdf) -> None:
@@ -2268,8 +2095,6 @@ def _register_spec_value_oracles() -> None:
         return
     _spec_oracles_done = True
     import os
-
-    _register_media_meta_oracle()   # corpus-derived, sf-independent
 
     sf_dir = os.environ.get("DQ_TEST_SF_DIR", "/root/testdata/sf0.01")
     if "0.01" in sf_dir:

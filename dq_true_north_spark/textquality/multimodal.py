@@ -15,21 +15,16 @@ us do WITHOUT a codec library is implemented for real:
          is a valid GIF holding only the chosen frames + their control
          extensions; FULL frame-0 pixel decode + resize via the
          variable-width LZW codec implemented below (decode AND encode)
-  JPEG — SOFn frame header scan (ITU T.81 §B.2.2) for height/width; FULL
-         pixel decode + resize via the huffman+DCT codec in
-         textquality/jpeg.py (pure numpy) — baseline SOF0/1 AND
-         progressive SOF2 (spectral selection + successive approximation,
-         round 5); arithmetic/lossless/hierarchical classify 'unsupported'
+  JPEG — SOFn frame header scan (ITU T.81 §B.2.2) for height/width only;
+         pixel ops classify 'unsupported' (no huffman+DCT codec in-repo)
   BMP  — BITMAPINFOHEADER dims; FULL pixel decode + nearest-neighbor
          resize + re-encode for uncompressed BI_RGB 24/32-bit (pure numpy
          byte math — no codec exists or is needed)
   WAV  — RIFF/WAVE chunk walk; PCM16 sample decode → duration / RMS / peak
          audio features (numpy over the raw samples)
 
-Every image format's entropy coding is thus handled in-repo (PNG deflate =
-stdlib zlib; GIF LZW and baseline JPEG huffman implemented outright); only
-genuinely out-of-envelope variants (arithmetic-coded JPEG, lossy audio,
-compressed video) get ``status='unsupported'`` / NULL fields —
+PNG deflate is stdlib zlib and GIF LZW is implemented outright; JPEG pixels,
+lossy audio and compressed video get ``status='unsupported'`` / NULL fields —
 never fabricated values. Swap those arms for PIL/ffmpeg on a cluster with
 codecs; the mapInPandas plumbing, schema and batch shape do not change.
 
@@ -870,8 +865,7 @@ def _transform_one(url: str, blob: bytes, op: str, params: dict) -> tuple:
 
       resize       — BMP (raw BI_RGB bytes), 8-bit PNG (stdlib-zlib inflate
                      + unfilter/Adam7/PLTE), GIF (variable-width LZW decode
-                     + same-palette re-encode), baseline JPEG (huffman+DCT,
-                     textquality/jpeg.py): decode → nearest-neighbor →
+                     + same-palette re-encode): decode → nearest-neighbor →
                      re-encode in the source format
       frame_sample — GIF: container-level re-assembly of n evenly-spaced
                      frames (output is a valid GIF)
@@ -880,8 +874,8 @@ def _transform_one(url: str, blob: bytes, op: str, params: dict) -> tuple:
                      of resize; swap in windowed-sinc on a real cluster)
       passthrough  — byte identity
 
-    Genuinely out-of-envelope variants (arithmetic/lossless JPEG,
-    compressed audio, video frame sampling) raise NotImplementedError,
+    Out-of-envelope inputs (JPEG pixels, compressed audio, video frame
+    sampling) raise NotImplementedError,
     which becomes status='unsupported' — never a task failure, never
     fabricated pixels. Malformed streams classify 'error'. Swap the
     unsupported arms for PIL/ffmpeg on a cluster with codecs; nothing
@@ -907,20 +901,11 @@ def _transform_one(url: str, blob: bytes, op: str, params: dict) -> tuple:
                 # quantization is ever needed)
                 idx, pal = _decode_gif_frame0(blob)
                 out = _encode_gif(_resize_nearest(idx, w, h), pal)
-            elif fmt == "jpeg":
-                # JPEG huffman+DCT implemented in textquality.jpeg (pure
-                # numpy, baseline + progressive); arithmetic/lossless
-                # raise there and land as 'unsupported'
-                from .jpeg import decode_jpeg, encode_jpeg
-
-                out = encode_jpeg(
-                    _resize_nearest(decode_jpeg(blob), w, h), quality=90
-                )
             else:
                 raise NotImplementedError(
                     f"resize to {w}x{h}: pixel decode for {fmt!r} requires "
-                    f"a codec this container lacks (BMP, 8-bit PNG, GIF "
-                    f"and baseline JPEG are the implemented paths)"
+                    f"a codec this container lacks (BMP, PNG and GIF are "
+                    f"the implemented paths)"
                 )
         elif op == "frame_sample":
             n = int(params.get("n_frames", 4))
@@ -1042,9 +1027,8 @@ def extract_audio_features(pages: DataFrame, binary_col: str = "html") -> DataFr
 
 def sample_media_rows() -> list[tuple[str, bytes]]:
     """Deterministic crafted media blobs covering every codec-free path —
-    the literal-input set for the media driver queries (the canonical_urls
-    pattern applied to binary columns: driver tables carry no media, so the
-    queries run over a frozen constructed set)."""
+    a frozen constructed input set, since the driver tables carry no
+    media."""
 
     def sub(d: bytes) -> bytes:
         return bytes([len(d)]) + d + b"\x00"
@@ -1085,19 +1069,10 @@ def sample_media_rows() -> list[tuple[str, bytes]]:
     ).reshape(5, 8, 3)
     png = _encode_png(png_rgb)
 
-    # real baseline JPEG (textquality.jpeg): a 16x8 two-tone field encoded
-    # at quality 90 — dims parse AND pixel decode/resize are real
-    from .jpeg import encode_jpeg
-
-    jpeg_rgb = np.zeros((8, 16, 3), dtype=np.uint8)
-    jpeg_rgb[:, :8] = (200, 60, 60)
-    jpeg_rgb[:, 8:] = (60, 60, 200)
-    jpeg = encode_jpeg(jpeg_rgb, quality=90)
-
     html = b"<html><body>not media</body></html>"
     return [
         ("media://bmp", bmp), ("media://wav", wav), ("media://gif", gif),
-        ("media://png", png), ("media://jpeg", jpeg), ("media://html", html),
+        ("media://png", png), ("media://html", html),
     ]
 
 

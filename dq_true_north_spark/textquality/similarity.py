@@ -380,6 +380,8 @@ def ann_ivf_topk(
 # m x k lookup table of exact subspace distances; per corpus vector, a SUM
 # of m table lookups — no float vectors ever touched at scan time. At
 # 10^12 embeddings this is what makes the corpus fit in cluster RAM.
+# ADC scoring lives in ann_ivfpq_topk below: the codes are not residuals,
+# so plain PQ is its n_cells=1, n_probe=1 case.
 
 
 def _pq_subvectors(embeddings: DataFrame, dim: int, m: int,
@@ -486,81 +488,6 @@ def pq_encode(
     )
 
 
-def pq_topk(
-    embeddings: DataFrame,
-    query_filter: str,
-    dim: int,
-    k: int = C.COSINE_TOPK,
-    m: int = 8,
-    n_cells: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    train_iters: int = 3,
-    codebooks: DataFrame | None = None,
-    codes: DataFrame | None = None,
-) -> DataFrame:
-    """ADC top-k: (query_id, neighbor_id, rank, cosine_approx). Scoring
-    never reads the corpus float vectors — each corpus row contributes m
-    (sub_idx, code) lookups into the BROADCAST per-query distance table
-    (n_queries x m x n_cells rows, exact subspace distances), summed by
-    one partial aggregation. cosine_approx = 1 - d2/2 on normalized
-    vectors. Pass pre-trained codebooks/codes in production (built once
-    per corpus, like the IVF index); both are derived here when omitted
-    so the operator is self-contained at test scale.
-
-    Determinism: GIVEN codebooks/codes, the ranking is partition-order
-    independent — the per-pair d2 is a sequential fold over the
-    VALUE-SORTED m contributions (an unordered SUM of doubles can flip a
-    sub-ulp-separated rank across shuffles), and ties break by
-    neighbor_id. Training itself carries the same ~1-ulp float-avg caveat
-    as ivf_train_centroids."""
-    if codebooks is None or codes is None:
-        subs = _pq_subvectors(embeddings, dim, m, id_col, vec_col) \
-            .localCheckpoint(eager=True)    # shared by train AND encode
-        if codebooks is None:
-            codebooks = pq_train(embeddings, dim, m, n_cells, id_col,
-                                 vec_col, train_iters, subs=subs)
-        if codes is None:
-            codes = pq_encode(embeddings, codebooks, dim, m, id_col,
-                              vec_col, subs=subs)
-
-    qsubs = _pq_subvectors(embeddings, dim, m, id_col, vec_col, query_filter)
-    dist_table = (
-        qsubs.join(F.broadcast(codebooks), "sub_idx")
-        .select(
-            F.col("vid").alias("query_id"), "sub_idx", "cell",
-            _sq_dist("sv", "c").alias("d"),
-        )
-    )
-    contrib = (
-        codes.select(
-            F.col("vid").alias("neighbor_id"),
-            F.posexplode("codes").alias("sub_idx", "cell"),
-        )
-        .join(F.broadcast(dist_table), ["sub_idx", "cell"])
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-    )
-    scored = contrib.groupBy("query_id", "neighbor_id").agg(
-        # value-sorted sequential fold: bit-identical at any partitioning
-        # (m is small, so the collect_list is m doubles per pair)
-        F.expr(
-            "aggregate(array_sort(collect_list(d)), CAST(0.0 AS DOUBLE), "
-            "(a, x) -> a + x)"
-        ).alias("d2")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("d2").asc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "neighbor_id", "rank",
-            round4_col(F.lit(1.0) - F.col("d2") / 2.0).alias("cosine_approx"),
-        )
-    )
-
-
 # --------------------------------------------------------------- IVF x PQ ---
 # The composed at-scale index (IVFADC layout, Jégou et al. TPAMI 2011 §IV,
 # without residual encoding): the coarse quantizer ROUTES — each query scans
@@ -587,7 +514,7 @@ def _ivfpq_build(
     in-memory branch — the recipe must stay identical or the
     persisted-equals-in-memory contract breaks. Training shares ONE
     normalized-subvector scan (localCheckpoint) between pq_train and
-    pq_encode — the pq_topk discipline."""
+    pq_encode, not one scan each."""
     centroids = ivf_train_centroids(
         embeddings, n_cells, id_col, vec_col, train_iters
     )
@@ -655,8 +582,9 @@ def ann_ivfpq_topk(
     queries×centroids job), read ONLY those cells' code partitions, then
     score each candidate by the PQ ADC sum — m lookups into the broadcast
     per-query distance table, folded value-sorted so the ranking is
-    partition-order independent given the trained index (the pq_topk
-    determinism contract; training itself keeps the ~1-ulp float-avg
+    partition-order independent given the trained index (an unordered SUM
+    of doubles could flip a sub-ulp-separated rank across shuffles; ties
+    break by neighbor_id; training itself keeps the ~1-ulp float-avg
     caveat of both trainers). cosine_approx = 1 - d2/2 on normalized
     vectors. A (query, candidate) pair appears under exactly one coarse
     cell, so no dedup step is needed before the fold.

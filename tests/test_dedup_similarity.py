@@ -681,33 +681,40 @@ def test_bmp_variants_decode(spark):
         _decode_bmp(hdr(h, 24, 1, 16) + bytes(16))          # RLE compressed
 
 
-def test_pq_adc_recall_and_code_shape(spark):
-    """Product quantization (round 4): codes are m small ints per vector
-    (the 256-byte -> m-byte compression claim); ADC top-k recall against
-    brute-force cosine clearly beats chance on the random test embeddings
-    (PQ on unstructured random vectors is the technique's hardest case, so
-    the floor is modest — the shape of the machinery, a BROADCAST m x k
-    distance table + one partial aggregation, is the point)."""
+def test_pq_adc_recall_and_code_shape(spark, tmp_path):
+    """Product quantization (round 4) is IVF x PQ with one coarse cell
+    (the codes are not residuals, so n_cells=1, n_probe=1 scans every code
+    of every vector): codes are m small ints per vector (the 256-byte ->
+    m-byte compression claim); ADC top-k recall against brute-force cosine
+    clearly beats chance on the random test embeddings (PQ on unstructured
+    random vectors is the technique's hardest case, so the floor is modest
+    — the shape of the machinery, a BROADCAST m x k distance table + one
+    partial aggregation, is the point)."""
     from dq_true_north_spark.textquality.similarity import (
+        ann_ivfpq_topk,
         cosine_topk,
-        pq_encode,
-        pq_topk,
-        pq_train,
+        ivfpq_write_index,
     )
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").cache()
     try:
-        books = pq_train(emb, dim=64, m=8, k=16)
-        codes = pq_encode(emb, books, dim=64, m=8)
+        path = str(tmp_path / "pq")
+        ivfpq_write_index(emb, path, dim=64, n_cells=1, m=8, pq_k=16)
+        codes = spark.read.parquet(f"{path}/codes")
         row = codes.first()
         assert len(row["codes"]) == 8
         assert all(0 <= c < 16 for c in row["codes"])
+        assert row["ccell"] == 0
         n_vecs = emb.count()
         assert codes.count() == n_vecs
 
+        def adc_topk():
+            return ann_ivfpq_topk(emb, "vec_id % 100 = 0", dim=64, k=10,
+                                  m=8, n_cells=1, pq_k=16, n_probe=1,
+                                  index_path=path).collect()
+
         exact = cosine_topk(emb, "vec_id % 100 = 0", k=10).collect()
-        approx = pq_topk(emb, "vec_id % 100 = 0", dim=64, k=10,
-                         codebooks=books, codes=codes).collect()
+        approx = adc_topk()
         ex, ap = {}, {}
         for r in exact:
             ex.setdefault(r["query_id"], set()).add(r["neighbor_id"])
@@ -723,8 +730,7 @@ def test_pq_adc_recall_and_code_shape(spark):
         # given-codebook determinism: a second scoring run over the same
         # codes reproduces the ranking exactly (the ADC d2 is a
         # value-sorted fold, not an unordered float SUM)
-        approx2 = pq_topk(emb, "vec_id % 100 = 0", dim=64, k=10,
-                          codebooks=books, codes=codes).collect()
+        approx2 = adc_topk()
         assert sorted(map(tuple, approx), key=lambda t: (t[0], t[2])) == \
                sorted(map(tuple, approx2), key=lambda t: (t[0], t[2]))
     finally:

@@ -77,6 +77,29 @@ def test_error_isolation(spark):
     assert rows["customer_acctbal_negative"]["indicator"] in (C.PASS, C.FAIL)
 
 
+def test_run_catalog_leaves_input_rules_unchanged(spark):
+    """run_catalog reads its rule dicts and never writes into them, on the
+    error path too: a caller may pass DEFAULT_CATALOG's own dicts."""
+    import copy
+
+    load_tables(spark, SF_DIR, TABLES)
+    bad_sql = {
+        "rule_id": 98, "rule_name": "broken_sql", "rule_type": "GENERIC",
+        "logic_implementation": "SQL_QUERY",
+        "logic_definition": "SELECT * FROM table_that_does_not_exist",
+        "parameters": "{}", "segment_value": "", "is_active": True,
+    }
+    bad_params = dict(DEFAULT_CATALOG[2], rule_id=99,
+                      rule_name="broken_params", parameters="{not json")
+    rules = [bad_sql, bad_params, DEFAULT_CATALOG[2]]
+    before = copy.deepcopy(rules)
+    summary = run_catalog(spark, rules, write_summary=False)
+    indicators = {r["rule_name"]: r["indicator"] for r in summary.collect()}
+    assert indicators["broken_sql"] == C.ERROR
+    assert indicators["broken_params"] == C.ERROR
+    assert rules == before
+
+
 def test_verdict_trichotomy(spark):
     """value>0 → FAIL, NULL → FAIL, empty → ERROR
     (dq_rules_library.py:109-123,259-267)."""

@@ -15,16 +15,16 @@ LOAD_BEARING = (
     "scrub_documents",
     "langid_documents",
     "dq_engine_summary",
-    "media_transforms_sample",
-    "audio_features_sample",
-    "media_meta_pages",
     "doc_verdicts",
     "doc_fingerprints",
     "canonical_urls",
-    "ann_ivf_embeddings",
     "token_budget_packs_sharded",
     "length_band_filter_approx",
     "doc_chunks",
+    "minhash_pairs_pages",
+    "simhash_pairs_pages",
+    "ann_lsh_embeddings",
+    "host_counts_salted_vs_direct",
 )
 
 
@@ -48,29 +48,26 @@ def test_load_bearing_queries_inside_window():
 
 
 def test_window_is_oracle_dense():
-    """Every oracle-checked query should sit inside the window unless its
-    tail placement is deliberate (documented at _PRIORITY). The allowed
-    oracled-tail set is pinned here so adding an oracled query without
-    placing it is a test failure, not a silent evidence loss."""
+    """Every window entry has an oracle, and every oracle-checked query
+    sits inside the window unless its tail placement is deliberate
+    (documented at _PRIORITY). The allowed oracled-tail set is pinned here
+    so adding an oracled query without placing it is a test failure, not a
+    silent evidence loss."""
     reg = Q.registry()
     names = list(reg)
+    window = names[: Q._DRIVER_WINDOW]
+    unoracled = [n for n in window if not reg[n]["oracle"]]
+    assert not unoracled, f"window entries without an oracle: {unoracled}"
     tail = names[Q._DRIVER_WINDOW:]
     oracled_tail = sorted(n for n in tail if reg[n]["oracle"])
     assert oracled_tail == [
-        "ann_lsh_embeddings",          # mirror-oracled (r5); second ANN
-                                       # family (ann_ivf is in-window)
         "doc_chunks_tokens",           # token-aware twin of doc_chunks
                                        # (in-window); same explode shape
         "doc_top_bigram_fraction",     # supplementary to doc_quality_score
         "dup_orders_cust_date",        # same executor as dup_details_orders
-        "host_counts_salted_vs_direct", # mirror-oracled skew demo (r5)
-        "minhash_pairs_pages",         # mirror-oracled (r5); transitively
-                                       # covered by in-window clusters
         "ngram_jaccard_pairs",         # 1-row, near-redundant with
                                        # benchmark_contamination (r5 swap
                                        # that put doc_chunks in-window)
-        "simhash_pairs_pages",         # mirror-oracled (r5); second LSH
-                                       # family, planted + invariance tests
         "token_budget_packs",          # spec form of ..._sharded (in-window)
     ], f"unplanned oracled queries in the tail: {oracled_tail}"
 
