@@ -107,6 +107,12 @@ def run_catalog(
     tail (measured round 6: the 12-rule default catalog ran ~0.3-0.5 s
     faster in one wave than in 8+4). The cap bounds concurrent driver
     threads; executors are protected by the FIFO scheduler either way.
+
+    Each rule output is one Spark job, and the verdict count comes from
+    that job (the sink's observed row count, or an Observation on the same
+    plan), so no rule caches or counts a frame. The run caches no source
+    table either: with one pass per rule the cache would cost more than it
+    saves, and it would be session state another caller shares.
     """
     sink = sink if sink is not None else NullSink()
     active = [
@@ -119,58 +125,15 @@ def run_catalog(
     # bootstrap the result plane before the run (dq_engine.py:33-45)
     sink.ensure(spark, "dq_results", DQ_RESULTS_SCHEMA)
 
-    # Persist each distinct source table once per run: six of the default
-    # events-rules would otherwise each re-scan the source — repeated scans,
-    # not driver round trips, dominate as sources grow (VERDICT r1 #10).
-    # Materialize before dispatch so parallel rule threads share the cache.
-    # Scope note: rule sources are MONITOR tables (daily metric streams —
-    # the reference's domain), which fit MEMORY_AND_DISK comfortably. The
-    # web corpus itself never flows through run_catalog and is never cached
-    # — the quality-filter pipeline is a separate one-scan path.
-    def _source_of(rule: dict) -> str | None:
-        try:
-            return _params_of(rule).get("source_table")
-        except Exception:
-            return None  # the owning rule reports the parse ERROR itself
-
-    cached: list[str] = []
-    sources = [t for t in dict.fromkeys(_source_of(r) for r in active) if t]
-
-    # Mark each distinct source cached but DO NOT materialize it here:
-    # cacheTable is lazy, so the first rule that scans the table fills the
-    # shared InMemoryRelation and every later rule reads it. The round-5
-    # design ran blocking count() jobs per source before any rule could
-    # start; round-6 measurement: that warm phase sat on the critical path
-    # and cost more than it saved at bench scale (3.3 s -> 2.7 s without).
-    # The price: dispatch below is one wave of up to 16 threads, so up to
-    # 16 rules over one source can race its first materialization, not
-    # two. Spark's block-level cache locking bounds how much of that scan
-    # they duplicate.
-    for tbl in sources:
-        try:
-            spark.catalog.cacheTable(tbl)
-            cached.append(tbl)
-        except Exception:
-            pass  # unknown table: owning rule reports ERROR itself
-
     if parallelism is None:
         parallelism = min(16, len(active)) or 1
-    try:
-        if parallelism <= 1 or len(active) <= 1:
-            summary_rows = [_run_one(spark, rule, sink) for rule in active]
-        else:
-            from concurrent.futures import ThreadPoolExecutor
+    if parallelism <= 1 or len(active) <= 1:
+        summary_rows = [_run_one(spark, rule, sink) for rule in active]
+    else:
+        from concurrent.futures import ThreadPoolExecutor
 
-            with ThreadPoolExecutor(max_workers=parallelism) as pool:
-                summary_rows = list(
-                    pool.map(lambda r: _run_one(spark, r, sink), active)
-                )
-    finally:
-        for tbl in cached:
-            try:
-                spark.catalog.uncacheTable(tbl)
-            except Exception:
-                pass
+        with ThreadPoolExecutor(max_workers=parallelism) as pool:
+            summary_rows = list(pool.map(lambda r: _run_one(spark, r, sink), active))
     summary = spark.createDataFrame(summary_rows, DQ_RESULTS_SCHEMA)
     if write_summary and not isinstance(sink, NullSink):
         sink.append(summary, "dq_results")

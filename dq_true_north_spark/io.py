@@ -12,19 +12,38 @@ and its engine bootstraps the result plane before the run:
 Here the result plane is a directory of Parquet tables with the same
 append-only discipline (Iceberg-style table-per-name layout); at cluster
 scale the same code targets real Iceberg via ``writeTo(t).append()``.
-Appends to one logical table are serialized with a per-table lock: the
-engine dispatches rules from driver threads, and two concurrent
-FileOutputCommitter jobs on the same output path share the _temporary/0
-staging dir and can drop each other's files.
+
+One append is one Spark job. It writes into a private staging directory
+and counts its rows with an Observation on the same write, so a rule's
+verdict count needs no job of its own. The part files are then published
+(renamed) into the table under a per-table lock: the engine dispatches
+rules from driver threads, and the lock orders the schema check and the
+publish step, not the Spark jobs, which run concurrently. An append of zero
+rows publishes nothing — the reference's ``if n > 0`` guard, kept here
+instead of in every rule.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
+import tempfile
 import threading
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+
+
+def counted_write(df: DataFrame, path: str | None = None) -> int:
+    """Write df as parquet to path (to the ``noop`` sink when path is None)
+    and return its row count, observed in the same job."""
+    obs = Observation()
+    writer = df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode("overwrite")
+    if path is None:
+        writer.format("noop").save()
+    else:
+        writer.parquet(path)
+    return obs.get["rows"]
 
 
 class ResultSink:
@@ -69,16 +88,35 @@ class ResultSink:
             return "append"
         return "overwrite"
 
-    def append(self, df: DataFrame, table: str) -> None:
+    def append(self, df: DataFrame, table: str) -> int:
+        """Append df's rows with an execution_timestamp; return how many
+        rows were written. Zero rows leave the table untouched (no table is
+        created), and so does a write that raises."""
         out = df.withColumn("execution_timestamp", F.current_timestamp())
         incoming = self._schema_types(out.schema)
-        with self._lock(table):
-            if self._verified.get(table) == incoming:
-                mode = "append"      # probe already paid for this layout
-            else:
-                mode = self._heal_mode(df.sparkSession, table, out)
-            out.write.mode(mode).parquet(self.path(table))
-            self._verified[table] = incoming
+        staging = tempfile.mkdtemp(prefix=".staging-", dir=self.base_path)
+        try:
+            n = counted_write(out, staging)
+            if n == 0:
+                return 0
+            with self._lock(table):
+                if self._verified.get(table) == incoming:
+                    mode = "append"      # probe already paid for this layout
+                else:
+                    mode = self._heal_mode(df.sparkSession, table, out)
+                dest = self.path(table)
+                if mode == "overwrite":
+                    shutil.rmtree(dest)
+                os.makedirs(dest, exist_ok=True)
+                # part files carry the write job's uuid, so names never
+                # collide with earlier appends
+                for f in os.listdir(staging):
+                    if "_SUCCESS" not in f:
+                        os.rename(os.path.join(staging, f), os.path.join(dest, f))
+                self._verified[table] = incoming
+            return n
+        finally:
+            shutil.rmtree(staging, ignore_errors=True)
 
     def ensure(self, spark: SparkSession, table: str, schema_ddl: str) -> None:
         """Bootstrap: create the table with the declared schema when missing
@@ -110,8 +148,8 @@ class NullSink(ResultSink):
     def __init__(self):  # no base path
         pass
 
-    def append(self, df: DataFrame, table: str) -> None:
-        return
+    def append(self, df: DataFrame, table: str) -> int:
+        return counted_write(df)
 
     def ensure(self, spark: SparkSession, table: str, schema_ddl: str) -> None:
         return

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import constants as C
+from .io import counted_write
 
 
 class RunManifest:
@@ -85,9 +86,7 @@ class PipelineRunner:
         tmp = final + ".tmp"
         if os.path.isdir(tmp):
             shutil.rmtree(tmp)          # torn previous attempt — discard
-        df = build()
-        df.write.mode("overwrite").parquet(tmp)
-        rows = self.spark.read.parquet(tmp).count()
+        rows = counted_write(build(), tmp)  # counted by the write job itself
         os.makedirs(os.path.dirname(final), exist_ok=True)
         if os.path.isdir(final):
             shutil.rmtree(final)

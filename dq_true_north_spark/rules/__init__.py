@@ -6,6 +6,10 @@ Every executor has the same contract:
 where RuleResult carries the violation count (result_value), the universal
 PASS/FAIL-iff-count>0 indicator (dq_rules_library.py:98,263,348,...) and any
 detail DataFrames appended through the sink.
+
+Each rule output is one Spark job: the violation count is the row count
+``sink.append`` returns, or an Observation on the plan it writes, never a
+cache and ``count()`` before the write (tests/test_engine.py guards this).
 """
 
 from .base import RuleResult  # noqa: F401

@@ -2,8 +2,10 @@
 
 Reference: execute_duplicate_check (dq_rules_library.py:280-369) —
 normalize columns (upper-case some, round some), groupBy all check columns,
-keep groups with count > 1, cache the reused frame, JSON-pack group keys
-into the details table, FAIL iff any group exists.
+keep groups with count > 1, JSON-pack group keys into the details table,
+FAIL iff any group exists. The group count is the row count of the detail
+write itself: one job, where the reference caches the frame and counts it
+first.
 """
 
 from __future__ import annotations
@@ -36,20 +38,11 @@ def execute_duplicate_check(spark: SparkSession, rule: dict, params: dict, sink)
         .groupBy(*[F.col(c) for c in cols])
         .agg(F.count(F.lit(1)).alias("duplicate_count"))  # :318-321
         .filter(F.col("duplicate_count") > 1)
-        .cache()                                   # reused frame, :322
     )
-    try:
-        n = groups.count()
-        if n > 0:
-            details = groups.select(
-                F.lit(rule["rule_name"]).alias("rule_name"),
-                # VARIANT object_construct (:331-336) → JSON string column
-                F.to_json(F.struct(*[F.col(c) for c in cols])).alias(
-                    "duplicate_values"
-                ),
-                F.col("duplicate_count"),
-            )
-            sink.append(details, details_table)
-    finally:
-        groups.unpersist()
-    return RuleResult.from_count(n)
+    details = groups.select(
+        F.lit(rule["rule_name"]).alias("rule_name"),
+        # VARIANT object_construct (:331-336) → JSON string column
+        F.to_json(F.struct(*[F.col(c) for c in cols])).alias("duplicate_values"),
+        F.col("duplicate_count"),
+    )
+    return RuleResult.from_count(sink.append(details, details_table))

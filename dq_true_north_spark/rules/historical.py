@@ -16,7 +16,7 @@ count (SURVEY.md §2.1 #10).
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .. import constants as C
@@ -85,25 +85,21 @@ def execute_historical_completeness_check(spark: SparkSession, rule: dict, param
                 F.lit("FAIL"),
             ).otherwise(F.lit("PASS")),
         )
-        .cache()
     )
-    try:
-        breaches = agg.filter(F.col("status") == "FAIL").count()  # :1066
-        sink.append(
-            agg.select(
-                F.lit(rule["rule_id"]).alias("rule_id"),
-                F.lit(rule["rule_name"]).alias("rule_name"),
-                "dataset_name",
-                F.lit(str(maxd)).alias("data_date"),
-                F.col("actual_count").alias("actual_60_day_count"),
-                F.col("expected_count").alias("expected_60_day_count"),
-                "deviation", "deviation_percentage",
-                F.lit(tol).alias("tolerance_threshold"),
-                "status", "dropped_day_count", "newest_day_count",
-                "previous_cumulative_count",
-            ),
-            params.get("details_table", "dq_historical_completeness_details"),
-        )
-    finally:
-        agg.unpersist()
-    return RuleResult.from_count(breaches)
+    breaches = Observation()                                      # :1066
+    sink.append(
+        agg.observe(breaches, F.count_if(F.col("status") == "FAIL").alias("n")).select(
+            F.lit(rule["rule_id"]).alias("rule_id"),
+            F.lit(rule["rule_name"]).alias("rule_name"),
+            "dataset_name",
+            F.lit(str(maxd)).alias("data_date"),
+            F.col("actual_count").alias("actual_60_day_count"),
+            F.col("expected_count").alias("expected_60_day_count"),
+            "deviation", "deviation_percentage",
+            F.lit(tol).alias("tolerance_threshold"),
+            "status", "dropped_day_count", "newest_day_count",
+            "previous_cumulative_count",
+        ),
+        params.get("details_table", "dq_historical_completeness_details"),
+    )
+    return RuleResult.from_count(breaches.get["n"])

@@ -35,73 +35,63 @@ def execute_missing_data_nulls_check(spark: SparkSession, rule: dict, params: di
 
     df = spark.table(src).withColumn("_d", F.to_date(F.col(date_col)))
     maxd = df.agg(F.max("_d")).first()[0]
-    t1 = df.filter(F.col("_d") == F.lit(maxd)).cache()          # :411
-    t2 = df.filter(F.col("_d") == F.date_sub(F.lit(maxd), 1)).cache()  # :456
-    try:
-        violations = 0
-        details = []
+    on_t1 = F.col("_d") == F.lit(maxd)                               # :411
+    on_t2 = F.col("_d") == F.date_sub(F.lit(maxd), 1)                # :456
+    # :431-438; a literal false when no column is declared
+    null_pred = reduce(lambda a, b: a | b, [F.col(c).isNull() for c in nn_cols], F.lit(False))
+    # the T count, the T-1 count and the null count in one scan
+    c1, c2, n_nulls = df.agg(
+        F.count_if(on_t1), F.count_if(on_t2), F.count_if(on_t1 & null_pred)
+    ).first()
+    schema = "rule_name string, failure_type string, failure_date string, details string"
 
-        # (1) timeliness
-        c1 = t1.count()
-        if c1 == 0:
-            detail = spark.createDataFrame(
-                [(name, "TIMELINESS", str(maxd),
-                  json.dumps({"expected_date": str(maxd), "row_count": 0}))],
-                "rule_name string, failure_type string, failure_date string, details string",
-            )
-            sink.append(detail, details_table)
-            return RuleResult.from_count(1)                      # early return :427
+    # (1) timeliness
+    if c1 == 0:
+        detail = spark.createDataFrame(
+            [(name, "TIMELINESS", str(maxd),
+              json.dumps({"expected_date": str(maxd), "row_count": 0}))],
+            schema,
+        )
+        sink.append(detail, details_table)
+        return RuleResult.from_count(1)                          # early return :427
 
-        # (2) null violations
-        if nn_cols:
-            null_pred = reduce(
-                lambda a, b: a | b, [F.col(c).isNull() for c in nn_cols]
-            )                                                    # :431-438
-            null_rows = t1.filter(null_pred)
-            n_nulls = null_rows.count()
-            if n_nulls > 0:
-                violations += n_nulls
-                sink.append(
-                    null_rows.select(
-                        F.lit(name).alias("rule_name"),
-                        F.lit("NULL_VIOLATION").alias("failure_type"),
-                        F.col("_d").cast("string").alias("failure_date"),
-                        F.to_json(F.struct(*nn_cols)).alias("details"),
-                    ),
-                    details_table,
-                )
+    # (2) null violations
+    violations = n_nulls
+    if n_nulls > 0:
+        sink.append(
+            df.filter(on_t1 & null_pred).select(
+                F.lit(name).alias("rule_name"),
+                F.lit("NULL_VIOLATION").alias("failure_type"),
+                F.col("_d").cast("string").alias("failure_date"),
+                F.to_json(F.struct(*nn_cols)).alias("details"),
+            ),
+            details_table,
+        )
 
-        # (3) missing permutations
-        if perm_cols:
-            missing = (
-                t2.select(*perm_cols).distinct()
-                .subtract(t1.select(*perm_cols).distinct())      # :461-463
-            )
-            n_miss = missing.count()
-            if n_miss > 0:
-                violations += n_miss
-                sink.append(
-                    missing.select(
-                        F.lit(name).alias("rule_name"),
-                        F.lit("MISSING_PERMUTATION").alias("failure_type"),
-                        F.lit(str(maxd)).alias("failure_date"),
-                        F.to_json(F.struct(*perm_cols)).alias("details"),
-                    ),
-                    details_table,
-                )
+    # (3) missing permutations
+    if perm_cols:
+        missing = (
+            df.filter(on_t2).select(*perm_cols).distinct()
+            .subtract(df.filter(on_t1).select(*perm_cols).distinct())  # :461-463
+        )
+        violations += sink.append(
+            missing.select(
+                F.lit(name).alias("rule_name"),
+                F.lit("MISSING_PERMUTATION").alias("failure_type"),
+                F.lit(str(maxd)).alias("failure_date"),
+                F.to_json(F.struct(*perm_cols)).alias("details"),
+            ),
+            details_table,
+        )
 
-        # (4) count drop
-        c2 = t2.count()
-        if c1 < c2:                                              # :481
-            violations += 1
-            detail = spark.createDataFrame(
-                [(name, "COUNT_MISMATCH", str(maxd),
-                  json.dumps({"count_t1": c1, "count_t2": c2}))],
-                "rule_name string, failure_type string, failure_date string, details string",
-            )
-            sink.append(detail, details_table)
+    # (4) count drop
+    if c1 < c2:                                                  # :481
+        violations += 1
+        detail = spark.createDataFrame(
+            [(name, "COUNT_MISMATCH", str(maxd),
+              json.dumps({"count_t1": c1, "count_t2": c2}))],
+            schema,
+        )
+        sink.append(detail, details_table)
 
-        return RuleResult.from_count(violations)
-    finally:
-        t1.unpersist()
-        t2.unpersist()
+    return RuleResult.from_count(violations)

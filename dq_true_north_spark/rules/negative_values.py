@@ -47,27 +47,20 @@ def execute_negative_value_check(spark: SparkSession, rule: dict, params: dict, 
             F.expr(stack_expr),
         )
         .filter(F.col("negative_value") < 0)
-        .cache()
     )
-    try:
-        n = negatives.count()
-        if n > 0:
-            sink.append(
-                negatives.select(
-                    "record_id", "record_timestamp", "field_name",
-                    # values here are STRICTLY NEGATIVE, where the plain
-                    # floor-round4 would flip half-boundaries toward +inf
-                    # (e.g. -0.00005 -> 0.0, losing the sign) — the shared
-                    # half-away-from-zero spec (round4_signed_col) matches
-                    # the reference's ROUND display exactly, still without
-                    # a native round() call.
-                    round4_signed_col(F.col("negative_value"))
-                    .alias("negative_value"),
-                    F.lit(rule["rule_id"]).alias("rule_id"),
-                    F.lit(rule["rule_name"]).alias("rule_name"),
-                ),
-                params.get("details_table", "dq_negative_value_details"),
-            )
-    finally:
-        negatives.unpersist()
+    n = sink.append(
+        negatives.select(
+            "record_id", "record_timestamp", "field_name",
+            # values here are STRICTLY NEGATIVE, where the plain
+            # floor-round4 would flip half-boundaries toward +inf
+            # (e.g. -0.00005 -> 0.0, losing the sign) — the shared
+            # half-away-from-zero spec (round4_signed_col) matches the
+            # reference's ROUND display exactly, still without a native
+            # round() call.
+            round4_signed_col(F.col("negative_value")).alias("negative_value"),
+            F.lit(rule["rule_id"]).alias("rule_id"),
+            F.lit(rule["rule_name"]).alias("rule_name"),
+        ),
+        params.get("details_table", "dq_negative_value_details"),
+    )
     return RuleResult.from_count(n)

@@ -41,26 +41,19 @@ def execute_sigma_band_check(spark: SparkSession, rule: dict, params: dict, sink
                 1,
             ).otherwise(0),
         )
-        .cache()
     )
-    try:
-        anomalies = flagged.filter(F.col("is_anomaly") == 1)
-        n = anomalies.count()                                     # :792-795
-        if n > 0:
-            sink.append(
-                anomalies.select(
-                    F.lit(rule["rule_name"]).alias("rule_name"),
-                    (F.to_json(F.struct(*segs)) if segs else F.lit("{}")).alias("segment_values"),
-                    F.col("_d").cast("string").alias("event_date"),
-                    # metric/avg can be negative -> half-away-from-zero
-                    # (ADVICE r3 #3); stddev is non-negative by definition
-                    # and keeps the default floor-round4 convention
-                    round4_signed_col(F.col("daily_total")).alias("metric_value"),
-                    round4_signed_col(F.col("avg_value")).alias("avg_value"),
-                    round4_col(F.col("std_value")).alias("std_value"),
-                ),
-                params.get("details_table", "dq_anomaly_details"),
-            )
-    finally:
-        flagged.unpersist()
+    n = sink.append(                                              # :792-795
+        flagged.filter(F.col("is_anomaly") == 1).select(
+            F.lit(rule["rule_name"]).alias("rule_name"),
+            (F.to_json(F.struct(*segs)) if segs else F.lit("{}")).alias("segment_values"),
+            F.col("_d").cast("string").alias("event_date"),
+            # metric/avg can be negative -> half-away-from-zero
+            # (ADVICE r3 #3); stddev is non-negative by definition and
+            # keeps the default floor-round4 convention
+            round4_signed_col(F.col("daily_total")).alias("metric_value"),
+            round4_signed_col(F.col("avg_value")).alias("avg_value"),
+            round4_col(F.col("std_value")).alias("std_value"),
+        ),
+        params.get("details_table", "dq_anomaly_details"),
+    )
     return RuleResult.from_count(n)

@@ -9,7 +9,7 @@ Default threshold 0.50 (:538).
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession, Window
+from pyspark.sql import Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import constants as C
@@ -45,32 +45,23 @@ def execute_spike_dip_check(spark: SparkSession, rule: dict, params: dict, sink)
                 )
             ),                                                      # :587-593
         )
-        .cache()
     )
-    try:
-        breaches = pct.filter(F.abs(F.col("percent_change")) >= threshold)
-        n_all = breaches.count()
-        if n_all > 0:
-            sink.append(
-                breaches.select(
-                    F.lit(rule["rule_name"]).alias("rule_name"),
-                    F.col(ts_col).cast("string").alias("event_date"),
-                    (F.to_json(F.struct(*segs)) if segs else F.lit("{}")).alias("segment_values"),
-                    # these display values carry SIGN (dips are negative) —
-                    # half-away-from-zero, not the +inf-biased floor-round4
-                    # (ADVICE r3 #3; same convention as negative_values)
-                    round4_signed_col(F.col(metric)).alias("metric_value"),
-                    round4_signed_col(F.col("prev_value")).alias("previous_metric_value"),
-                    round4_signed_col(F.col("percent_change")).alias("percent_change"),
-                ),
-                params.get("details_table", "dq_details_spike_dip"),
-            )
-        # verdict: latest point per segment only (:597-605)
-        n_latest = (
-            pct.filter(F.col("rn") == 1)
-            .filter(F.abs(F.col("percent_change")) >= threshold)
-            .count()
-        )
-    finally:
-        pct.unpersist()
-    return RuleResult.from_count(n_latest, all_breaches=n_all)
+    breaches = pct.filter(F.abs(F.col("percent_change")) >= threshold)
+    # verdict: latest point per segment only (:597-605), observed on the
+    # same job that writes every breach
+    latest = Observation()
+    n_all = sink.append(
+        breaches.observe(latest, F.count_if(F.col("rn") == 1).alias("n")).select(
+            F.lit(rule["rule_name"]).alias("rule_name"),
+            F.col(ts_col).cast("string").alias("event_date"),
+            (F.to_json(F.struct(*segs)) if segs else F.lit("{}")).alias("segment_values"),
+            # these display values carry SIGN (dips are negative) —
+            # half-away-from-zero, not the +inf-biased floor-round4
+            # (ADVICE r3 #3; same convention as negative_values)
+            round4_signed_col(F.col(metric)).alias("metric_value"),
+            round4_signed_col(F.col("prev_value")).alias("previous_metric_value"),
+            round4_signed_col(F.col("percent_change")).alias("percent_change"),
+        ),
+        params.get("details_table", "dq_details_spike_dip"),
+    )
+    return RuleResult.from_count(latest.get["n"], all_breaches=n_all)

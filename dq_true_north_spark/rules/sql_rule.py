@@ -48,21 +48,15 @@ def execute_uniqueness_sql(spark: SparkSession, rule: dict, params: dict, sink) 
         inner.groupBy(*cols)
         .agg(F.count(F.lit(1)).alias("duplicate_count"))
         .filter(F.col("duplicate_count") > 1)
-        .cache()
     )
-    try:
-        n = groups.count()
-        if n > 0:
-            sink.append(
-                groups.select(
-                    F.lit(rule["rule_name"]).alias("rule_name"),
-                    F.to_json(F.struct(*cols)).alias("duplicate_values"),
-                    F.col("duplicate_count"),
-                ),
-                params.get("details_table", "dq_duplicate_details"),
-            )
-    finally:
-        groups.unpersist()
+    n = sink.append(
+        groups.select(
+            F.lit(rule["rule_name"]).alias("rule_name"),
+            F.to_json(F.struct(*cols)).alias("duplicate_values"),
+            F.col("duplicate_count"),
+        ),
+        params.get("details_table", "dq_duplicate_details"),
+    )
     return RuleResult.from_count(n)
 
 
@@ -128,12 +122,7 @@ def execute_rolling_average(spark: SparkSession, rule: dict, params: dict, sink)
             F.col(date_col).cast("string").alias("calculation_date"),
         )
     )
-    out = out.cache()   # count + append reuse ONE window execution
-    try:
-        n_segments = out.count()
-        sink.append(
-            out, params.get("details_table", "dq_details_rolling_average")
-        )
-    finally:
-        out.unpersist()
+    n_segments = sink.append(
+        out, params.get("details_table", "dq_details_rolling_average")
+    )
     return RuleResult(str(n_segments), C.PASS)  # informational rule (:239)

@@ -45,20 +45,14 @@ def execute_sustained_trend_check(spark: SparkSession, rule: dict, params: dict,
         .groupBy(*segs, "trend_group_id")
         .agg(F.count(F.lit(1)).alias("trend_length"))             # :1179
         .filter(F.col("trend_length") >= threshold)               # :1180
-        .cache()
     )
-    try:
-        n = streaks.count()
-        if n > 0:
-            sink.append(
-                streaks.select(
-                    F.lit(rule["rule_name"]).alias("rule_name"),
-                    F.lit(",".join(segs)).alias("segment_columns"),
-                    (F.to_json(F.struct(*segs)) if segs else F.lit("{}")).alias("segment_values"),
-                    F.col("trend_length"),
-                ),
-                params.get("details_table", "dq_sustained_trend_details"),
-            )
-    finally:
-        streaks.unpersist()
+    n = sink.append(
+        streaks.select(
+            F.lit(rule["rule_name"]).alias("rule_name"),
+            F.lit(",".join(segs)).alias("segment_columns"),
+            (F.to_json(F.struct(*segs)) if segs else F.lit("{}")).alias("segment_values"),
+            F.col("trend_length"),
+        ),
+        params.get("details_table", "dq_sustained_trend_details"),
+    )
     return RuleResult.from_count(n)

@@ -7,9 +7,12 @@ makes rule bugs visible as ERROR rows instead of crashing the run
 
 from __future__ import annotations
 
+import ast
 import json
+import os
 
 import pytest
+from pyspark.sql import functions as F
 
 from dq_true_north_spark import constants as C
 from dq_true_north_spark.catalog import DEFAULT_CATALOG
@@ -302,3 +305,116 @@ def test_negative_values_default_timestamp_column(spark, tmp_path):
     assert by_rule["neg_91"]["record_timestamp"] == "2024-06-01 12:00:00"
     assert by_rule["neg_92"]["record_timestamp"] is None
     assert by_rule["neg_91"]["negative_value"] == -0.0001
+
+
+def _snowpark_rule(rid, rtype, **params):
+    return {
+        "rule_id": rid, "rule_name": f"{rtype.lower()}_{rid}", "rule_type": rtype,
+        "logic_implementation": "SNOWPARK_FUNC", "logic_definition": "",
+        "parameters": json.dumps(params), "segment_value": "", "is_active": True,
+    }
+
+
+def test_zero_violation_rules_write_no_detail_table(spark, tmp_path):
+    """A rule with no violations PASSes with 0 and publishes nothing: no
+    detail table appears, and the sink leaves no staging entry behind."""
+    spark.createDataFrame(
+        [(1, 5.0, "a"), (2, 0.0, "b"), (3, 7.5, "c")], "id int, amount double, k string"
+    ).createOrReplaceTempView("zero_violation_src")
+    base = str(tmp_path / "zero")
+    summary = run_catalog(
+        spark,
+        [_snowpark_rule(60, "NEGATIVE_VALUES", source_table="zero_violation_src",
+                        numeric_columns=["amount"], id_column="id"),
+         _snowpark_rule(61, "DUPLICATE_CHECK", source_table="zero_violation_src",
+                        columns_to_check=["k"])],
+        sink=ResultSink(base), write_summary=False,
+    )
+    assert {(r["result_value"], r["indicator"]) for r in summary.collect()} == {("0", C.PASS)}
+    assert os.listdir(base) == ["dq_results"]   # bootstrap table only
+
+
+def test_sink_failed_write_leaves_table_untouched(spark, tmp_path):
+    """A write that raises publishes nothing: the table keeps its files and
+    rows, and no staging directory is left behind."""
+    base = str(tmp_path / "fail")
+    s = ResultSink(base)
+    assert s.append(spark.createDataFrame([(1, "a"), (2, "b")], "i int, v string"), "t") == 2
+    files = sorted(os.listdir(s.path("t")))
+    bad = spark.range(3).select(
+        F.when(F.col("id") == 2, F.raise_error(F.lit("boom")))
+        .otherwise(F.col("id")).cast("int").alias("i"),
+        F.lit("x").alias("v"),
+    )
+    with pytest.raises(Exception, match="boom"):
+        s.append(bad, "t")
+    assert sorted(os.listdir(s.path("t"))) == files
+    assert sorted(r["i"] for r in s.read(spark, "t").collect()) == [1, 2]
+    assert os.listdir(base) == ["t"]
+
+
+def test_verdict_counts_equal_detail_rows(spark, tmp_path):
+    """Each count rule's verdict is the row count of its own detail write:
+    equal for the per-violation families, the FAIL rows for historical, and
+    at most the detail rows for spike/dip (which logs every breach but
+    judges only each segment's latest point)."""
+    load_tables(spark, SF_DIR, TABLES)
+    local_sink = ResultSink(str(tmp_path / "counts"))
+    summary = run_catalog(spark, [dict(r) for r in DEFAULT_CATALOG],
+                          sink=local_sink, write_summary=False)
+    verdicts = {r["rule_name"]: int(r["result_value"]) for r in summary.collect()
+                if r["rule_type"] not in ("COMPLETENESS", "GENERIC")}
+
+    def detail_rows(table, name, where="true"):
+        if not local_sink.exists(table):
+            return 0
+        return local_sink.read(spark, table).filter(
+            (F.col("rule_name") == name) & F.expr(where)).count()
+
+    tables = {
+        "UNIQUENESS": "dq_duplicate_details",
+        "DUPLICATE_CHECK": "dq_duplicate_details",
+        "NEGATIVE_VALUES": "dq_negative_value_details",
+        "SUSTAINED_TREND": "dq_sustained_trend_details",
+        "MISSING_DATA_NULLS": "dq_details_missing_data",
+        "ANOMALY_SIGMA": "dq_anomaly_details",
+        "ROLLING_AVERAGE": "dq_details_rolling_average",
+        "HISTORICAL_COMPLETENESS": "dq_historical_completeness_details",
+        "SPIKE_DIP": "dq_details_spike_dip",
+    }
+    checked = set()
+    for rule in DEFAULT_CATALOG:
+        name, rtype = rule["rule_name"], rule["rule_type"]
+        if rtype not in tables:
+            continue
+        checked.add(rtype)
+        if rtype == "HISTORICAL_COMPLETENESS":
+            assert verdicts[name] == detail_rows(tables[rtype], name, "status = 'FAIL'"), name
+        elif rtype == "SPIKE_DIP":
+            assert detail_rows(tables[rtype], name) >= verdicts[name], name
+        else:
+            assert verdicts[name] == detail_rows(tables[rtype], name), name
+    assert checked == set(tables)
+    assert [e for e in os.listdir(local_sink.base_path) if e.startswith(".")] == []
+
+
+def test_rules_run_one_job_per_output():
+    """The one-job contract: no rule calls .cache(), .persist() or a
+    zero-argument .count() (verdict counts come from the detail write
+    itself), and the engine caches no source table."""
+    pkg = os.path.join(os.path.dirname(os.path.dirname(__file__)), "dq_true_north_spark")
+    rules_dir = os.path.join(pkg, "rules")
+    for fname in sorted(os.listdir(rules_dir)):
+        if not fname.endswith(".py"):
+            continue
+        with open(os.path.join(rules_dir, fname)) as f:
+            tree = ast.parse(f.read())
+        hits = [
+            node.lineno for node in ast.walk(tree)
+            if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+            and (node.func.attr in ("cache", "persist")
+                 or (node.func.attr == "count" and not node.args and not node.keywords))
+        ]
+        assert hits == [], (fname, hits)
+    with open(os.path.join(pkg, "engine.py")) as f:
+        assert "cacheTable" not in f.read()

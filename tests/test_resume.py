@@ -66,3 +66,14 @@ def test_torn_tmp_dir_is_discarded(spark, tmp_path):
     out = run_quality_pipeline(spark, pages_df(spark, N, 4), base, "runt")
     assert out["verdicts"].count() == N
     assert not os.path.isdir(torn)
+
+
+def test_manifest_rows_match_stage_outputs(spark, tmp_path):
+    """Each manifest entry's row count, observed on the stage's write, equals
+    the rows of the committed output."""
+    out = run_quality_pipeline(spark, pages_df(spark, N, 4), str(tmp_path), "runm")
+    stages = out["_runner"].manifest._data["stages"]
+    assert set(stages) == {"verdicts", "lineage", "summary"}
+    for name, entry in stages.items():
+        assert entry["rows"] == spark.read.parquet(entry["output"]).count(), name
+    assert stages["verdicts"]["rows"] == N
