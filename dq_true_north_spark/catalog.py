@@ -13,6 +13,7 @@ import json
 from pyspark.sql import DataFrame, SparkSession
 
 from . import constants as C
+from .io import local_rows
 
 
 def _r(rule_id, name, rtype, impl, logic="", seg="", **params) -> dict:
@@ -84,7 +85,8 @@ DEFAULT_CATALOG: list[dict] = [
 
 def catalog_df(spark: SparkSession, rules: list[dict] | None = None) -> DataFrame:
     rules = rules if rules is not None else DEFAULT_CATALOG
-    return spark.createDataFrame(
+    return local_rows(
+        spark,
         [tuple(r[k] for k in (
             "rule_id", "rule_name", "rule_type", "logic_implementation",
             "logic_definition", "parameters", "segment_value", "is_active",

@@ -7,6 +7,12 @@ Reference: dq_engine.main (dq_engine.py:20-141):
   2. dispatch on (RULE_TYPE, LOGIC_IMPLEMENTATION) (:93-124);
   3. per-rule exception isolation → ERROR row, loop continues (:125-138);
   4. append one summary row per rule to DQ_RESULTS (:37-44).
+
+The summary rows are built on the driver, as in the reference
+(``session.create_dataframe(rows, schema)``, dq_rules_library.py:17-52),
+and become a LocalRelation (``io.local_rows``), not a Python RDD: the
+append needs no Python worker, and a caller's collect of the returned
+summary runs no Spark job.
 """
 
 from __future__ import annotations
@@ -17,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import constants as C
-from .io import NullSink, ResultSink
+from .io import NullSink, ResultSink, local_rows
 from .rules.base import RuleResult
 from .rules.duplicates import execute_duplicate_check
 from .rules.historical import execute_historical_completeness_check
@@ -134,7 +140,7 @@ def run_catalog(
 
         with ThreadPoolExecutor(max_workers=parallelism) as pool:
             summary_rows = list(pool.map(lambda r: _run_one(spark, r, sink), active))
-    summary = spark.createDataFrame(summary_rows, DQ_RESULTS_SCHEMA)
+    summary = local_rows(spark, summary_rows, DQ_RESULTS_SCHEMA)
     if write_summary and not isinstance(sink, NullSink):
         sink.append(summary, "dq_results")
     return summary

@@ -21,6 +21,12 @@ rules from driver threads, and the lock orders the schema check and the
 publish step, not the Spark jobs, which run concurrently. An append of zero
 rows publishes nothing — the reference's ``if n > 0`` guard, kept here
 instead of in every rule.
+
+Rows the driver builds itself (the summary, literal detail rows, the
+bootstrap frame, the catalog) go through ``local_rows``: a ``pyarrow.Table``
+becomes a JVM ``LocalRelation``. ``createDataFrame(list, ddl)`` would be a
+Python RDD instead, and every write or collect of it runs a job that starts
+Python workers, even for zero or one row.
 """
 
 from __future__ import annotations
@@ -30,8 +36,22 @@ import shutil
 import tempfile
 import threading
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
+
+
+def local_rows(spark: SparkSession, rows: list[tuple], schema_ddl: str) -> DataFrame:
+    """The DataFrame of driver-built rows (tuples in DDL column order) as a
+    LocalRelation: collecting it runs no job, writing it needs no Python
+    worker. Sets no session conf."""
+    schema = StructType.fromDDL(schema_ddl)
+    names = schema.fieldNames()
+    table = pa.Table.from_pylist([dict(zip(names, r)) for r in rows],
+                                 schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema)
 
 
 def counted_write(df: DataFrame, path: str | None = None) -> int:
@@ -124,7 +144,7 @@ class ResultSink:
         the schema footer makes the empty table readable."""
         with self._lock(table):
             if not self.exists(table):
-                empty = spark.createDataFrame([], schema_ddl).withColumn(
+                empty = local_rows(spark, [], schema_ddl).withColumn(
                     "execution_timestamp", F.current_timestamp()
                 )
                 empty.write.mode("overwrite").parquet(self.path(table))

@@ -22,7 +22,10 @@ from functools import reduce
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from ..io import local_rows
 from .base import RuleResult
+
+DETAIL_SCHEMA = "rule_name string, failure_type string, failure_date string, details string"
 
 
 def execute_missing_data_nulls_check(spark: SparkSession, rule: dict, params: dict, sink) -> RuleResult:
@@ -43,14 +46,14 @@ def execute_missing_data_nulls_check(spark: SparkSession, rule: dict, params: di
     c1, c2, n_nulls = df.agg(
         F.count_if(on_t1), F.count_if(on_t2), F.count_if(on_t1 & null_pred)
     ).first()
-    schema = "rule_name string, failure_type string, failure_date string, details string"
 
     # (1) timeliness
     if c1 == 0:
-        detail = spark.createDataFrame(
+        detail = local_rows(
+            spark,
             [(name, "TIMELINESS", str(maxd),
               json.dumps({"expected_date": str(maxd), "row_count": 0}))],
-            schema,
+            DETAIL_SCHEMA,
         )
         sink.append(detail, details_table)
         return RuleResult.from_count(1)                          # early return :427
@@ -87,10 +90,11 @@ def execute_missing_data_nulls_check(spark: SparkSession, rule: dict, params: di
     # (4) count drop
     if c1 < c2:                                                  # :481
         violations += 1
-        detail = spark.createDataFrame(
+        detail = local_rows(
+            spark,
             [(name, "COUNT_MISMATCH", str(maxd),
               json.dumps({"count_t1": c1, "count_t2": c2}))],
-            schema,
+            DETAIL_SCHEMA,
         )
         sink.append(detail, details_table)
 

@@ -14,8 +14,11 @@ from pyspark.sql import SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import constants as C
+from ..io import local_rows
 from ..textquality.spec import round4_col
 from .base import RuleResult
+
+COMPLETENESS_DETAIL_SCHEMA = "rule_name string, expected_date string, actual_max_date string, days_missing int"
 
 
 def execute_generic_sql(spark: SparkSession, rule: dict, params: dict, sink) -> RuleResult:
@@ -63,8 +66,8 @@ def execute_uniqueness_sql(spark: SparkSession, rule: dict, params: dict, sink) 
 def execute_completeness_sql(spark: SparkSession, rule: dict, params: dict, sink) -> RuleResult:
     """1-col result = violation count; 4-col = (rule, expected_date,
     actual_max_date, days_missing). Always logs a completeness detail row
-    (:130-157)."""
-    rows = spark.sql(rule["logic_definition"]).collect()
+    (:130-157). Only the first row is read, so only one is collected."""
+    rows = spark.sql(rule["logic_definition"]).limit(1).collect()
     if not rows:
         return RuleResult("", C.ERROR, "Query returned no rows")
     row = rows[0]
@@ -81,9 +84,10 @@ def execute_completeness_sql(spark: SparkSession, rule: dict, params: dict, sink
         )
         actual = "N/A - Count Check"
         violations = missing
-    detail = spark.createDataFrame(
+    detail = local_rows(
+        spark,
         [(rule["rule_name"], expected, actual, missing)],
-        "rule_name string, expected_date string, actual_max_date string, days_missing int",
+        COMPLETENESS_DETAIL_SCHEMA,
     )
     sink.append(detail, params.get("details_table", "dq_details_completeness"))
     return RuleResult.from_count(violations)

@@ -418,3 +418,136 @@ def test_rules_run_one_job_per_output():
         assert hits == [], (fname, hits)
     with open(os.path.join(pkg, "engine.py")) as f:
         assert "cacheTable" not in f.read()
+
+
+def test_driver_rows_build_no_python_rdd():
+    """Driver-built rows become LocalRelations: in engine.py, io.py,
+    catalog.py and rules/, the only createDataFrame call is the one inside
+    io.local_rows (a pyarrow.Table), so no list-backed Python RDD remains."""
+    pkg = os.path.join(os.path.dirname(os.path.dirname(__file__)), "dq_true_north_spark")
+    rules_dir = os.path.join(pkg, "rules")
+    paths = [os.path.join(pkg, f) for f in ("engine.py", "io.py", "catalog.py")] + [
+        os.path.join(rules_dir, f) for f in sorted(os.listdir(rules_dir)) if f.endswith(".py")
+    ]
+    hits = []
+    for path in paths:
+        with open(path) as f:
+            tree = ast.parse(f.read())
+        allowed = {
+            id(node) for fn in ast.walk(tree)
+            if isinstance(fn, ast.FunctionDef) and fn.name == "local_rows"
+            for node in ast.walk(fn)
+        } if path.endswith("io.py") else set()
+        hits += [
+            (os.path.basename(path), node.lineno) for node in ast.walk(tree)
+            if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "createDataFrame" and id(node) not in allowed
+        ]
+    assert hits == []
+
+
+def _result_ddls():
+    from dq_true_north_spark.engine import DQ_RESULTS_SCHEMA
+    from dq_true_north_spark.rules.missing_data import DETAIL_SCHEMA
+    from dq_true_north_spark.rules.sql_rule import COMPLETENESS_DETAIL_SCHEMA
+
+    return {
+        DQ_RESULTS_SCHEMA: [
+            (7, "règle_é", None, "SPIKE_DIP", "SNOWPARK_FUNC", "3", "FAIL", None),
+            (-1, None, "", "GENERIC", "SQL_QUERY", "", "ERROR", "ValueError: ☃ × 2"),
+        ],
+        DETAIL_SCHEMA: [
+            ("md", "COUNT_MISMATCH", "2024-01-02", '{"count_t1": 1, "count_t2": 2}'),
+            ("md", "TIMELINESS", None, "données"),
+        ],
+        COMPLETENESS_DETAIL_SCHEMA: [
+            ("cmp", "2024-01-02", "N/A - Count Check", 2147483647),
+            ("cmp", None, "日付", None),
+        ],
+    }
+
+
+def test_local_rows_equal_list_frames(spark):
+    """io.local_rows gives the same schema and rows as the list-backed
+    createDataFrame for every result DDL the engine builds rows for, with
+    NULLs, non-ASCII text, int columns and the empty row list, and its plan
+    is a LocalRelation."""
+    from dq_true_north_spark.io import local_rows
+
+    for ddl, rows in _result_ddls().items():
+        for case in (rows, rows[:1], []):
+            got = local_rows(spark, case, ddl)
+            want = spark.createDataFrame(case, ddl)
+            assert got.schema == want.schema, ddl
+            assert got.collect() == want.collect(), (ddl, case)
+            plan = got._jdf.queryExecution().optimizedPlan()
+            assert plan.getClass().getSimpleName() == "LocalRelation", plan.toString()
+
+
+def _jobs_run_by(spark, action) -> set:
+    """Ids of the Spark jobs that action() submits, read from the status
+    tracker once the listener bus has delivered every event."""
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    tracker = spark.sparkContext.statusTracker()
+    bus.waitUntilEmpty()
+    before = set(tracker.getJobIdsForGroup(None))
+    action()
+    bus.waitUntilEmpty()
+    return set(tracker.getJobIdsForGroup(None)) - before
+
+
+def test_run_catalog_summary_collect_runs_no_job(spark, tmp_path):
+    """The summary run_catalog returns is a LocalRelation: collecting it
+    submits no Spark job (a list-backed frame of the same rows does)."""
+    from dq_true_north_spark.engine import DQ_RESULTS_SCHEMA
+
+    load_tables(spark, SF_DIR, TABLES)
+    summary = run_catalog(spark, [dict(r) for r in DEFAULT_CATALOG[:3]],
+                          sink=ResultSink(str(tmp_path / "nojob")))
+    rows = []
+    assert _jobs_run_by(spark, lambda: rows.extend(summary.collect())) == set()
+    assert len(rows) == 3
+    listed = spark.createDataFrame([tuple(r) for r in rows], DQ_RESULTS_SCHEMA)
+    assert len(_jobs_run_by(spark, listed.collect)) == 1
+
+
+def _completeness_rule(rid, sql):
+    return {
+        "rule_id": rid, "rule_name": f"cmp_{rid}", "rule_type": "COMPLETENESS",
+        "logic_implementation": "SQL_QUERY", "logic_definition": sql,
+        "parameters": "{}", "segment_value": "", "is_active": True,
+    }
+
+
+def test_completeness_reads_first_row_only(spark, tmp_path):
+    """A COMPLETENESS query returning many rows is judged on its first row,
+    exactly as that row alone would be (both arms), and logs the same
+    detail row; a query returning no rows is still an ERROR."""
+    cases = [
+        ("SELECT id AS missing FROM range(5000) ORDER BY id DESC",
+         "SELECT CAST(4999 AS BIGINT) AS missing"),
+        ("SELECT 'r', '2024-01-03', '2024-01-01', id + 2 AS days_missing "
+         "FROM range(5000) ORDER BY id",
+         "SELECT 'r', '2024-01-03', '2024-01-01', CAST(2 AS BIGINT) AS days_missing"),
+        ("SELECT 'r', '2024-01-03', '2024-01-03', id AS days_missing "
+         "FROM range(5000) ORDER BY id",
+         "SELECT 'r', '2024-01-03', '2024-01-03', CAST(0 AS BIGINT) AS days_missing"),
+    ]
+    for i, (many, first) in enumerate(cases):
+        out = {}
+        for rid, sql in ((2 * i, many), (2 * i + 1, first)):
+            s = ResultSink(str(tmp_path / f"cmp{rid}"))
+            (row,) = run_catalog(spark, [_completeness_rule(rid, sql)], sink=s,
+                                 write_summary=False).collect()
+            (detail,) = s.read(spark, "dq_details_completeness").drop(
+                "rule_name", "execution_timestamp").collect()
+            out[sql] = (row["result_value"], row["indicator"], detail)
+        assert out[many] == out[first], (many, out)
+    # the collect is bounded: a row past the first is never computed
+    (row,) = run_catalog(spark, [_completeness_rule(98, (
+        "SELECT IF(id = 0, 3, raise_error('read past the first row')) AS missing "
+        "FROM range(5000)"))], write_summary=False).collect()
+    assert (row["result_value"], row["indicator"]) == ("3", C.FAIL), row
+    (row,) = run_catalog(spark, [_completeness_rule(99, "SELECT id FROM range(0)")],
+                         write_summary=False).collect()
+    assert (row["indicator"], row["error_message"]) == (C.ERROR, "Query returned no rows")
