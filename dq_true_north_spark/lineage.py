@@ -9,12 +9,18 @@ from primitives (SURVEY.md §7 hard-point 5):
   - stage output is written to `<table>/<run_id>.tmp`, atomically renamed to
     `<table>/<run_id>` (commit-then-visible);
   - the manifest JSON (one per run_id, atomic os.replace) is the source of
-    truth: a stage counts as done only if BOTH the manifest entry and the
-    renamed directory exist;
+    truth: a stage counts as done only if BOTH the manifest entry (with the
+    stage's schema) and the renamed directory exist;
+  - every stage is read back with the schema its manifest entry records,
+    so no read runs a schema-inference job: a resume of a committed run
+    submits no Spark job until its outputs are used;
   - resume == re-invoke with the same run_id: committed stages are read
     back, uncommitted stages recompute. Deterministic inputs (corpus.py) +
     deterministic plans => resume output is byte-equal to a fresh run
     (tested in tests/test_resume.py).
+
+The summary stage rolls up the committed lineage rows (at most one per
+verdict partition) rather than re-scanning the verdicts.
 
 The reference has NO resume story — append-only writes double-log on re-run
 (dq_rules_library.py:44; SURVEY.md §4 "idempotence / resume") — this is a
@@ -30,9 +36,25 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from . import constants as C
 from .io import counted_write
+
+
+_NULLABILITY = ("nullable", "containsNull", "valueContainsNull")
+
+
+def _read_back_schema(schema):
+    """The JSON of the schema a Parquet read of the written data reports:
+    `schema`'s JSON with every field, array element and map value nullable,
+    nested ones included."""
+    if isinstance(schema, dict):
+        return {k: True if k in _NULLABILITY else _read_back_schema(v)
+                for k, v in schema.items()}
+    if isinstance(schema, list):
+        return [_read_back_schema(v) for v in schema]
+    return schema
 
 
 class RunManifest:
@@ -50,16 +72,22 @@ class RunManifest:
         return {"run_id": self.run_id, "stages": {}}
 
     def committed(self, stage: str) -> bool:
+        """An entry counts only with its schema (a stage is read back with
+        it, never by inference) and its renamed output directory."""
         entry = self._data["stages"].get(stage)
-        return bool(entry) and os.path.isdir(entry["output"])
+        return bool(entry) and "schema" in entry and os.path.isdir(entry["output"])
 
     def output_path(self, stage: str) -> str:
         return self._data["stages"][stage]["output"]
 
-    def commit(self, stage: str, output: str, rows: int) -> None:
+    def schema(self, stage: str) -> StructType:
+        return StructType.fromJson(self._data["stages"][stage]["schema"])
+
+    def commit(self, stage: str, output: str, rows: int, schema: dict) -> None:
         self._data["stages"][stage] = {
             "output": output,
             "rows": rows,
+            "schema": schema,
             "committed_at": time.time(),
         }
         tmp = self.path + ".tmp"
@@ -79,45 +107,59 @@ class PipelineRunner:
         self.recomputed: list[str] = []   # instrumentation for tests
 
     def stage(self, name: str, build) -> DataFrame:
-        """build: () -> DataFrame. Runs the stage unless already committed."""
-        final = os.path.join(self.base_path, name, self.run_id)
-        if self.manifest.committed(name):
-            return self.spark.read.parquet(self.manifest.output_path(name))
-        tmp = final + ".tmp"
-        if os.path.isdir(tmp):
-            shutil.rmtree(tmp)          # torn previous attempt — discard
-        rows = counted_write(build(), tmp)  # counted by the write job itself
-        os.makedirs(os.path.dirname(final), exist_ok=True)
-        if os.path.isdir(final):
-            shutil.rmtree(final)
-        os.rename(tmp, final)           # commit-then-visible
-        self.manifest.commit(name, final, rows)
-        self.recomputed.append(name)
-        return self.spark.read.parquet(final)
+        """build: () -> DataFrame. Runs the stage unless already committed,
+        then reads the committed output with the manifest's schema: a
+        schemaless Parquet read would infer it with a Spark job."""
+        if not self.manifest.committed(name):
+            final = os.path.join(self.base_path, name, self.run_id)
+            tmp = final + ".tmp"
+            if os.path.isdir(tmp):
+                shutil.rmtree(tmp)          # torn previous attempt — discard
+            df = build()
+            rows = counted_write(df, tmp)   # counted by the write job itself
+            os.makedirs(os.path.dirname(final), exist_ok=True)
+            if os.path.isdir(final):
+                shutil.rmtree(final)
+            os.rename(tmp, final)           # commit-then-visible
+            self.manifest.commit(name, final, rows,
+                                 _read_back_schema(df.schema.jsonValue()))
+            self.recomputed.append(name)
+        return self.spark.read.schema(self.manifest.schema(name)).parquet(
+            self.manifest.output_path(name))
 
 
 def lineage_of(verdicts: DataFrame, run_id: str, stage: str) -> DataFrame:
     """Per-partition lineage rows: partition id, docs in/out, per-rule hit
     counts, max checkpoint offset (the partition's high-water mark)."""
-    with_pid = verdicts.withColumn("partition_id", F.spark_partition_id())
     aggs = [
-        F.count(F.lit(1)).alias("docs_in"),
-        F.sum(F.col("keep").cast("int")).alias("docs_out"),
-        F.max(F.xxhash64("url")).alias("checkpoint_offset"),
+        "count(1) AS docs_in",
+        "sum(CAST(keep AS INT)) AS docs_out",
+        "max(xxhash64(url)) AS checkpoint_offset",
+        *[f"sum(element_at(rule_hits, '{r}')) AS hits_{r}"
+          for r in C.DROP_REASON_ORDER],
     ]
-    for r in C.DROP_REASON_ORDER:
-        aggs.append(
-            F.sum(F.element_at(F.col("rule_hits"), r)).alias(f"hits_{r}")
-        )
     return (
-        with_pid.groupBy("partition_id")
-        .agg(*aggs)
+        verdicts.withColumn("partition_id", F.spark_partition_id())
+        .groupBy("partition_id")
+        .agg(*map(F.expr, aggs))
         .select(
             F.lit(run_id).alias("run_id"),
             F.lit(stage).alias("stage"),
             "*",
         )
     )
+
+
+def summary_of_lineage(lineage: DataFrame) -> DataFrame:
+    """The verdict_summary row, rolled up from lineage rows (at most one per
+    verdict partition) instead of re-scanning the verdicts. Equal to
+    verdict_summary(verdicts) also on empty input: total_docs 0, the rest
+    NULL."""
+    return lineage.agg(*map(F.expr, [
+        "coalesce(sum(docs_in), 0) AS total_docs",
+        "sum(docs_out) AS kept_docs",
+        *[f"sum(hits_{r}) AS {r}_count" for r in C.DROP_REASON_ORDER],
+    ]))
 
 
 def run_quality_pipeline(
@@ -127,12 +169,13 @@ def run_quality_pipeline(
     run_id: str,
     dedup_strategy: str = "auto",
 ) -> dict[str, DataFrame]:
-    """Full resumable run: verdicts -> lineage -> summary.
+    """Full resumable run: verdicts -> lineage -> summary, the summary
+    rolled up from the committed lineage.
 
     dedup_strategy passes through to compute_verdicts; force 'shuffle' for
-    inputs that cannot guarantee unique (url, warc_ts) rows — the broadcast
-    path's precondition (textquality/pipeline.py)."""
-    from .textquality.pipeline import compute_verdicts, verdict_summary
+    inputs that cannot guarantee unique (url, warc_ts) rows — the keys-only
+    paths' precondition (textquality/pipeline.py)."""
+    from .textquality.pipeline import compute_verdicts
 
     runner = PipelineRunner(spark, base_path, run_id)
     verdicts = runner.stage(
@@ -141,9 +184,7 @@ def run_quality_pipeline(
     lineage = runner.stage(
         "lineage", lambda: lineage_of(verdicts, run_id, "verdicts")
     )
-    summary = runner.stage(
-        "summary", lambda: verdict_summary(verdicts)
-    )
+    summary = runner.stage("summary", lambda: summary_of_lineage(lineage))
     return {
         "verdicts": verdicts,
         "lineage": lineage,

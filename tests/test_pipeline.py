@@ -154,8 +154,10 @@ def test_verdict_summary_rollup(spark):
 
 
 def test_dedup_strategy_parity_and_auto(spark):
-    """broadcast == shuffle == auto verdicts, row-for-row; auto picks
-    broadcast on the low-dup corpus and shuffle on a 50%-dup corpus."""
+    """broadcast == shuffle == auto verdicts, row-for-row, also with auto's
+    join forced to sort-merge; auto's own join broadcasts the small loser
+    set. The sketch still reads a low dup fraction on the corpus and a high
+    one on a 50%-dup corpus."""
     from pyspark.sql import functions as F
 
     from dq_true_north_spark.textquality.pipeline import (
@@ -171,15 +173,63 @@ def test_dedup_strategy_parity_and_auto(spark):
             for r in rows
         }
 
-    vb = key(compute_verdicts(pages, with_scrub=False, dedup_strategy="broadcast").collect())
-    vs = key(compute_verdicts(pages, with_scrub=False, dedup_strategy="shuffle").collect())
-    va = key(compute_verdicts(pages, with_scrub=False, dedup_strategy="auto").collect())
+    def verdicts(strategy):
+        return compute_verdicts(pages, with_scrub=False, dedup_strategy=strategy)
+
+    def executed_plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    vb = key(verdicts("broadcast").collect())
+    vs = key(verdicts("shuffle").collect())
+    auto = verdicts("auto")
+    va = key(auto.collect())
     assert vb == vs == va
+    assert "BroadcastHashJoin" in executed_plan(auto)
+
+    conf = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(conf)
+    spark.conf.set(conf, "-1")
+    try:
+        merged = verdicts("auto")
+        assert key(merged.collect()) == va
+        plan = executed_plan(merged)
+        assert "SortMergeJoin" in plan and "BroadcastHashJoin" not in plan
+    finally:
+        spark.conf.set(conf, saved)
 
     assert estimate_dup_fraction(pages) <= BROADCAST_DUP_FRACTION_MAX
-    # a 50%-duplicate corpus must steer auto away from the broadcast
     half_dup = pages.select("url", "warc_ts", F.lit("same text").alias("text"))
     assert estimate_dup_fraction(half_dup) > BROADCAST_DUP_FRACTION_MAX
+
+
+def test_verdict_plans_build_without_jobs(spark, jobs_run_by):
+    """Building compute_verdicts submits no Spark job: auto needs no dedup
+    sketch."""
+    pages = pages_df(spark, 400, partitions=4)
+    assert jobs_run_by(lambda: compute_verdicts(pages)) == set()
+
+
+#: py4j round trips to build compute_verdicts(pages) plus
+#: minhash_candidate_pairs(pages), measured on PySpark 4.1.2 (3,824
+#: before the wide projections were parsed from SQL text)
+PLAN_BUILD_ROUND_TRIPS = 1_002
+
+
+def test_plan_building_py4j_budget(spark, py4j_calls):
+    """Plan building stays bound by SQL text, not Column-DSL nodes: each DSL
+    node is a driver-to-JVM round trip."""
+    from dq_true_north_spark.textquality.dedup import minhash_candidate_pairs
+
+    pages = pages_df(spark, 400, partitions=4)
+
+    def build():
+        compute_verdicts(pages)
+        minhash_candidate_pairs(pages)
+
+    build()   # first use resolves JVM classes and functions
+    calls = py4j_calls(build)
+    print(f"plan-building py4j round trips: {calls}")
+    assert calls <= 1.5 * PLAN_BUILD_ROUND_TRIPS, calls
 
 
 def test_canonical_url_three_way_and_idempotent(spark, duck):

@@ -2,11 +2,12 @@
 
 from __future__ import annotations
 
+import json
 import os
 
 from dq_true_north_spark.corpus import pages_df
 from dq_true_north_spark.lineage import PipelineRunner, run_quality_pipeline
-from dq_true_north_spark.textquality.pipeline import compute_verdicts
+from dq_true_north_spark.textquality.pipeline import compute_verdicts, verdict_summary
 
 N = 600
 
@@ -77,3 +78,55 @@ def test_manifest_rows_match_stage_outputs(spark, tmp_path):
     for name, entry in stages.items():
         assert entry["rows"] == spark.read.parquet(entry["output"]).count(), name
     assert stages["verdicts"]["rows"] == N
+
+
+def test_fresh_run_and_resume_job_counts(spark, tmp_path, jobs_run_by):
+    """A fresh run submits only its stage writes (no dedup sketch, no
+    schema-inference read); a resume of the committed run submits none
+    before its outputs are used."""
+    pages = pages_df(spark, 400, partitions=4)
+    base = str(tmp_path)
+    out = {}
+    fresh = jobs_run_by(lambda: out.update(run_quality_pipeline(spark, pages, base, "runj")))
+    assert len(fresh) <= 8, sorted(fresh)
+    resumed = jobs_run_by(lambda: out.update(run_quality_pipeline(spark, pages, base, "runj")))
+    assert resumed == set()
+    assert out["_runner"].recomputed == []
+    assert out["summary"].first()["total_docs"] == 400
+
+
+def test_stage_reads_carry_committed_schema(spark, tmp_path):
+    """Every stage is read back with the schema its manifest entry records,
+    which equals what Parquet infers from the output; an entry without a
+    schema counts as uncommitted, so that stage recomputes."""
+    base = str(tmp_path)
+    pages = pages_df(spark, N, 4)
+    out = run_quality_pipeline(spark, pages, base, "runs")
+    manifest = out["_runner"].manifest
+    for name in ("verdicts", "lineage", "summary"):
+        inferred = spark.read.parquet(manifest.output_path(name)).schema
+        assert out[name].schema == inferred, name
+        assert manifest.schema(name) == inferred, name
+    lineage = sorted(out["lineage"].collect())
+
+    with open(manifest.path) as f:
+        data = json.load(f)
+    del data["stages"]["lineage"]["schema"]
+    with open(manifest.path, "w") as f:
+        json.dump(data, f)
+    again = run_quality_pipeline(spark, pages, base, "runs")
+    assert again["_runner"].recomputed == ["lineage"]
+    assert sorted(again["lineage"].collect()) == lineage
+
+
+def test_summary_rolls_up_lineage(spark, tmp_path):
+    """The summary stage, rolled up from the lineage rows, equals
+    verdict_summary over the verdicts: on the corpus and on empty pages."""
+    pages = pages_df(spark, 400, partitions=4)
+    for label, p in (("corpus", pages), ("empty", pages.limit(0))):
+        out = run_quality_pipeline(spark, p, str(tmp_path / label), "runr")
+        (got,) = out["summary"].collect()
+        (want,) = verdict_summary(out["verdicts"]).collect()
+        assert got == want, label
+    assert got["total_docs"] == 0
+    assert got["kept_docs"] is None and got["too_short_count"] is None
