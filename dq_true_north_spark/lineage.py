@@ -42,21 +42,6 @@ from . import constants as C
 from .io import counted_write
 
 
-_NULLABILITY = ("nullable", "containsNull", "valueContainsNull")
-
-
-def _read_back_schema(schema):
-    """The JSON of the schema a Parquet read of the written data reports:
-    `schema`'s JSON with every field, array element and map value nullable,
-    nested ones included."""
-    if isinstance(schema, dict):
-        return {k: True if k in _NULLABILITY else _read_back_schema(v)
-                for k, v in schema.items()}
-    if isinstance(schema, list):
-        return [_read_back_schema(v) for v in schema]
-    return schema
-
-
 class RunManifest:
     def __init__(self, base_path: str, run_id: str):
         self.base_path = base_path
@@ -109,7 +94,9 @@ class PipelineRunner:
     def stage(self, name: str, build) -> DataFrame:
         """build: () -> DataFrame. Runs the stage unless already committed,
         then reads the committed output with the manifest's schema: a
-        schemaless Parquet read would infer it with a Spark job."""
+        schemaless Parquet read would infer it with a Spark job. The
+        manifest keeps the written frame's schema; the file-source reader
+        makes it nullable throughout, as it does an inferred one."""
         if not self.manifest.committed(name):
             final = os.path.join(self.base_path, name, self.run_id)
             tmp = final + ".tmp"
@@ -121,8 +108,7 @@ class PipelineRunner:
             if os.path.isdir(final):
                 shutil.rmtree(final)
             os.rename(tmp, final)           # commit-then-visible
-            self.manifest.commit(name, final, rows,
-                                 _read_back_schema(df.schema.jsonValue()))
+            self.manifest.commit(name, final, rows, df.schema.jsonValue())
             self.recomputed.append(name)
         return self.spark.read.schema(self.manifest.schema(name)).parquet(
             self.manifest.output_path(name))

@@ -7,18 +7,19 @@ exact-text dedup → PII/toxicity scrub → per-url verdict
 Plan shape (deliberate, for 100 TB):
   stage 1  scan + wide projection: ALL heuristic flags as codegen'd Column
            exprs + the two Arrow UDF columns (langid, perplexity) — one scan;
-  stage 2  ONE shuffle, of the (url, warc_ts, text_hash) keys only, for the
-           keep-first dedup window (skew-bounded: identical-text groups are
-           small by construction; pathological cases are capped by AQE skew
-           handling); the loser keys join back by whichever join Spark's
-           size statistics pick — no sketch pre-pass;
+  stage 2  the keep-first dedup window (skew-bounded: identical-text groups
+           are small by construction; pathological cases are capped by AQE
+           skew handling): ONE shuffle of the (url, warc_ts, text_hash) keys
+           only, the loser keys broadcast back — or, for a loser set too
+           large to broadcast, ONE full-width shuffle (see 'auto' below);
   stage 3  verdict assembly + scrub, all codegen — no further shuffle.
 
-Building the plan runs no Spark job and is cheap on the driver: the wide
-projections are parsed from SQL text rather than assembled one py4j round
-trip per Column node. In a resumable run (lineage.run_quality_pipeline) the
-verdicts are read back with the schema the run manifest records, and the
-summary row is rolled up from the per-partition lineage rows.
+Building the plan is cheap on the driver: the wide projections are parsed
+from SQL text rather than assembled one py4j round trip per Column node, and
+it runs no Spark job unless 'auto' dedup needs its sketch pre-pass. In a
+resumable run (lineage.run_quality_pipeline) the verdicts are read back with
+the schema the run manifest records, and the summary row is rolled up from
+the per-partition lineage rows.
 
 The reference's N-scans-per-rule pattern (dq_rules_library.py, one query per
 rule) is intentionally replaced by this single-pass design (SURVEY.md §3.1).
@@ -40,17 +41,17 @@ from .scrub import scrub_sql_expr
 from .udfs import lang_ppl_udf
 
 
-#: keep_representatives broadcasts its near-dup loser set only at or below
-#: this loser fraction (dedup.losers_broadcastable); frozen bench.py also
-#: reads it with estimate_dup_fraction to pick its exact-dedup leaf
+#: auto strategy switches to the full-shuffle plan above this duplicate
+#: fraction — beyond it the loser set is too large to broadcast safely
+#: (keep_representatives applies the same bound to its near-dup losers)
 BROADCAST_DUP_FRACTION_MAX = 0.10
 
 
 def estimate_dup_fraction(pages: DataFrame) -> float:
     """Cheap sketch pre-pass: 1 − approx_distinct(text)/count via HLL++
     over a JVM xxhash64 of the text (one narrow scan, no shuffle of note).
-    compute_verdicts does not call it: its 'auto' join is sized by Spark's
-    own statistics."""
+    compute_verdicts' 'auto' runs it only when Spark's size statistics
+    cannot rule the loser set broadcastable."""
     row = pages.agg(
         F.count(F.lit(1)).alias("n"),
         F.approx_count_distinct(F.xxhash64("text"), 0.02).alias("d"),
@@ -58,6 +59,16 @@ def estimate_dup_fraction(pages: DataFrame) -> float:
     if not row["n"]:
         return 0.0
     return max(0.0, 1.0 - row["d"] / row["n"])
+
+
+def _broadcastable(df: DataFrame) -> bool:
+    """Spark's join planner's own size test, read without running a job:
+    the optimized plan's size estimate is within
+    spark.sql.autoBroadcastJoinThreshold."""
+    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    limit = (df.sparkSession._jsparkSession.sessionState().conf()
+             .autoBroadcastJoinThreshold())
+    return 0 <= size <= limit
 
 
 def _double(x: float) -> str:
@@ -77,24 +88,26 @@ def compute_verdicts(
 ) -> DataFrame:
     """pages(url, warc_ts, html, text, lang) → verdicts per url.
 
-    Building the plan runs no Spark job. The wide projections are parsed
-    from SQL text: each DataFrame-DSL Column node is a py4j round trip, so
-    the per-reason columns are rendered as strings for one selectExpr.
+    The wide projections are parsed from SQL text: each DataFrame-DSL
+    Column node is a py4j round trip, so the per-reason columns are
+    rendered as strings for one selectExpr. Building the plan runs no
+    Spark job unless 'auto' runs its sketch.
 
     dedup_strategy:
-      'auto' (default): the keys-only plan of 'broadcast' — the dedup
-        shuffle carries only (url, warc_ts, text_hash) and the loser set
-        (duplicate occurrences) is left-joined back — with NO join hint.
-        Spark's size statistics choose the join: a loser side estimated
-        under spark.sql.autoBroadcastJoinThreshold is broadcast, a larger
-        one sort-merges (and AQE may still convert it at run time from the
-        measured shuffle size). The broadcast is thus bounded in bytes,
-        which holds at any corpus size, and needs no pre-pass.
-        Same precondition as 'broadcast': on input with non-unique
-        (url, warc_ts) every copy of a key that has a loser is marked dup.
-      'broadcast': the same keys-only plan with a broadcast hint on the
-        loser set. The wide row never crosses the network; text is md5'd
-        exactly once (keys scan).
+      'auto' (default): 'broadcast' when Spark's size statistics put the
+        loser set under spark.sql.autoBroadcastJoinThreshold — read from the
+        plan, no job. Otherwise an HLL++ sketch pre-pass estimates the
+        duplicate fraction and picks 'broadcast' at or below
+        BROADCAST_DUP_FRACTION_MAX (typical crawl slices), else 'shuffle'
+        (boilerplate mirrors, 20–50% dup crawls) — an unbounded broadcast
+        of the loser set would OOM the executors exactly on those corpora.
+        The unhinted keys-only join is never left to Spark: the statistics
+        estimate the loser set from the pages scan, so on large inputs it
+        would sort-merge and shuffle the full row on top of the keys.
+      'broadcast': the dedup shuffle carries ONLY (url, warc_ts, text_hash)
+        — ~100 bytes/row instead of the full document — and the loser set
+        (duplicate occurrences) is broadcast-joined back. The wide row never
+        crosses the network; text is md5'd exactly once (keys scan).
         PRECONDITION: (url, warc_ts) unique per row — the loser set is
         dropDuplicates'd on that key so a violating input degrades to
         marking every copy as dup instead of inflating the row count.
@@ -129,9 +142,11 @@ def compute_verdicts(
             .dropDuplicates(["url", "warc_ts"])   # join-key uniqueness guard
             .withColumn("_is_dup", F.lit(1))
         )
-        if dedup_strategy == "broadcast":
-            losers = F.broadcast(losers)
-        flagged = flagged.join(losers, ["url", "warc_ts"], "left")
+        if (dedup_strategy == "auto" and not _broadcastable(losers)
+                and estimate_dup_fraction(pages) > BROADCAST_DUP_FRACTION_MAX):
+            dedup_strategy = "shuffle"
+    if dedup_strategy in ("auto", "broadcast"):
+        flagged = flagged.join(F.broadcast(losers), ["url", "warc_ts"], "left")
         exact_dup = "coalesce(_is_dup, 0)"
     else:
         flagged = (

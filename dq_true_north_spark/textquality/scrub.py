@@ -2,7 +2,8 @@
 
 The spec (constants.PII_PATTERNS order + lexicon) is executed:
   1. JVM-side as a chained regexp_replace expression — the production hot
-     path (whole-stage codegen, no Python), rendered by `scrub_sql_expr`;
+     path (whole-stage codegen, no Python): `scrub_sql_expr(True, ...)`
+     parsed into the verdict projection (pipeline.compute_verdicts);
   2. Python-side (`scrub_text`) — the golden-fixture reference
      implementation AND the pandas-UDF fallback;
   3. DuckDB-side (oracle SQL via `scrub_sql_expr`).
@@ -17,7 +18,6 @@ from __future__ import annotations
 import re
 
 import pandas as pd
-from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
@@ -45,12 +45,6 @@ def scrub_text(text: str | None) -> str | None:
     for rx, repl in _COMPILED:
         text = rx.sub(repl, text)
     return text
-
-
-def scrub_column(col: str) -> Column:
-    """JVM path: the chained regexp_replace of scrub_sql_expr, parsed as
-    one expression (one driver round trip instead of one per pattern)."""
-    return F.expr(scrub_sql_expr(True, col))
 
 
 def scrub_sql_expr(dialect_spark: bool, expr: str) -> str:

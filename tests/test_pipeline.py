@@ -153,11 +153,12 @@ def test_verdict_summary_rollup(spark):
     assert row["too_short_count"] == 20  # class 0 plants exactly 1 in 20
 
 
-def test_dedup_strategy_parity_and_auto(spark):
-    """broadcast == shuffle == auto verdicts, row-for-row, also with auto's
-    join forced to sort-merge; auto's own join broadcasts the small loser
-    set. The sketch still reads a low dup fraction on the corpus and a high
-    one on a 50%-dup corpus."""
+def test_dedup_strategy_parity_and_auto(spark, jobs_run_by):
+    """broadcast == shuffle == auto verdicts, row-for-row. auto broadcasts
+    the small loser set on Spark's size statistics alone; with the
+    statistics ruling broadcast out it runs the sketch, which keeps the
+    broadcast on the low-dup corpus and picks the full-shuffle plan on a
+    50%-dup corpus — never an unhinted sort-merge join back."""
     from pyspark.sql import functions as F
 
     from dq_true_north_spark.textquality.pipeline import (
@@ -166,6 +167,7 @@ def test_dedup_strategy_parity_and_auto(spark):
     )
 
     pages = pages_df(spark, 500, partitions=8)
+    half_dup = pages.select("url", "warc_ts", F.lit("same text").alias("text"))
 
     def key(rows):
         return {
@@ -173,8 +175,8 @@ def test_dedup_strategy_parity_and_auto(spark):
             for r in rows
         }
 
-    def verdicts(strategy):
-        return compute_verdicts(pages, with_scrub=False, dedup_strategy=strategy)
+    def verdicts(strategy, p=pages):
+        return compute_verdicts(p, with_scrub=False, dedup_strategy=strategy)
 
     def executed_plan(df):
         return df._jdf.queryExecution().executedPlan().toString()
@@ -190,21 +192,24 @@ def test_dedup_strategy_parity_and_auto(spark):
     saved = spark.conf.get(conf)
     spark.conf.set(conf, "-1")
     try:
-        merged = verdicts("auto")
-        assert key(merged.collect()) == va
-        plan = executed_plan(merged)
-        assert "SortMergeJoin" in plan and "BroadcastHashJoin" not in plan
+        assert jobs_run_by(lambda: verdicts("auto")), "no sketch pre-pass"
+        sketched = verdicts("auto")
+        assert key(sketched.collect()) == va
+        assert "BroadcastHashJoin" in executed_plan(sketched)
+        high = verdicts("auto", half_dup)
+        plan = executed_plan(high)
+        assert "BroadcastHashJoin" not in plan and "SortMergeJoin" not in plan
+        assert key(high.collect()) == key(verdicts("shuffle", half_dup).collect())
     finally:
         spark.conf.set(conf, saved)
 
     assert estimate_dup_fraction(pages) <= BROADCAST_DUP_FRACTION_MAX
-    half_dup = pages.select("url", "warc_ts", F.lit("same text").alias("text"))
     assert estimate_dup_fraction(half_dup) > BROADCAST_DUP_FRACTION_MAX
 
 
 def test_verdict_plans_build_without_jobs(spark, jobs_run_by):
-    """Building compute_verdicts submits no Spark job: auto needs no dedup
-    sketch."""
+    """Building compute_verdicts submits no Spark job: Spark's size
+    statistics let auto broadcast the loser set without its dedup sketch."""
     pages = pages_df(spark, 400, partitions=4)
     assert jobs_run_by(lambda: compute_verdicts(pages)) == set()
 
@@ -212,7 +217,7 @@ def test_verdict_plans_build_without_jobs(spark, jobs_run_by):
 #: py4j round trips to build compute_verdicts(pages) plus
 #: minhash_candidate_pairs(pages), measured on PySpark 4.1.2 (3,824
 #: before the wide projections were parsed from SQL text)
-PLAN_BUILD_ROUND_TRIPS = 1_002
+PLAN_BUILD_ROUND_TRIPS = 1_012
 
 
 def test_plan_building_py4j_budget(spark, py4j_calls):
