@@ -32,8 +32,9 @@ def execute_historical_completeness_check(spark: SparkSession, rule: dict, param
     lb = int(params.get("lookback_days", C.HIST_LOOKBACK_DAYS))
 
     df = spark.table(src).withColumn("_d", F.to_date(F.col(date_col)))
-    maxd = df.agg(F.max("_d")).first()[0]
-    md = F.lit(maxd)
+    # the anchor is a scalar subquery of the main job, not an action of its
+    # own before it
+    md = df.agg(F.max("_d")).scalar()
 
     # Window anchors per the reference's max-date fallback (:893-905):
     # window_start = maxd − lb (actual is >= window_start, :1030-1032),
@@ -92,7 +93,7 @@ def execute_historical_completeness_check(spark: SparkSession, rule: dict, param
             F.lit(rule["rule_id"]).alias("rule_id"),
             F.lit(rule["rule_name"]).alias("rule_name"),
             "dataset_name",
-            F.lit(str(maxd)).alias("data_date"),
+            md.cast("string").alias("data_date"),
             F.col("actual_count").alias("actual_60_day_count"),
             F.col("expected_count").alias("expected_60_day_count"),
             "deviation", "deviation_percentage",

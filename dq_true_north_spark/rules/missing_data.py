@@ -37,15 +37,19 @@ def execute_missing_data_nulls_check(spark: SparkSession, rule: dict, params: di
     name = rule["rule_name"]
 
     df = spark.table(src).withColumn("_d", F.to_date(F.col(date_col)))
-    maxd = df.agg(F.max("_d")).first()[0]
-    on_t1 = F.col("_d") == F.lit(maxd)                               # :411
-    on_t2 = F.col("_d") == F.date_sub(F.lit(maxd), 1)                # :456
     # :431-438; a literal false when no column is declared
     null_pred = reduce(lambda a, b: a | b, [F.col(c).isNull() for c in nn_cols], F.lit(False))
-    # the T count, the T-1 count and the null count in one scan
-    c1, c2, n_nulls = df.agg(
-        F.count_if(on_t1), F.count_if(on_t2), F.count_if(on_t1 & null_pred)
+    # T, the T count, the T-1 count and the null count in one collect: the
+    # counts are anchored on T as a scalar subquery of the same job
+    md = df.agg(F.max("_d")).scalar()
+    maxd, c1, c2, n_nulls = df.agg(
+        F.max("_d"),
+        F.count_if(F.col("_d") == md),
+        F.count_if(F.col("_d") == F.date_sub(md, 1)),
+        F.count_if((F.col("_d") == md) & null_pred),
     ).first()
+    on_t1 = F.col("_d") == F.lit(maxd)                               # :411
+    on_t2 = F.col("_d") == F.date_sub(F.lit(maxd), 1)                # :456
 
     # (1) timeliness
     if c1 == 0:

@@ -13,6 +13,17 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = "32"
 
+# Entries in Spark's generated-class cache (spark.sql.codegen.cache.maxEntries,
+# default 100). One DEFAULT_CATALOG run with a result sink generates about 150
+# classes (154-157 on the seed-7 benchmark tables) and a corpus_10k iteration
+# about 105, so at the default the LRU evicts a run's classes before the next
+# run asks for them: every repeated catalog run recompiled 145-147 classes and
+# every corpus iteration 62 (seed 7, 4 cores), each then run as cold bytecode.
+# 2000 holds ~13 such runs. Holding the test suite's ~1,500 classes (10.9 MB of
+# generated source) left the live heap after a full GC within 40 MB of the
+# default's.
+CODEGEN_CACHE_ENTRIES = "2000"
+
 
 def get_spark(
     app_name: str = "dq_true_north_spark",
@@ -20,6 +31,11 @@ def get_spark(
     shuffle_partitions: str | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
+    """Build the session with the confs below, or return the active one.
+
+    The codegen cache size is a static SQL conf: it takes effect only when
+    this call creates the session. A getOrCreate() that attaches to an
+    existing session keeps that session's static confs."""
     # executor Python workers inherit the JVM's PYTHONPATH, NOT the driver's
     # sys.path — make the package importable on workers whatever the cwd
     # (the cluster-mode equivalent is spark-submit --py-files)
@@ -43,6 +59,9 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
+        # a repeated run reuses its generated classes instead of recompiling
+        # them (see CODEGEN_CACHE_ENTRIES)
+        .config("spark.sql.codegen.cache.maxEntries", CODEGEN_CACHE_ENTRIES)
         .config(
             "spark.sql.shuffle.partitions",
             shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS,

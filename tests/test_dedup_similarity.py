@@ -432,6 +432,42 @@ def test_keep_representatives_auto_strategy(spark):
     assert got_hi == want_hi == {"a"}
 
 
+def test_keep_representatives_counts_only_when_statistics_cannot_decide(
+        spark, jobs_run_by):
+    """On the driver-finish path the loser set is a LocalRelation whose size
+    Spark knows, so the auto strategy broadcasts it without counting:
+    building keep_representatives submits exactly the jobs of
+    star_contract_clusters. With broadcasting ruled out by the statistics,
+    the 10% rule counts the losers and the corpus, and the rows stay the
+    same."""
+    from dq_true_north_spark.textquality.dedup import (
+        keep_representatives,
+        star_contract_clusters,
+    )
+
+    pairs = spark.createDataFrame(
+        [("b", "a"), ("x", "y")], "doc_a string, doc_b string"
+    )
+    docs = spark.createDataFrame(
+        [(c, c) for c in "abcdefghijklmnopqrstuvwxyz"], "url string, text string"
+    )
+    star = len(jobs_run_by(lambda: star_contract_clusters(pairs)))
+    built = []
+    assert len(jobs_run_by(lambda: built.append(keep_representatives(docs, pairs)))) == star
+    want = {r["url"] for r in built[0].collect()}
+    assert want == set("acdefghijklmnopqrstuvwxz")
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        counted = len(jobs_run_by(lambda: built.append(keep_representatives(docs, pairs))))
+        assert counted > star, (counted, star)
+        assert {r["url"] for r in built[1].collect()} == want
+    finally:
+        spark.conf.set(key, saved)
+
+
 def test_lsh_pairs_never_emit_self_pairs(spark):
     """A reused id (the synthetic corpus's class 13 url reuse) must not
     produce doc_a == doc_b rows (round-2 ADVICE #2)."""
