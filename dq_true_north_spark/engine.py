@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 from . import constants as C
 from .io import NullSink, ResultSink, local_rows
 from .rules.base import RuleResult
-from .rules.duplicates import execute_duplicate_check
+from .rules.duplicates import execute_duplicate_check, execute_uniqueness_sql
 from .rules.historical import execute_historical_completeness_check
 from .rules.missing_data import execute_missing_data_nulls_check
 from .rules.negative_values import execute_negative_value_check
@@ -35,7 +35,6 @@ from .rules.sql_rule import (
     execute_completeness_sql,
     execute_generic_sql,
     execute_rolling_average,
-    execute_uniqueness_sql,
 )
 from .rules.trend import execute_sustained_trend_check
 
@@ -95,24 +94,21 @@ def run_catalog(
     spark: SparkSession,
     rules: list[dict],
     sink: ResultSink | None = None,
-    write_summary: bool = True,
-    parallelism: int | None = None,
 ) -> DataFrame:
     """Execute every active rule; return the dq_results summary DataFrame.
 
     The reference iterates rules strictly sequentially (dq_engine.py:87) —
     correct for a warehouse, wasteful on Spark where independent rule jobs
     can be scheduled concurrently from driver threads (FIFO scheduler
-    interleaves their stages across idle cores). parallelism=1 reproduces
-    the reference behavior exactly; isolation semantics are unchanged
-    because each rule already owns its errors.
+    interleaves their stages across idle cores); isolation semantics are
+    unchanged because each rule already owns its errors.
 
-    parallelism=None (default) sizes the dispatch pool to the active rule
-    count, capped at 16: per-rule driver round trips, not data, dominate
-    rule latency, so splitting the catalog into waves only serializes the
-    tail (measured round 6: the 12-rule default catalog ran ~0.3-0.5 s
-    faster in one wave than in 8+4). The cap bounds concurrent driver
-    threads; executors are protected by the FIFO scheduler either way.
+    The dispatch pool is sized to the active rule count, capped at 16:
+    per-rule driver round trips, not data, dominate rule latency, so
+    splitting the catalog into waves only serializes the tail (measured
+    round 6: the 12-rule default catalog ran ~0.3-0.5 s faster in one wave
+    than in 8+4). The cap bounds concurrent driver threads; executors are
+    protected by the FIFO scheduler either way.
 
     Each rule output is one Spark job, and the verdict count comes from
     that job (the sink's observed row count, or an Observation on the same
@@ -131,17 +127,15 @@ def run_catalog(
     # bootstrap the result plane before the run (dq_engine.py:33-45)
     sink.ensure(spark, "dq_results", DQ_RESULTS_SCHEMA)
 
-    if parallelism is None:
-        parallelism = min(16, len(active)) or 1
-    if parallelism <= 1 or len(active) <= 1:
+    if len(active) <= 1:
         summary_rows = [_run_one(spark, rule, sink) for rule in active]
     else:
         from concurrent.futures import ThreadPoolExecutor
 
-        with ThreadPoolExecutor(max_workers=parallelism) as pool:
+        with ThreadPoolExecutor(max_workers=min(16, len(active))) as pool:
             summary_rows = list(pool.map(lambda r: _run_one(spark, r, sink), active))
     summary = local_rows(spark, summary_rows, DQ_RESULTS_SCHEMA)
-    if write_summary and not isinstance(sink, NullSink):
+    if not isinstance(sink, NullSink):
         sink.append(summary, "dq_results")
     return summary
 

@@ -12,12 +12,25 @@ Reference parity cites are in each query's docstring (file:line into
 
 from __future__ import annotations
 
+import json
 from collections.abc import Callable
 
 import pandas as pd   # module-level: pandas-UDF type hints must resolve
 from pyspark.sql import DataFrame, SparkSession
 
 from . import constants as C
+from .catalog import DEFAULT_CATALOG, summary_oracle_sql
+from .engine import run_catalog
+from .rules import (
+    duplicates,
+    historical,
+    missing_data,
+    negative_values,
+    sigma,
+    spike_dip,
+    sql_rule,
+    trend,
+)
 from .session import load_tables
 from .textquality import spec
 from .textquality.spec import DUCK, SPARK
@@ -97,7 +110,6 @@ _DRIVER_WINDOW = 50
 #                           (HLL sketch values are engine-specific,
 #                           rows-only)
 #   token_budget_packs    — the single-reducer spec form of ..._sharded
-#   dup_orders_cust_date  — same duplicate executor as dup_details_orders
 #   doc_top_bigram_fraction — supplementary quality metric (doc_quality_score
 #                           is the §2 evidence)
 #   ngram_jaccard_pairs   — 1-row result, near-redundant with
@@ -197,20 +209,10 @@ def _par_scan(d: str, table: str) -> str:
     return f"(SELECT /*+ REPARTITION({n}) */ * FROM {table}) {table}"
 
 
-def _str_t(d: str) -> str:
-    return "STRING" if d == SPARK else "VARCHAR"
-
-
 def _datediff_days(d: str, start: str, end: str) -> str:
     if d == SPARK:
         return f"datediff({end}, {start})"
     return f"datediff('day', {start}, {end})"
-
-
-def _date_sub(d: str, col: str, n: str | int) -> str:
-    if d == SPARK:
-        return f"date_sub({col}, {n})"
-    return f"({col} - INTERVAL ({n}) DAY)"
 
 
 def knuth_hash32(col: str) -> str:
@@ -392,7 +394,7 @@ def q_deterministic_sample(d: str) -> str:
     and no state — rand()-based sampling is none of those. '4000'/'10000'
     = a 25% target rate. Same hash-bucket idea as the dedup keys; md5 is
     bit-identical across Spark and DuckDB (proven by doc_exact_dup_groups)."""
-    st = _str_t(d)
+    st = spec.str_t(d)
     h = f"substr(md5(concat('sample-seed-1:', CAST(doc_id AS {st}))), 1, 4)"
     return f"""
 SELECT doc_id, lang, {h} AS sample_bucket
@@ -407,7 +409,7 @@ def q_stratified_sample(d: str) -> str:
     tie-break — how a balanced training mix is drawn from a skewed corpus.
     One window per stratum; at 100 TB the partition key is the stratum, so
     the shuffle is exactly the groupBy a quota sample requires."""
-    st = _str_t(d)
+    st = spec.str_t(d)
     h = f"md5(concat('strata-seed-7:', CAST(doc_id AS {st})))"
     return f"""
 WITH ranked AS (
@@ -765,165 +767,61 @@ FROM lineitem l
 WHERE NOT EXISTS (SELECT 1 FROM part p WHERE p.p_partkey = l.l_partkey)"""
 
 
-# ============================================================== dup rules ==
+# ============================================================ rule families ==
+# Each entry is its family's own renderer (rules/*.py) bound to a
+# DEFAULT_CATALOG rule: the oracle checks the SQL the engine runs, and the
+# rows are that rule's detail rows.
+
+
+def _bound(rule_id: int, **override) -> tuple[dict, dict]:
+    rule = next(r for r in DEFAULT_CATALOG if r["rule_id"] == rule_id)
+    return rule, {**json.loads(rule["parameters"]), **override}
 
 
 @sql_query("dup_details_orders")
 def q_dup_details_orders(d: str) -> str:
-    """The duplicate rule's DETAIL rows — group keys packed into a JSON
-    object column, the rebuild of the reference's VARIANT object_construct
-    (dq_rules_library.py:331-345 → DQ_DUPLICATE_DETAILS). to_json output is
-    byte-identical across Spark and DuckDB for these field types."""
-    if d == SPARK:
-        packed = (
-            "to_json(struct(o_custkey, "
-            "CAST(CAST(o_orderdate AS DATE) AS STRING) AS order_date))"
-        )
-    else:
-        packed = (
-            "to_json(struct_pack(o_custkey := o_custkey, "
-            "order_date := CAST(CAST(o_orderdate AS DATE) AS VARCHAR)))"
-        )
-    return f"""
-SELECT 'orders_cust_date_dups' AS rule_name,
-       {packed} AS duplicate_values,
-       COUNT(*) AS duplicate_count
-FROM orders
-GROUP BY 2
-HAVING COUNT(*) > 1"""
-
-
-@sql_query("dup_orders_cust_date")
-def q_dup_orders(d: str) -> str:
-    """execute_duplicate_check semantics (dq_rules_library.py:280-369):
-    group by normalized key columns, keep groups with count > 1."""
-    return f"""
-SELECT o_custkey,
-       CAST(CAST(o_orderdate AS DATE) AS {_str_t(d)}) AS order_date,
-       COUNT(*) AS duplicate_count
-FROM orders
-GROUP BY o_custkey, CAST(CAST(o_orderdate AS DATE) AS {_str_t(d)})
-HAVING COUNT(*) > 1"""
+    """DUPLICATE_CHECK (rule 2) over non-timestamp columns: rule 2 packs
+    o_orderdate, a timestamp, and Spark's to_json writes a timestamp as
+    1998-10-03T00:00:00.000 where DuckDB writes 1998-10-03 00:00:00."""
+    return duplicates.render(d, *_bound(2, columns_to_check=["o_custkey", "o_orderstatus"]))
 
 
 @sql_query("uniqueness_lineitem")
 def q_uniqueness_lineitem(d: str) -> str:
-    """UNIQUENESS rule (dq_rules_library.py:67-99): violation groups on the
-    declared primary key; PASS state == empty result."""
-    return """
-SELECT l_orderkey, l_linenumber, COUNT(*) AS duplicate_count
-FROM lineitem
-GROUP BY l_orderkey, l_linenumber
-HAVING COUNT(*) > 1"""
-
-
-# ========================================================== monitor rules ==
+    """UNIQUENESS (rule 1): duplicate groups of the declared primary key."""
+    return duplicates.render_uniqueness(d, *_bound(1))
 
 
 @sql_query("rolling_avg_events")
 def q_rolling_avg(d: str) -> str:
-    """ROLLING_AVERAGE rule (dq_rules_library.py:167-256): windowed average
-    over the trailing {w} rows per segment, then latest row per segment via
-    the QUALIFY ROW_NUMBER()=1 pattern (dq_rules_library.py:204)."""
-    w = C.ROLLING_WINDOW_DAYS
-    return f"""
-WITH win AS (
-  SELECT event_type, event_id, ts, value,
-      AVG(value) OVER (PARTITION BY event_type ORDER BY ts, event_id
-                       ROWS BETWEEN {w - 1} PRECEDING AND CURRENT ROW)
-          AS rolling_avg,
-      ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY ts DESC, event_id DESC)
-          AS rn
-  FROM events
-)
-SELECT event_type, event_id,
-       CAST(ts AS {_str_t(d)}) AS calculation_ts,
-       (floor((rolling_avg) * 1e4 + 0.5) / 1e4) AS average_value
-FROM win WHERE rn = 1"""
+    """ROLLING_AVERAGE (rule 10): latest trailing average per segment."""
+    return sql_rule.render_rolling_average(d, *_bound(10))
 
 
 @sql_query("spike_dip_events")
 def q_spike_dip(d: str) -> str:
-    """SPIKE/DIP rule (dq_rules_library.py:512-630): per-segment lag(1),
-    pct_change guarded by prev IS NOT NULL AND prev != 0
-    (dq_rules_library.py:551-556), breach iff |pct| >= threshold (0.50,
-    dq_rules_library.py:538). Display columns carry SIGN (dips are
-    negative), so they round half-away-from-zero (spec.round4_signed,
-    ADVICE r3 #3) — identical to round4 for non-negative values."""
-    return f"""
-WITH lagged AS (
-  SELECT event_type, event_id, ts, value,
-      LAG(value, 1) OVER (PARTITION BY event_type ORDER BY ts, event_id)
-          AS prev_value
-  FROM events
-)
-SELECT event_type, event_id,
-       CAST(ts AS {_str_t(d)}) AS event_ts,
-       {spec.round4_signed('value')} AS metric_value,
-       {spec.round4_signed('prev_value')} AS previous_metric_value,
-       {spec.round4_signed('(value - prev_value) / prev_value')} AS percent_change
-FROM lagged
-WHERE prev_value IS NOT NULL AND prev_value <> 0
-  AND abs((value - prev_value) / prev_value) >= {C.SPIKE_THRESHOLD}"""
+    """SPIKE_DIP (rule 5): every day-over-day breach."""
+    return spike_dip.render(d, *_bound(5))
 
 
 @sql_query("sustained_trend_events")
 def q_sustained_trend(d: str) -> str:
-    """SNOWPARK_FUNC sustained-trend rule (dq_rules_library.py:1153-1203):
-    gaps-and-islands — lag → is_increasing → running-sum group id →
-    filter is_increasing = 1 (reference :1179 filters BEFORE the groupBy, so
-    trend_length counts only the increasing rows of a streak) →
-    group count >= threshold (here 3 to exercise the rule on random data).
-    The running SUM is CAST to BIGINT: DuckDB types it HUGEINT otherwise and
-    the driver's pandas canonicalization renders it as a float."""
-    return """
-WITH lagged AS (
-  SELECT event_type, event_id, ts, value,
-      LAG(value, 1) OVER (PARTITION BY event_type ORDER BY ts, event_id)
-          AS prev_value
-  FROM events
-), marked AS (
-  SELECT *,
-      CASE WHEN prev_value IS NOT NULL AND value > prev_value THEN 1 ELSE 0 END
-          AS is_increasing
-  FROM lagged
-), grouped AS (
-  SELECT *,
-      CAST(SUM(CASE WHEN is_increasing = 0 THEN 1 ELSE 0 END)
-          OVER (PARTITION BY event_type ORDER BY ts, event_id
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-          AS BIGINT) AS trend_group_id
-  FROM marked
-)
-SELECT event_type, trend_group_id, COUNT(*) AS trend_length
-FROM grouped
-WHERE is_increasing = 1
-GROUP BY event_type, trend_group_id
-HAVING COUNT(*) >= 3"""
+    """SUSTAINED_TREND (rule 6): streaks at or above the threshold."""
+    return trend.render(d, *_bound(6))
 
 
 @sql_query("negative_values")
 def q_negative_values(d: str) -> str:
-    """NEGATIVE_VALUE rule (dq_rules_library.py:634-727). The reference scans
-    once per numeric column; here one unpivoted pass per table, unioned."""
-    s = _str_t(d)
-    return f"""
-SELECT CAST(c_custkey AS {s}) AS record_id,
-       'customer' AS source_table, 'c_acctbal' AS field_name,
-       (floor((c_acctbal) * 1e2 + 0.5) / 1e2) AS negative_value
-FROM customer WHERE c_acctbal < 0
-UNION ALL
-SELECT CAST(s_suppkey AS {s}) AS record_id,
-       'supplier' AS source_table, 's_acctbal' AS field_name,
-       (floor((s_acctbal) * 1e2 + 0.5) / 1e2) AS negative_value
-FROM supplier WHERE s_acctbal < 0"""
+    """NEGATIVE_VALUES (rules 3 and 4): one unpivoted pass per table."""
+    return "\nUNION ALL\n".join(
+        negative_values.render(d, *_bound(rid)) for rid in (3, 4))
 
 
 @sql_query("completeness_orders")
 def q_completeness(d: str) -> str:
     """COMPLETENESS rule (dq_rules_library.py:101-165): expected date vs
     per-segment actual max date, days_missing = gap in days."""
-    s = _str_t(d)
+    s = spec.str_t(d)
     return f"""
 WITH g AS (SELECT CAST(MAX(o_orderdate) AS DATE) AS expected_date FROM orders),
 seg AS (
@@ -939,100 +837,21 @@ FROM seg CROSS JOIN g"""
 
 @sql_query("missing_permutations_events")
 def q_missing_permutations(d: str) -> str:
-    """MISSING_DATA sub-check 3 (dq_rules_library.py:461-463): distinct
-    segment permutations present on day T-1 but absent on day T —
-    set difference (subtract → EXCEPT → left-anti join under Catalyst)."""
-    return f"""
-WITH g AS (SELECT CAST(MAX(ts) AS DATE) AS maxd FROM events),
-t1 AS (
-  SELECT DISTINCT event_type, user_id FROM events, g
-  WHERE CAST(ts AS DATE) = g.maxd
-),
-t2 AS (
-  SELECT DISTINCT event_type, user_id FROM events, g
-  WHERE CAST(ts AS DATE) = {_date_sub(d, "g.maxd", 1)}
-)
-SELECT event_type, user_id FROM t2
-EXCEPT
-SELECT event_type, user_id FROM t1"""
+    """MISSING_DATA_NULLS (rule 7), sub-check 3: permutations on T-1
+    absent on T."""
+    return missing_data.render(d, *_bound(7))
 
 
 @sql_query("historical_completeness_events")
 def q_historical_completeness(d: str) -> str:
-    """HISTORICAL_COMPLETENESS rule (dq_rules_library.py:806-1150). The
-    reference loops datasets × 4 scalar SUM queries (:931-1045); rebuilt as
-    ONE conditional-sum aggregate pass (SURVEY.md §2.1 #10). Window anchors
-    match the reference's max-date fallback exactly (:893-905):
-    window_start = newest − lookback (actual is >= window_start, :1030-1032),
-    dropped_day  = newest − (lookback + 1) (:895),
-    prev_cum     = [window_start, newest) (:1007-1010),
-    expected = prev_cumulative − dropped_day + newest_day (:1049),
-    deviation_pct = |actual−expected|/expected, 0.0 when expected = 0
-    (:1063-1067), FAIL iff > tolerance 0.05 (:831,1066). With these
-    boundaries deviation ≡ dropped_day_count, so the rule fires exactly when
-    the day that just rolled out of the window carried > tolerance of it."""
-    lb = C.HIST_LOOKBACK_DAYS
-    expected = "(previous_cumulative_count - dropped_day_count + newest_day_count)"
-    dev = f"(actual_count - {expected})"
-    pct = (
-        f"CASE WHEN {expected} = 0 THEN 0.0 "
-        f"ELSE abs(CAST({dev} AS DOUBLE)) / {expected} END"
-    )
-    return f"""
-WITH g AS (SELECT CAST(MAX(ts) AS DATE) AS maxd FROM events),
-agg AS (
-  SELECT event_type AS dataset_name,
-      CAST(SUM(CASE WHEN CAST(ts AS DATE) >= {_date_sub(d, "g.maxd", lb)}
-               THEN 1 ELSE 0 END) AS BIGINT) AS actual_count,
-      CAST(SUM(CASE WHEN CAST(ts AS DATE) >= {_date_sub(d, "g.maxd", lb)}
-                AND CAST(ts AS DATE) < g.maxd
-               THEN 1 ELSE 0 END) AS BIGINT) AS previous_cumulative_count,
-      CAST(SUM(CASE WHEN CAST(ts AS DATE) = {_date_sub(d, "g.maxd", lb + 1)}
-               THEN 1 ELSE 0 END) AS BIGINT) AS dropped_day_count,
-      CAST(SUM(CASE WHEN CAST(ts AS DATE) = g.maxd THEN 1 ELSE 0 END)
-          AS BIGINT) AS newest_day_count
-  FROM events, g
-  GROUP BY event_type
-)
-SELECT dataset_name, actual_count, previous_cumulative_count,
-    dropped_day_count, newest_day_count,
-    {expected} AS expected_count,
-    {dev} AS deviation,
-    (floor(({pct}) * 1e4 + 0.5) / 1e4) AS deviation_percentage,
-    CAST(CASE WHEN {pct} > {C.HIST_TOLERANCE}
-        THEN 1 ELSE 0 END AS INT) AS is_breach
-FROM agg"""
+    """HISTORICAL_COMPLETENESS (rule 8): one row per dataset."""
+    return historical.render(d, *_bound(8))
 
 
 @sql_query("sigma_bands_events")
 def q_sigma_bands(d: str) -> str:
-    """σ-band anomaly flagging — the pure-Spark replacement for the Cortex ML
-    anomaly rule (SURVEY.md §2.1 #9), matching the dashboard's own math:
-    rolling avg/stddev over trailing 60 rows, flag |x − avg| > 3σ
-    (streamlit.py:1151-1153,1174-1178,1211-1213)."""
-    s = _str_t(d)
-    w = C.ROLLING_WINDOW_DAYS
-    return f"""
-WITH daily AS (
-  SELECT event_type, CAST(ts AS DATE) AS event_date,
-         SUM(value) AS daily_total
-  FROM events GROUP BY event_type, CAST(ts AS DATE)
-), banded AS (
-  SELECT event_type, event_date, daily_total,
-      AVG(daily_total) OVER (PARTITION BY event_type ORDER BY event_date
-          ROWS BETWEEN {w - 1} PRECEDING AND 1 PRECEDING) AS avg_value,
-      STDDEV_SAMP(daily_total) OVER (PARTITION BY event_type ORDER BY event_date
-          ROWS BETWEEN {w - 1} PRECEDING AND 1 PRECEDING) AS std_value
-  FROM daily
-)
-SELECT event_type, CAST(event_date AS {s}) AS event_date,
-    {spec.round4_signed('daily_total')} AS daily_total,
-    {spec.round4_signed('avg_value')} AS avg_value,
-    (floor((std_value) * 1e4 + 0.5) / 1e4) AS std_value,
-    CAST(CASE WHEN std_value IS NOT NULL
-              AND abs(daily_total - avg_value) > {C.SIGMA_BAND} * std_value
-         THEN 1 ELSE 0 END AS INT) AS is_anomaly
-FROM banded"""
+    """ANOMALY_SIGMA (rule 9): days outside the trailing 3σ band."""
+    return sigma.render(d, *_bound(9))
 
 
 # ================================================= dashboard analytics =====
@@ -1044,7 +863,7 @@ def q_sigma_warning_zone(d: str) -> str:
     INCLUDING the current row (window -59..0, :1212), then keep rows where
     the actual sits strictly between the 2σ and 3σ bands; zone label by side
     of the rolling average (:1221-1222)."""
-    s = _str_t(d)
+    s = spec.str_t(d)
     w = C.ROLLING_WINDOW_DAYS
     return f"""
 WITH daily AS (
@@ -1100,7 +919,7 @@ def q_sessionization(d: str) -> str:
     starts a new session — the general form of the sustained-trend pattern
     (lag → boundary flag → running sum → group), aggregated to per-session
     stats. One window + one aggregate, both partial-aggregated."""
-    s = _str_t(d)
+    s = spec.str_t(d)
     if d == SPARK:
         gap = "(unix_timestamp(ts) - unix_timestamp(prev_ts)) > 1800"
     else:
@@ -1248,7 +1067,7 @@ def q_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_top_k_days(d: str) -> str:
     """Top-k chart bound (streamlit.py:1109,1162,1214: sort desc + limit) —
     Spark executes this as TakeOrderedAndProject, no full sort."""
-    s = _str_t(d)
+    s = spec.str_t(d)
     return f"""
 SELECT event_type, CAST(event_date AS {s}) AS event_date,
        (floor((daily_total) * 1e4 + 0.5) / 1e4) AS daily_total
@@ -1265,7 +1084,7 @@ def q_spike_overlay(d: str) -> str:
     """Spike overlay: daily series LEFT JOIN spike-event days — the one
     join in the reference, done client-side in pandas (streamlit.py:1114);
     here it is a server-side broadcastable left join."""
-    s = _str_t(d)
+    s = spec.str_t(d)
     return f"""
 WITH daily AS (
   SELECT event_type, CAST(ts AS DATE) AS event_date, SUM(value) AS daily_total
@@ -2177,23 +1996,14 @@ def _engine_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full catalog run through the dispatch engine (dq_engine.py:87-138):
     one summary row per rule, FAIL iff violation count > 0. Detail writes go
     to a NullSink so the query is side-effect-free and deterministic."""
-    from .catalog import DEFAULT_CATALOG
-    from .engine import run_catalog
-
     load_tables(spark, sf_dir, TABLES)
     rules = [dict(r) for r in DEFAULT_CATALOG]
-    return run_catalog(spark, rules, sink=None, write_summary=False).select(
+    return run_catalog(spark, rules).select(
         "rule_id", "rule_name", "rule_type", "result_value", "indicator"
     )
 
 
-def _register_engine_summary() -> None:
-    from .catalog import summary_oracle_sql
-
-    _REGISTRY["dq_engine_summary"] = {
-        "spark": _engine_summary,
-        "oracle": summary_oracle_sql(),
-    }
-
-
-_register_engine_summary()
+_REGISTRY["dq_engine_summary"] = {
+    "spark": _engine_summary,
+    "oracle": summary_oracle_sql(),
+}

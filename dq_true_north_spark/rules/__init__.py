@@ -1,5 +1,12 @@
-"""Rule-family executors — the 8 reference rule families
-(dq_rules_library.py) re-expressed as Catalyst plans.
+"""Rule families — the 8 reference rule families (dq_rules_library.py)
+re-expressed as SQL renderers.
+
+Each parameterized family has one renderer,
+    render(dialect, rule: dict, params: dict) -> str,
+emitting its detail rows as Spark SQL or DuckDB SQL (textquality.spec's
+dialect helpers; catalog names quoted, never spliced). The engine runs the
+SPARK rendering; the query registry binds the same renderer to a
+DEFAULT_CATALOG rule, so its DuckDB oracle checks the SQL the engine runs.
 
 Every executor has the same contract:
     execute(spark, rule: dict, params: dict, sink) -> RuleResult

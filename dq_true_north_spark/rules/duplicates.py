@@ -3,46 +3,68 @@
 Reference: execute_duplicate_check (dq_rules_library.py:280-369) —
 normalize columns (upper-case some, round some), groupBy all check columns,
 keep groups with count > 1, JSON-pack group keys into the details table,
-FAIL iff any group exists. The group count is the row count of the detail
-write itself: one job, where the reference caches the frame and counts it
-first.
+FAIL iff any group exists. The UNIQUENESS SQL flavor (:67-99) is the same
+group count over a catalog-authored row set, so both families render
+through ``groups``. The group count is the row count of the detail write
+itself: one job, where the reference caches the frame and counts it first.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
+import re
 
-from .base import RuleResult
+from ..textquality.spec import SPARK, ident, lit, table, to_json
+from .base import RuleResult, append_rendered
+
+TABLE = "dq_duplicate_details"
 
 
-def execute_duplicate_check(spark: SparkSession, rule: dict, params: dict, sink) -> RuleResult:
-    src = params["source_table"]
-    cols = params["columns_to_check"]
-    upper_cols = set(params.get("case_insensitive_columns", []))
-    round_cols = params.get("numeric_columns_to_round", {})
-    details_table = params.get("details_table", "dq_duplicate_details")
+def groups(d: str, rule: dict, inner: str) -> str:
+    """Duplicate groups of a row set: every column of ``inner`` is a key,
+    packed whole into one JSON object (the VARIANT object_construct,
+    :331-336)."""
+    row = "struct(*)" if d == SPARK else "dq_row"
+    return f"""
+SELECT {lit(d, rule["rule_name"])} AS rule_name,
+       {to_json(d, "k")} AS duplicate_values,
+       COUNT(1) AS duplicate_count
+FROM (SELECT {row} AS k FROM ({inner}) dq_row) g
+GROUP BY k
+HAVING COUNT(1) > 1"""
 
-    df = spark.table(src)
+
+def render(d: str, rule: dict, params: dict) -> str:
+    """DUPLICATE_CHECK: normalized check columns (:310-313), then groups.
+    ``numeric_columns_to_round`` uses the engine's native round(): Spark and
+    DuckDB disagree at half-boundaries, so no oracle renders it."""
+    upper = set(params.get("case_insensitive_columns", []))
+    digits = params.get("numeric_columns_to_round", {})
     norm = []
-    for c in cols:
-        col = F.col(c)
-        if c in upper_cols:
-            col = F.upper(col)                     # dq_rules_library.py:310
-        if c in round_cols:
-            col = F.round(col, int(round_cols[c]))  # dq_rules_library.py:311-313
-        norm.append(col.alias(c))
+    for c in params["columns_to_check"]:
+        e = ident(d, c)
+        if c in upper:
+            e = f"upper({e})"
+        if c in digits:
+            e = f"round({e}, {int(digits[c])})"
+        norm.append(f"{e} AS {ident(d, c)}")
+    return groups(d, rule, f"SELECT {', '.join(norm)} FROM {table(d, params['source_table'])}")
 
-    groups = (
-        df.select(*norm)
-        .groupBy(*[F.col(c) for c in cols])
-        .agg(F.count(F.lit(1)).alias("duplicate_count"))  # :318-321
-        .filter(F.col("duplicate_count") > 1)
-    )
-    details = groups.select(
-        F.lit(rule["rule_name"]).alias("rule_name"),
-        # VARIANT object_construct (:331-336) → JSON string column
-        F.to_json(F.struct(*[F.col(c) for c in cols])).alias("duplicate_values"),
-        F.col("duplicate_count"),
-    )
-    return RuleResult.from_count(sink.append(details, details_table))
+
+def render_uniqueness(d: str, rule: dict, params: dict) -> str:
+    """UNIQUENESS: logic_definition holds the inner row-set query directly;
+    catalogs migrated from the reference may instead hold its outer
+    `SELECT COUNT(*) FROM (SELECT ...) as dupes` form, whose inner query is
+    extracted with the reference's own regex (dq_rules_library.py:69-72)."""
+    logic = rule["logic_definition"]
+    m = re.search(r"\((SELECT.*)\)\s+as\s+dupes", logic, re.IGNORECASE | re.DOTALL)
+    return groups(d, rule, m.group(1) if m else logic)
+
+
+def execute_duplicate_check(spark, rule: dict, params: dict, sink) -> RuleResult:
+    return RuleResult.from_count(append_rendered(spark, render, rule, params, sink, TABLE))
+
+
+def execute_uniqueness_sql(spark, rule: dict, params: dict, sink) -> RuleResult:
+    return RuleResult.from_count(
+        append_rendered(spark, render_uniqueness, rule, params, sink, TABLE))
+

@@ -9,98 +9,71 @@ with the window anchored at MAX(date) (the reference's data-lag fallback,
 :874-918, made the primary anchor for determinism).
 
 The reference issues 4 scalar SUM queries per dataset in a Python loop
-(:931-1045) — O(datasets) scans. Rebuild: ONE groupBy(dataset) with four
-conditional sums (F.sum(F.when(...))), a single pass whatever the dataset
-count (SURVEY.md §2.1 #10).
+(:931-1045) — O(datasets) scans. Rebuild: ONE GROUP BY dataset with four
+conditional sums, a single pass whatever the dataset count (SURVEY.md §2.1
+#10).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Observation, SparkSession
+from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
 from .. import constants as C
-from ..textquality.spec import round4_col
-from .base import RuleResult
+from ..textquality.spec import SPARK, date_sub, ident, lit, round4, str_t, table
+from .base import RuleResult, newest_date
+
+TABLE = "dq_historical_completeness_details"
 
 
-def execute_historical_completeness_check(spark: SparkSession, rule: dict, params: dict, sink) -> RuleResult:
-    src = params["source_table"]
-    date_col = params["date_column"]
-    dataset_col = params["dataset_column"]
-    tol = float(params.get("tolerance_threshold", C.HIST_TOLERANCE))
+def render(d: str, rule: dict, params: dict) -> str:
+    src = table(d, params["source_table"])
+    day = f"CAST({ident(d, params['date_column'])} AS DATE)"
+    dataset = ident(d, params["dataset_column"])
+    tol = f"CAST({float(params.get('tolerance_threshold', C.HIST_TOLERANCE))!r} AS DOUBLE)"
     lb = int(params.get("lookback_days", C.HIST_LOOKBACK_DAYS))
+    md = newest_date(d, params)
 
-    df = spark.table(src).withColumn("_d", F.to_date(F.col(date_col)))
-    # the anchor is a scalar subquery of the main job, not an action of its
-    # own before it
-    md = df.agg(F.max("_d")).scalar()
+    def days(cond: str) -> str:
+        return f"CAST(SUM(CASE WHEN {cond} THEN 1 ELSE 0 END) AS BIGINT)"
 
     # Window anchors per the reference's max-date fallback (:893-905):
     # window_start = maxd − lb (actual is >= window_start, :1030-1032),
     # dropped_day = maxd − (lb+1) (:895), prev_cum = [window_start, maxd)
     # (:1007-1010). Deviation therefore equals dropped_day_count, so the
     # rule fires when the day that rolled out of the window carried more
-    # than `tolerance` of it.
-    agg = (
-        df.groupBy(F.col(dataset_col).alias("dataset_name"))
-        .agg(
-            F.sum(F.when(F.col("_d") >= F.date_sub(md, lb), 1).otherwise(0)).alias("actual_count"),
-            F.sum(
-                F.when(
-                    (F.col("_d") >= F.date_sub(md, lb)) & (F.col("_d") < md),
-                    1,
-                ).otherwise(0)
-            ).alias("previous_cumulative_count"),
-            F.sum(F.when(F.col("_d") == F.date_sub(md, lb + 1), 1).otherwise(0)).alias("dropped_day_count"),
-            F.sum(F.when(F.col("_d") == md, 1).otherwise(0)).alias("newest_day_count"),
-        )
-        .withColumn(
-            "expected_count",
-            F.col("previous_cumulative_count") - F.col("dropped_day_count")
-            + F.col("newest_day_count"),                          # :1049
-        )
-        .withColumn("deviation", F.col("actual_count") - F.col("expected_count"))
-        .withColumn(
-            "deviation_percentage",
-            # shared floor-based round4 (spec.round4_col): native round()
-            # is banned in anything a cross-engine consumer might compare
-            # (CLAUDE.md invariant; round-2 ADVICE #3). Value is >= 0 by
-            # abs(), where floor-round == the reference's HALF_UP exactly.
-            round4_col(
-                F.when(F.col("expected_count") == 0, F.lit(0.0))  # :1063-1067
-                .otherwise(
-                    F.abs(F.col("deviation").cast("double"))
-                    / F.col("expected_count")
-                )
-            ),                                                    # :1054-1060
-        )
-        .withColumn(
-            "status",
-            F.when(
-                F.when(F.col("expected_count") == 0, F.lit(0.0)).otherwise(
-                    F.abs(F.col("deviation").cast("double"))
-                    / F.col("expected_count")
-                )
-                > tol,
-                F.lit("FAIL"),
-            ).otherwise(F.lit("PASS")),
-        )
-    )
+    # than `tolerance` of it. expected follows :1049; deviation_pct is 0.0
+    # when expected is 0 (:1063-1067).
+    pct = ("CASE WHEN expected_count = 0 THEN 0.0 "
+           "ELSE abs(CAST(deviation AS DOUBLE)) / expected_count END")
+    return f"""
+SELECT {int(rule["rule_id"])} AS rule_id, {lit(d, rule["rule_name"])} AS rule_name,
+       dataset_name, CAST({md} AS {str_t(d)}) AS data_date,
+       actual_count AS actual_60_day_count, expected_count AS expected_60_day_count,
+       deviation, {round4(pct)} AS deviation_percentage,
+       {tol} AS tolerance_threshold,
+       CASE WHEN {pct} > {tol} THEN 'FAIL' ELSE 'PASS' END AS status,
+       dropped_day_count, newest_day_count, previous_cumulative_count
+FROM (
+  SELECT *, actual_count - expected_count AS deviation
+  FROM (
+    SELECT *, previous_cumulative_count - dropped_day_count + newest_day_count
+              AS expected_count
+    FROM (
+      SELECT dataset_name,
+             {days(f"_d >= {date_sub(d, md, lb)}")} AS actual_count,
+             {days(f"_d >= {date_sub(d, md, lb)} AND _d < {md}")} AS previous_cumulative_count,
+             {days(f"_d = {date_sub(d, md, lb + 1)}")} AS dropped_day_count,
+             {days(f"_d = {md}")} AS newest_day_count
+      FROM (SELECT {dataset} AS dataset_name, {day} AS _d FROM {src}) src
+      GROUP BY dataset_name) agg) e) dev"""
+
+
+def execute_historical_completeness_check(spark, rule: dict, params: dict, sink) -> RuleResult:
     breaches = Observation()                                      # :1066
     sink.append(
-        agg.observe(breaches, F.count_if(F.col("status") == "FAIL").alias("n")).select(
-            F.lit(rule["rule_id"]).alias("rule_id"),
-            F.lit(rule["rule_name"]).alias("rule_name"),
-            "dataset_name",
-            md.cast("string").alias("data_date"),
-            F.col("actual_count").alias("actual_60_day_count"),
-            F.col("expected_count").alias("expected_60_day_count"),
-            "deviation", "deviation_percentage",
-            F.lit(tol).alias("tolerance_threshold"),
-            "status", "dropped_day_count", "newest_day_count",
-            "previous_cumulative_count",
-        ),
-        params.get("details_table", "dq_historical_completeness_details"),
+        spark.sql(render(SPARK, rule, params)).observe(
+            breaches, F.expr("count_if(status = 'FAIL')").alias("n")),
+        params.get("details_table", TABLE),
     )
     return RuleResult.from_count(breaches.get["n"])

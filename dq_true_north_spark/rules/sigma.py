@@ -6,54 +6,41 @@ the dashboard's own band math: trailing rolling mean/stddev, anomaly iff
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession, Window
-from pyspark.sql import functions as F
-
 from .. import constants as C
-from ..textquality.spec import round4_col, round4_signed_col
-from .base import RuleResult
+from ..textquality.spec import ident, json_cols, lit, round4, round4_signed, str_t, table
+from .base import RuleResult, append_rendered, cols, over
+
+TABLE = "dq_anomaly_details"
 
 
-def execute_sigma_band_check(spark: SparkSession, rule: dict, params: dict, sink) -> RuleResult:
-    src = params["source_table"]
-    metric = params["metric_column"]
-    date_col = params["date_column"]
+def render(d: str, rule: dict, params: dict) -> str:
     segs = params.get("segment_columns", [])
     k = float(params.get("sigma", C.SIGMA_BAND))
     w = int(params.get("window_size", C.ROLLING_WINDOW_DAYS))
+    # the band EXCLUDES the current row so a spike can't mask itself
+    band = over(d, segs, ["_d"], frame=f"ROWS BETWEEN {w - 1} PRECEDING AND 1 PRECEDING")
+    keys = cols(d, segs + ["_d"])
+    # metric/avg can be negative -> half-away-from-zero (ADVICE r3 #3);
+    # stddev is non-negative and keeps the default floor-round4
+    return f"""
+SELECT {lit(d, rule["rule_name"])} AS rule_name,
+       {json_cols(d, segs)} AS segment_values,
+       CAST(_d AS {str_t(d)}) AS event_date,
+       {round4_signed('daily_total')} AS metric_value,
+       {round4_signed('avg_value')} AS avg_value,
+       {round4('std_value')} AS std_value
+FROM (
+  SELECT *, AVG(daily_total) {band} AS avg_value,
+         STDDEV_SAMP(daily_total) {band} AS std_value
+  FROM (
+    SELECT {keys}, SUM({ident(d, params["metric_column"])}) AS daily_total
+    FROM (SELECT {cols(d, segs + [params["metric_column"]])},
+                 CAST({ident(d, params["date_column"])} AS DATE) AS _d
+          FROM {table(d, params["source_table"])}) src
+    GROUP BY {keys}) daily) banded
+WHERE std_value IS NOT NULL
+  AND abs(daily_total - avg_value) > CAST({k!r} AS DOUBLE) * std_value"""
 
-    daily = (
-        spark.table(src)
-        .withColumn("_d", F.to_date(F.col(date_col)))
-        .groupBy(*segs, "_d")
-        .agg(F.sum(metric).alias("daily_total"))
-    )
-    # band window EXCLUDES the current row so a spike can't mask itself
-    band = Window.partitionBy(*segs).orderBy("_d").rowsBetween(-(w - 1), -1)
-    flagged = (
-        daily.withColumn("avg_value", F.avg("daily_total").over(band))
-        .withColumn("std_value", F.stddev_samp("daily_total").over(band))
-        .withColumn(
-            "is_anomaly",
-            F.when(
-                F.col("std_value").isNotNull()
-                & (F.abs(F.col("daily_total") - F.col("avg_value")) > k * F.col("std_value")),
-                1,
-            ).otherwise(0),
-        )
-    )
-    n = sink.append(                                              # :792-795
-        flagged.filter(F.col("is_anomaly") == 1).select(
-            F.lit(rule["rule_name"]).alias("rule_name"),
-            (F.to_json(F.struct(*segs)) if segs else F.lit("{}")).alias("segment_values"),
-            F.col("_d").cast("string").alias("event_date"),
-            # metric/avg can be negative -> half-away-from-zero
-            # (ADVICE r3 #3); stddev is non-negative by definition and
-            # keeps the default floor-round4 convention
-            round4_signed_col(F.col("daily_total")).alias("metric_value"),
-            round4_signed_col(F.col("avg_value")).alias("avg_value"),
-            round4_col(F.col("std_value")).alias("std_value"),
-        ),
-        params.get("details_table", "dq_anomaly_details"),
-    )
-    return RuleResult.from_count(n)
+
+def execute_sigma_band_check(spark, rule: dict, params: dict, sink) -> RuleResult:
+    return RuleResult.from_count(append_rendered(spark, render, rule, params, sink, TABLE))  # :792-795

@@ -9,59 +9,51 @@ Default threshold 0.50 (:538).
 
 from __future__ import annotations
 
-from pyspark.sql import Observation, SparkSession, Window
+from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
 from .. import constants as C
-from ..textquality.spec import round4_signed_col
-from .base import RuleResult
+from ..textquality.spec import SPARK, ident, json_cols, lit, round4_signed, str_t, table
+from .base import RuleResult, cols, over
+
+TABLE = "dq_details_spike_dip"
 
 
-def execute_spike_dip_check(spark: SparkSession, rule: dict, params: dict, sink) -> RuleResult:
-    src = params["source_table"]
-    metric = params["metric_column"]
-    ts_col = params["timestamp_col"]
+def render(d: str, rule: dict, params: dict, extra: str = "") -> str:
+    """Every breach: the rows of the detail table, plus any ``extra``
+    select items."""
+    m = ident(d, params["metric_column"])
+    ts = params["timestamp_col"]
     segs = params.get("segment_columns", [])
+    order = [ts] + params.get("tiebreak_columns", [])
     threshold = float(params.get("threshold", C.SPIKE_THRESHOLD))
-    tiebreak = params.get("tiebreak_columns", [])
-    order_cols = [ts_col] + tiebreak
+    # display values carry SIGN (dips are negative): half-away-from-zero,
+    # not the +inf-biased floor-round4 (ADVICE r3 #3)
+    return f"""
+SELECT {lit(d, rule["rule_name"])} AS rule_name,
+       CAST({ident(d, ts)} AS {str_t(d)}) AS event_date,
+       {json_cols(d, segs)} AS segment_values,
+       {round4_signed(m)} AS metric_value,
+       {round4_signed('prev_value')} AS previous_metric_value,
+       {round4_signed('percent_change')} AS percent_change{extra}
+FROM (
+  SELECT *, CASE WHEN prev_value IS NOT NULL AND prev_value <> 0
+                 THEN ({m} - prev_value) / prev_value END AS percent_change
+  FROM (
+    SELECT {cols(d, segs + order + [params["metric_column"]])},
+           LAG({m}, 1) {over(d, segs, order)} AS prev_value,
+           ROW_NUMBER() {over(d, segs, order, desc=True)} AS rn
+    FROM {table(d, params["source_table"])}) lagged) pct
+WHERE abs(percent_change) >= CAST({threshold!r} AS DOUBLE)"""
 
-    df = spark.table(src)
-    w = Window.partitionBy(*segs).orderBy(*[F.col(c) for c in order_cols])
-    lagged = df.withColumn("prev_value", F.lag(metric, 1).over(w))  # :549
-    pct = (
-        lagged.withColumn(
-            "percent_change",
-            F.when(
-                F.col("prev_value").isNotNull() & (F.col("prev_value") != 0),
-                (F.col(metric) - F.col("prev_value")) / F.col("prev_value"),
-            ),                                                      # :551-556
-        )
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy(*segs).orderBy(
-                    *[F.col(c).desc() for c in order_cols]
-                )
-            ),                                                      # :587-593
-        )
-    )
-    breaches = pct.filter(F.abs(F.col("percent_change")) >= threshold)
-    # verdict: latest point per segment only (:597-605), observed on the
-    # same job that writes every breach
+
+def execute_spike_dip_check(spark, rule: dict, params: dict, sink) -> RuleResult:
+    # verdict: breaches on each segment's latest point (:597-605), observed
+    # on the same job that writes every breach
     latest = Observation()
-    n_all = sink.append(
-        breaches.observe(latest, F.count_if(F.col("rn") == 1).alias("n")).select(
-            F.lit(rule["rule_name"]).alias("rule_name"),
-            F.col(ts_col).cast("string").alias("event_date"),
-            (F.to_json(F.struct(*segs)) if segs else F.lit("{}")).alias("segment_values"),
-            # these display values carry SIGN (dips are negative) —
-            # half-away-from-zero, not the +inf-biased floor-round4
-            # (ADVICE r3 #3; same convention as negative_values)
-            round4_signed_col(F.col(metric)).alias("metric_value"),
-            round4_signed_col(F.col("prev_value")).alias("previous_metric_value"),
-            round4_signed_col(F.col("percent_change")).alias("percent_change"),
-        ),
-        params.get("details_table", "dq_details_spike_dip"),
+    breaches = spark.sql(render(SPARK, rule, params, ", rn = 1 AS is_latest"))
+    sink.append(
+        breaches.observe(latest, F.expr("count_if(is_latest)").alias("n")).drop("is_latest"),
+        params.get("details_table", TABLE),
     )
-    return RuleResult.from_count(latest.get["n"], all_breaches=n_all)
+    return RuleResult.from_count(latest.get["n"])

@@ -3,20 +3,20 @@
 Reference: execute_sql_rule (dq_rules_library.py:55-277) — run catalog-
 authored SQL, verdict trichotomy on the first cell of the first row:
 value > 0 → FAIL, NULL → FAIL, zero rows → ERROR (:109-123, :259-267).
-Flavors: UNIQUENESS (inner-query duplicate groups, :67-99), COMPLETENESS
-(1-col count or 4-col detail, :101-165), ROLLING_AVERAGE (generated window
-SQL, :167-256).
+Flavors: COMPLETENESS (1-col count or 4-col detail, :101-165),
+ROLLING_AVERAGE (generated window SQL, :167-256). UNIQUENESS (:67-99) is a
+duplicate-group count and renders in rules/duplicates.py.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession, Window
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from .. import constants as C
 from ..io import local_rows
-from ..textquality.spec import round4_col
-from .base import RuleResult
+from ..textquality.spec import ident, json_cols, lit, round4, str_t, table
+from .base import RuleResult, append_rendered, cols, over
 
 COMPLETENESS_DETAIL_SCHEMA = "rule_name string, expected_date string, actual_max_date string, days_missing int"
 
@@ -33,34 +33,6 @@ def execute_generic_sql(spark: SparkSession, rule: dict, params: dict, sink) -> 
     except (TypeError, ValueError):
         return RuleResult(str(first), C.ERROR, "Non-numeric scalar result")
     return RuleResult.from_count(violations)
-
-
-def execute_uniqueness_sql(spark: SparkSession, rule: dict, params: dict, sink) -> RuleResult:
-    """logic_definition holds the inner row-set query directly; catalogs
-    migrated from the reference may instead hold its outer
-    `SELECT COUNT(*) FROM (SELECT ...) as dupes` form, whose inner query is
-    extracted with the reference's own regex (dq_rules_library.py:69-72)."""
-    import re
-
-    logic = rule["logic_definition"]
-    m = re.search(r"\((SELECT.*)\)\s+as\s+dupes", logic,
-                  re.IGNORECASE | re.DOTALL)
-    inner = spark.sql(m.group(1) if m else logic)
-    cols = inner.columns
-    groups = (
-        inner.groupBy(*cols)
-        .agg(F.count(F.lit(1)).alias("duplicate_count"))
-        .filter(F.col("duplicate_count") > 1)
-    )
-    n = sink.append(
-        groups.select(
-            F.lit(rule["rule_name"]).alias("rule_name"),
-            F.to_json(F.struct(*cols)).alias("duplicate_values"),
-            F.col("duplicate_count"),
-        ),
-        params.get("details_table", "dq_duplicate_details"),
-    )
-    return RuleResult.from_count(n)
 
 
 def execute_completeness_sql(spark: SparkSession, rule: dict, params: dict, sink) -> RuleResult:
@@ -96,40 +68,31 @@ def execute_completeness_sql(spark: SparkSession, rule: dict, params: dict, sink
     return RuleResult.from_count(violations)
 
 
-def execute_rolling_average(spark: SparkSession, rule: dict, params: dict, sink) -> RuleResult:
+def render_rolling_average(d: str, rule: dict, params: dict) -> str:
     """Trailing-window average per segment, latest row per segment via the
-    QUALIFY ROW_NUMBER()=1 pattern (:190-205); always PASS, logs the averages
-    (:239)."""
-    src = params["source_table"]
+    QUALIFY ROW_NUMBER()=1 pattern (:190-205)."""
     metric = params["metric_column"]
     date_col = params["date_column"]
     w = int(params.get("window_size", C.ROLLING_WINDOW_DAYS))
     segs = params.get("segment_columns", [])
-    order_keys = [date_col] + params.get("tiebreak_columns", [])
+    order = [date_col] + params.get("tiebreak_columns", [])
+    frame = f"ROWS BETWEEN {w - 1} PRECEDING AND CURRENT ROW"
+    avg = f"AVG({ident(d, metric)}) {over(d, segs, order, frame=frame)}"
+    return f"""
+SELECT {lit(d, rule["rule_name"])} AS rule_name,
+       {json_cols(d, segs)} AS segment_value,
+       {lit(d, metric)} AS metric_column,
+       average_value,
+       CAST({ident(d, date_col)} AS {str_t(d)}) AS calculation_date
+FROM (
+  SELECT {cols(d, segs + order)}, {round4(avg)} AS average_value,
+         ROW_NUMBER() {over(d, segs, order, desc=True)} AS rn
+  FROM {table(d, params["source_table"])}) win
+WHERE rn = 1"""
 
-    df = spark.table(src)
-    win = (
-        Window.partitionBy(*segs)
-        .orderBy(*[F.col(k) for k in order_keys])
-        .rowsBetween(-(w - 1), 0)
-    )
-    latest = Window.partitionBy(*segs).orderBy(
-        *[F.col(k).desc() for k in order_keys]
-    )
-    out = (
-        df.withColumn("average_value", round4_col(F.avg(metric).over(win)))
-        .withColumn("rn", F.row_number().over(latest))
-        .filter(F.col("rn") == 1)
-        .select(
-            F.lit(rule["rule_name"]).alias("rule_name"),
-            F.to_json(F.struct(*segs)).alias("segment_value") if segs
-            else F.lit("{}").alias("segment_value"),
-            F.lit(metric).alias("metric_column"),
-            F.col("average_value"),
-            F.col(date_col).cast("string").alias("calculation_date"),
-        )
-    )
-    n_segments = sink.append(
-        out, params.get("details_table", "dq_details_rolling_average")
-    )
-    return RuleResult(str(n_segments), C.PASS)  # informational rule (:239)
+
+def execute_rolling_average(spark: SparkSession, rule: dict, params: dict, sink) -> RuleResult:
+    """Always PASS; logs the averages (:239)."""
+    n_segments = append_rendered(spark, render_rolling_average, rule, params, sink,
+                                 "dq_details_rolling_average")
+    return RuleResult(str(n_segments), C.PASS)

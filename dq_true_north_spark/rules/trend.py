@@ -8,51 +8,42 @@ groupBy(segments, group_id).count() → FAIL iff any streak >= threshold
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession, Window
-from pyspark.sql import functions as F
-
 from .. import constants as C
-from .base import RuleResult
+from ..textquality.spec import ident, json_cols, lit, table
+from .base import RuleResult, append_rendered, cols, over
+
+TABLE = "dq_sustained_trend_details"
 
 
-def execute_sustained_trend_check(spark: SparkSession, rule: dict, params: dict, sink) -> RuleResult:
-    src = params["source_table"]
-    metric = params["metric_column"]
-    ts_col = params["timestamp_col"]
+def render(d: str, rule: dict, params: dict) -> str:
+    m = ident(d, params["metric_column"])
     segs = params.get("segment_columns", [])
+    order = [params["timestamp_col"]] + params.get("tiebreak_columns", [])
     threshold = int(params.get("trend_days_threshold", C.TREND_DAYS_THRESHOLD))
-    order_cols = [ts_col] + params.get("tiebreak_columns", [])
+    run = over(d, segs, order, frame="ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW")
+    keys = cols(d, segs + ["trend_group_id"])
+    # the reference filters the non-increasing group-start row BEFORE the
+    # groupBy (:1179), so trend_length counts only the increasing rows
+    return f"""
+SELECT {lit(d, rule["rule_name"])} AS rule_name,
+       {lit(d, ",".join(segs))} AS segment_columns,
+       {json_cols(d, segs)} AS segment_values,
+       trend_length
+FROM (
+  SELECT {keys}, COUNT(1) AS trend_length
+  FROM (
+    SELECT *, SUM(CASE WHEN is_increasing = 0 THEN 1 ELSE 0 END) {run} AS trend_group_id
+    FROM (
+      SELECT *, CASE WHEN prev_value IS NOT NULL AND {m} > prev_value
+                     THEN 1 ELSE 0 END AS is_increasing
+      FROM (
+        SELECT {cols(d, segs + order + [params["metric_column"]])},
+               LAG({m}, 1) {over(d, segs, order)} AS prev_value
+        FROM {table(d, params["source_table"])}) lagged) marked) grouped
+  WHERE is_increasing = 1
+  GROUP BY {keys}
+  HAVING COUNT(1) >= {threshold}) streaks"""
 
-    w = Window.partitionBy(*segs).orderBy(*[F.col(c) for c in order_cols])
-    run = w.rowsBetween(Window.unboundedPreceding, 0)
 
-    df = spark.table(src)
-    streaks = (
-        df.withColumn("prev_value", F.lag(metric, 1).over(w))     # :1176
-        .withColumn(
-            "is_increasing",
-            F.when(
-                F.col("prev_value").isNotNull() & (F.col(metric) > F.col("prev_value")), 1
-            ).otherwise(0),                                       # :1177
-        )
-        .withColumn(
-            "trend_group_id",
-            F.sum(F.when(F.col("is_increasing") == 0, 1).otherwise(0)).over(run),  # :1178
-        )
-        # reference filters the non-increasing group-start row BEFORE the
-        # groupBy (:1179), so trend_length counts only the increasing rows
-        .filter(F.col("is_increasing") == 1)
-        .groupBy(*segs, "trend_group_id")
-        .agg(F.count(F.lit(1)).alias("trend_length"))             # :1179
-        .filter(F.col("trend_length") >= threshold)               # :1180
-    )
-    n = sink.append(
-        streaks.select(
-            F.lit(rule["rule_name"]).alias("rule_name"),
-            F.lit(",".join(segs)).alias("segment_columns"),
-            (F.to_json(F.struct(*segs)) if segs else F.lit("{}")).alias("segment_values"),
-            F.col("trend_length"),
-        ),
-        params.get("details_table", "dq_sustained_trend_details"),
-    )
-    return RuleResult.from_count(n)
+def execute_sustained_trend_check(spark, rule: dict, params: dict, sink) -> RuleResult:
+    return RuleResult.from_count(append_rendered(spark, render, rule, params, sink, TABLE))

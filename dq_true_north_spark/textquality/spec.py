@@ -9,6 +9,9 @@ Python in tests/golden.py — shares the same constants module.
 Reference analog: the reference evaluates per-column checks one scan per
 column (dq_rules_library.py:675-699); here every metric is a column in ONE
 wide select, so the 100 TB corpus is scanned exactly once.
+
+The dialect primitives (types, dates, quoting, JSON) also serve the rule
+renderers in rules/.
 """
 
 from __future__ import annotations
@@ -87,6 +90,54 @@ def arr_intersect(dialect: str, a: str, b: str) -> str:
 
 
 
+def str_t(d: str) -> str:
+    return "STRING" if d == SPARK else "VARCHAR"
+
+
+def date_sub(d: str, col: str, n: str | int) -> str:
+    if d == SPARK:
+        return f"date_sub({col}, {n})"
+    return f"({col} - INTERVAL ({n}) DAY)"
+
+
+def ident(d: str, name: str) -> str:
+    """A quoted identifier. Catalog params are outside input: a column or
+    table name is quoted (its quote character doubled), never spliced."""
+    q = "`" if d == SPARK else '"'
+    return q + name.replace(q, q + q) + q
+
+
+def table(d: str, name: str) -> str:
+    """A quoted, possibly qualified table name (`db.t` quotes each part, as
+    ``spark.table`` reads it)."""
+    return ".".join(ident(d, part) for part in name.split("."))
+
+
+def lit(d: str, s: str) -> str:
+    """A string literal. Both dialects read a doubled quote as a quote;
+    Spark also reads backslash escapes, so its backslashes are doubled."""
+    if d == SPARK:
+        s = s.replace("\\", "\\\\")
+    return "'" + s.replace("'", "''") + "'"
+
+
+def to_json(d: str, expr: str) -> str:
+    """JSON text of a struct. Spark's to_json omits NULL fields; DuckDB's
+    keeps them, so its rendering drops them with an RFC 7396 merge patch."""
+    if d == SPARK:
+        return f"to_json({expr})"
+    return f"json_merge_patch('{{}}', to_json({expr}))"
+
+
+def json_cols(d: str, cols) -> str:
+    """JSON object of the named columns ('{}' for none), keyed by name."""
+    if not cols:
+        return "'{}'"
+    if d == SPARK:
+        return to_json(d, f"struct({', '.join(ident(d, c) for c in cols)})")
+    return to_json(d, "struct_pack(" + ", ".join(
+        f"{ident(d, c)} := {ident(d, c)}" for c in cols) + ")")
+
 
 def round4(expr: str, n: int = 4) -> str:
     """Deterministic cross-engine rounding: floor(x*10^n + 0.5)/10^n.
@@ -125,15 +176,6 @@ def round4_signed(expr: str, n: int = 4) -> str:
     (half-toward-+inf) remains the default for NON-NEGATIVE quantities
     (ratios, fractions, stddevs); sign-carrying display columns use this."""
     return f"(sign({expr}) * floor(abs({expr}) * 1e{n} + 0.5) / 1e{n})"
-
-
-def round4_signed_col(col, n: int = 4):
-    """Column-side rendering of round4_signed (one definition, two call
-    surfaces — same discipline as round4/round4_col)."""
-    from pyspark.sql import functions as F
-
-    return F.signum(col) * F.floor(F.abs(col) * float(10**n) + F.lit(0.5)) \
-        / float(10**n)
 
 
 def word_ngrams(d: str, words_expr: str, n: int) -> str:

@@ -43,9 +43,6 @@ def test_full_catalog_run_with_sink(spark, sink):
     assert persisted.count() == len(DEFAULT_CATALOG)
     assert "execution_timestamp" in persisted.columns
     # a failing rule must have produced detail rows
-    spike = rows["events_value_spike_dip"]
-    if spike.extra if hasattr(spike, "extra") else False:
-        pass
     if int(rows["events_sustained_trend"]["result_value"]) > 0:
         details = sink.read(spark, "dq_sustained_trend_details")
         assert details.count() >= int(rows["events_sustained_trend"]["result_value"])
@@ -73,7 +70,7 @@ def test_error_isolation(spark):
         "parameters": "{}", "segment_value": "", "is_active": True,
     }
     good = dict(DEFAULT_CATALOG[2])
-    summary = run_catalog(spark, [bad, good], write_summary=False)
+    summary = run_catalog(spark, [bad, good])
     rows = {r["rule_name"]: r for r in summary.collect()}
     assert rows["broken_sql"]["indicator"] == C.ERROR
     assert rows["broken_sql"]["error_message"] != ""
@@ -96,7 +93,7 @@ def test_run_catalog_leaves_input_rules_unchanged(spark):
                       rule_name="broken_params", parameters="{not json")
     rules = [bad_sql, bad_params, DEFAULT_CATALOG[2]]
     before = copy.deepcopy(rules)
-    summary = run_catalog(spark, rules, write_summary=False)
+    summary = run_catalog(spark, rules)
     indicators = {r["rule_name"]: r["indicator"] for r in summary.collect()}
     assert indicators["broken_sql"] == C.ERROR
     assert indicators["broken_params"] == C.ERROR
@@ -118,14 +115,14 @@ def test_verdict_trichotomy(spark):
             "logic_implementation": "SQL_QUERY", "logic_definition": sql,
             "parameters": "{}", "segment_value": "", "is_active": True,
         }
-        summary = run_catalog(spark, [rule], write_summary=False)
+        summary = run_catalog(spark, [rule])
         assert summary.first()["indicator"] == expected, sql
 
 
 def test_inactive_rules_skipped(spark):
     rule = dict(DEFAULT_CATALOG[0])
     rule["is_active"] = False
-    summary = run_catalog(spark, [rule], write_summary=False)
+    summary = run_catalog(spark, [rule])
     assert summary.count() == 0
 
 
@@ -137,8 +134,7 @@ def test_cortex_llm_rules_skipped_like_reference(spark):
         "logic_implementation": "CORTEX_LLM", "logic_definition": "",
         "parameters": "{}", "segment_value": "", "is_active": True,
     }
-    summary = run_catalog(spark, [rule, dict(DEFAULT_CATALOG[2])],
-                          write_summary=False)
+    summary = run_catalog(spark, [rule, dict(DEFAULT_CATALOG[2])])
     names = [r["rule_name"] for r in summary.collect()]
     assert names == ["customer_acctbal_negative"]
 
@@ -232,7 +228,7 @@ def test_uniqueness_accepts_reference_outer_form(spark):
     }
     direct = dict(rule, rule_id=92, rule_name="uniq_inner",
                   logic_definition="SELECT l_orderkey, l_linenumber FROM lineitem")
-    summary = run_catalog(spark, [rule, direct], write_summary=False)
+    summary = run_catalog(spark, [rule, direct])
     rows = {r["rule_name"]: r for r in summary.collect()}
     assert rows["uniq_outer"]["result_value"] == rows["uniq_inner"]["result_value"]
     assert rows["uniq_outer"]["indicator"] == rows["uniq_inner"]["indicator"]
@@ -250,7 +246,7 @@ def test_completeness_one_col_arm_derives_expected_date(spark, tmp_path):
         "logic_definition": "SELECT 3 AS missing_days",
         "parameters": "{}", "segment_value": "", "is_active": True,
     }
-    summary = run_catalog(spark, [rule], sink=local_sink, write_summary=False)
+    summary = run_catalog(spark, [rule], sink=local_sink)
     row = summary.first()
     assert row["indicator"] == C.FAIL
     assert row["result_value"] == "3"
@@ -294,7 +290,7 @@ def test_negative_values_default_timestamp_column(spark, tmp_path):
         spark,
         [neg_rule(91, "neg_with_created"), neg_rule(92, "neg_without_created"),
          neg_rule(93, "neg_without_created", timestamp_column="nope")],
-        sink=local_sink, write_summary=False,
+        sink=local_sink,
     )
     rows = {r["rule_name"]: r for r in summary.collect()}
     assert rows["neg_91"]["indicator"] == C.FAIL
@@ -328,7 +324,7 @@ def test_zero_violation_rules_write_no_detail_table(spark, tmp_path):
                         numeric_columns=["amount"], id_column="id"),
          _snowpark_rule(61, "DUPLICATE_CHECK", source_table="zero_violation_src",
                         columns_to_check=["k"])],
-        sink=ResultSink(base), write_summary=False,
+        sink=ResultSink(base),
     )
     assert {(r["result_value"], r["indicator"]) for r in summary.collect()} == {("0", C.PASS)}
     assert os.listdir(base) == ["dq_results"]   # bootstrap table only
@@ -361,7 +357,7 @@ def test_verdict_counts_equal_detail_rows(spark, tmp_path):
     load_tables(spark, SF_DIR, TABLES)
     local_sink = ResultSink(str(tmp_path / "counts"))
     summary = run_catalog(spark, [dict(r) for r in DEFAULT_CATALOG],
-                          sink=local_sink, write_summary=False)
+                          sink=local_sink)
     verdicts = {r["rule_name"]: int(r["result_value"]) for r in summary.collect()
                 if r["rule_type"] not in ("COMPLETENESS", "GENERIC")}
 
@@ -525,8 +521,7 @@ def test_completeness_reads_first_row_only(spark, tmp_path):
         out = {}
         for rid, sql in ((2 * i, many), (2 * i + 1, first)):
             s = ResultSink(str(tmp_path / f"cmp{rid}"))
-            (row,) = run_catalog(spark, [_completeness_rule(rid, sql)], sink=s,
-                                 write_summary=False).collect()
+            (row,) = run_catalog(spark, [_completeness_rule(rid, sql)], sink=s).collect()
             (detail,) = s.read(spark, "dq_details_completeness").drop(
                 "rule_name", "execution_timestamp").collect()
             out[sql] = (row["result_value"], row["indicator"], detail)
@@ -534,10 +529,9 @@ def test_completeness_reads_first_row_only(spark, tmp_path):
     # the collect is bounded: a row past the first is never computed
     (row,) = run_catalog(spark, [_completeness_rule(98, (
         "SELECT IF(id = 0, 3, raise_error('read past the first row')) AS missing "
-        "FROM range(5000)"))], write_summary=False).collect()
+        "FROM range(5000)"))]).collect()
     assert (row["result_value"], row["indicator"]) == ("3", C.FAIL), row
-    (row,) = run_catalog(spark, [_completeness_rule(99, "SELECT id FROM range(0)")],
-                         write_summary=False).collect()
+    (row,) = run_catalog(spark, [_completeness_rule(99, "SELECT id FROM range(0)")]).collect()
     assert (row["indicator"], row["error_message"]) == (C.ERROR, "Query returned no rows")
 
 
@@ -554,7 +548,7 @@ def test_completeness_count_arm_dates_itself(spark, tmp_path, jobs_run_by):
     for rid, (arm, sql) in enumerate(arms.items()):
         s = ResultSink(str(tmp_path / arm))
         jobs[arm] = len(jobs_run_by(lambda: run_catalog(
-            spark, [_completeness_rule(rid, sql)], sink=s, write_summary=False)))
+            spark, [_completeness_rule(rid, sql)], sink=s)))
         (details[arm],) = s.read(spark, "dq_details_completeness").collect()
     assert jobs["count"] == jobs["detail"], jobs
     yesterday = str(spark.sql("SELECT date_sub(current_date(), 1)").first()[0])
@@ -563,3 +557,104 @@ def test_completeness_count_arm_dates_itself(spark, tmp_path, jobs_run_by):
         yesterday, "N/A - Count Check", 2)
     assert (details["detail"]["expected_date"], details["detail"]["days_missing"]) == (
         "2024-01-03", 2)
+
+
+def test_detail_rows_equal_duck_renderings(spark, duck, tmp_path):
+    """At sf0.01 the detail rows the engine writes for each rendered
+    DEFAULT_CATALOG rule (execution_timestamp dropped) equal that rule's
+    DUCK rendering run in DuckDB. Rule 2 packs o_orderdate, a timestamp,
+    whose JSON text differs across the engines, so it is compared on its
+    other columns; MISSING_DATA_NULLS's driver-built rows have no
+    rendering."""
+    from dq_true_north_spark.rules import (
+        duplicates,
+        historical,
+        missing_data,
+        negative_values,
+        sigma,
+        spike_dip,
+        sql_rule,
+        trend,
+    )
+    from dq_true_north_spark.textquality.spec import DUCK
+    from tests.oracle import duck_canon, spark_canon
+
+    def missing(d, rule, params):
+        return (f"SELECT * FROM ({missing_data.render_nulls(d, rule, params)}) n "
+                f"UNION ALL SELECT * FROM ({missing_data.render(d, rule, params)}) p")
+
+    families = {
+        "UNIQUENESS": (duplicates.render_uniqueness, "dq_duplicate_details"),
+        "DUPLICATE_CHECK": (duplicates.render, "dq_duplicate_details"),
+        "NEGATIVE_VALUES": (negative_values.render, "dq_negative_value_details"),
+        "SPIKE_DIP": (spike_dip.render, "dq_details_spike_dip"),
+        "SUSTAINED_TREND": (trend.render, "dq_sustained_trend_details"),
+        "MISSING_DATA_NULLS": (missing, "dq_details_missing_data"),
+        "HISTORICAL_COMPLETENESS": (historical.render, "dq_historical_completeness_details"),
+        "ANOMALY_SIGMA": (sigma.render, "dq_anomaly_details"),
+        "ROLLING_AVERAGE": (sql_rule.render_rolling_average, "dq_details_rolling_average"),
+    }
+    load_tables(spark, SF_DIR, TABLES)
+    rules = [dict(r) for r in DEFAULT_CATALOG if r["rule_type"] in families]
+    assert len(rules) == 10
+    local_sink = ResultSink(str(tmp_path / "rendered"))
+    run_catalog(spark, rules, sink=local_sink)
+    for rule in rules:
+        render, table = families[rule["rule_type"]]
+        got = local_sink.read(spark, table).drop("execution_timestamp").filter(
+            (F.col("rule_name") == rule["rule_name"])
+            & ~F.col("failure_type").isin("TIMELINESS", "COUNT_MISMATCH")
+            if rule["rule_type"] == "MISSING_DATA_NULLS"
+            else F.col("rule_name") == rule["rule_name"])
+        want = render(DUCK, rule, json.loads(rule["parameters"]))
+        if rule["rule_id"] == 2:
+            got = got.drop("duplicate_values")
+            want = f"SELECT * EXCLUDE (duplicate_values) FROM ({want}) w"
+        n, columns, digest = spark_canon(got)
+        assert n > 0, rule["rule_name"]
+        assert (n, columns, digest) == duck_canon(duck, want), rule["rule_name"]
+
+
+def test_catalog_params_are_outside_input(spark, tmp_path):
+    """Names from the catalog are quoted, never spliced into the SQL: a rule
+    named o'brien ☃ writes that name verbatim to its detail table and to
+    dq_results, columns named with quotes, backticks and backslashes
+    resolve, and a params JSON naming a missing column is that rule's ERROR
+    row, with the other rules' rows unchanged."""
+    from pyspark.sql.types import DoubleType, IntegerType, StringType, StructField, StructType
+
+    key, amount = 'k`e\'y "\\d"', "it's ☃"
+    spark.createDataFrame(
+        [(1, -2.5, "a"), (2, 3.0, "A"), (3, -1.25, "b")],
+        StructType([StructField("id", IntegerType()), StructField(amount, DoubleType()),
+                    StructField(key, StringType())]),
+    ).createOrReplaceTempView("dq_odd_names_src")
+    odd_name, neg_name = "o'brien ☃", "neg \\ ☃"
+    rules = [
+        _snowpark_rule(70, "DUPLICATE_CHECK", source_table="dq_odd_names_src",
+                       columns_to_check=[key], case_insensitive_columns=[key]),
+        _snowpark_rule(71, "NEGATIVE_VALUES", source_table="dq_odd_names_src",
+                       numeric_columns=[amount], id_column="id"),
+    ]
+    rules[0]["rule_name"], rules[1]["rule_name"] = odd_name, neg_name
+    missing = _snowpark_rule(72, "SPIKE_DIP", source_table="dq_odd_names_src",
+                             metric_column="no_such_column", timestamp_col="id")
+
+    def run(name, catalog):
+        s = ResultSink(str(tmp_path / name))
+        summary = {r["rule_id"]: tuple(r) for r in run_catalog(spark, catalog, sink=s).collect()}
+        return s, summary
+
+    s, summary = run("odd", rules + [missing])
+    _, without = run("clean", rules)
+    assert summary[72][6] == C.ERROR and "no_such_column" in summary[72][7], summary[72]
+    assert {k: v for k, v in summary.items() if k != 72} == without
+    assert summary[70][1:] == (odd_name, "", "DUPLICATE_CHECK", "SNOWPARK_FUNC", "1", C.FAIL, "")
+    results = {r["rule_id"]: r["rule_name"] for r in s.read(spark, "dq_results").collect()}
+    assert results == {70: odd_name, 71: neg_name, 72: missing["rule_name"]}
+    (dup,) = s.read(spark, "dq_duplicate_details").collect()
+    assert (dup["rule_name"], json.loads(dup["duplicate_values"]), dup["duplicate_count"]) == (
+        odd_name, {key: "A"}, 2)
+    negatives = sorted((r["rule_name"], r["field_name"], r["record_id"], r["negative_value"])
+                       for r in s.read(spark, "dq_negative_value_details").collect())
+    assert negatives == [(neg_name, amount, "1", -2.5), (neg_name, amount, "3", -1.25)]

@@ -64,7 +64,6 @@ def test_window_is_oracle_dense():
         "doc_chunks_tokens",           # token-aware twin of doc_chunks
                                        # (in-window); same explode shape
         "doc_top_bigram_fraction",     # supplementary to doc_quality_score
-        "dup_orders_cust_date",        # same executor as dup_details_orders
         "ngram_jaccard_pairs",         # 1-row, near-redundant with
                                        # benchmark_contamination (r5 swap
                                        # that put doc_chunks in-window)

@@ -60,7 +60,7 @@ def _run_hist(spark, rows, lb):
         dataset_column="event_type", tolerance_threshold=0.05,
         lookback_days=lb,
     )
-    summary = run_catalog(spark, [rule], write_summary=False)
+    summary = run_catalog(spark, [rule])
     return summary.first()
 
 
@@ -96,7 +96,7 @@ def _run_trend(spark, values, threshold):
         timestamp_col="ts", segment_columns=["event_type"],
         tiebreak_columns=["event_id"], trend_days_threshold=threshold,
     )
-    return run_catalog(spark, [rule], write_summary=False).first()
+    return run_catalog(spark, [rule]).first()
 
 
 def test_trend_streak_counts_increases_not_rows(spark):
@@ -141,7 +141,7 @@ def test_historical_zero_expected_is_pass(spark, expected_zero_rows):
         dataset_column="event_type", tolerance_threshold=0.05,
         lookback_days=60,
     )
-    row = run_catalog(spark, [rule], write_summary=False).first()
+    row = run_catalog(spark, [rule]).first()
     # expected = 0 - 0 + 5 = 5, actual = 5 → deviation 0 → PASS
     assert row["indicator"] == C.PASS, row
 
@@ -189,8 +189,7 @@ def test_malformed_parameters_json_is_isolated(spark):
     from tests.conftest import SF_DIR, TABLES
 
     load_tables(spark, SF_DIR, TABLES)
-    summary = run_catalog(spark, [bad, dict(DEFAULT_CATALOG[2])],
-                          write_summary=False)
+    summary = run_catalog(spark, [bad, dict(DEFAULT_CATALOG[2])])
     rows = {r["rule_name"]: r for r in summary.collect()}
     assert rows["bad_json"]["indicator"] == C.ERROR
     assert "JSON" in rows["bad_json"]["error_message"] or \
@@ -351,11 +350,7 @@ def test_round4_signed_half_boundaries_cross_engine(spark):
     and the rendering is bit-identical across Spark and DuckDB."""
     import duckdb
 
-    from dq_true_north_spark.textquality.spec import (
-        round4_signed,
-        round4_signed_col,
-    )
-    from pyspark.sql import functions as F
+    from dq_true_north_spark.textquality.spec import round4_signed
 
     cases = [-0.00005, 0.00005, -0.12345, 0.12345, -1.5, 0.0, 2.00005]
     expected = [-0.0001, 0.0001, -0.1235, 0.1235, -1.5, 0.0, 2.0001]
@@ -364,13 +359,38 @@ def test_round4_signed_half_boundaries_cross_engine(spark):
     sql = f"SELECT {round4_signed('x')} AS r FROM (VALUES {vals}) t(x)"
     got_spark_sql = [r["r"] for r in spark.sql(sql).collect()]
     got_duck = [float(r[0]) for r in duckdb.connect().execute(sql).fetchall()]
-    df = spark.createDataFrame([(v,) for v in cases], "x double")
-    got_col = [r["r"] for r in
-               df.select(round4_signed_col(F.col("x")).alias("r")).collect()]
 
     assert got_spark_sql == expected
     assert got_duck == expected
-    assert got_col == expected
+
+
+def test_dialect_quoting_agrees_cross_engine(spark):
+    """spec.lit, spec.ident and spec.json_cols render catalog names the same
+    way in Spark and DuckDB: quotes, backticks, backslashes and non-ASCII
+    text come through verbatim, and a NULL field is left out of the JSON
+    object in both (Spark's to_json drops it)."""
+    import duckdb
+
+    from dq_true_north_spark.textquality.spec import (
+        DUCK,
+        SPARK,
+        ident,
+        json_cols,
+        lit,
+        str_t,
+    )
+
+    name = 'o\'brien ☃ `q` "d" \\d'
+
+    def sql(d):
+        return (f"SELECT {lit(d, name)} AS s, {json_cols(d, [name, 'v'])} AS j "
+                f"FROM (SELECT CAST(NULL AS {str_t(d)}) AS {ident(d, name)}, 1 AS v "
+                f"UNION ALL SELECT {lit(d, name)}, 2) t")
+
+    got_spark = sorted(tuple(r) for r in spark.sql(sql(SPARK)).collect())
+    got_duck = sorted((s, str(j)) for s, j in duckdb.connect().execute(sql(DUCK)).fetchall())
+    full = json.dumps({name: name, "v": 2}, separators=(",", ":"), ensure_ascii=False)
+    assert got_spark == got_duck == sorted([(name, '{"v":1}'), (name, full)])
 
 
 def test_doc_chunks_tile_with_overlap(spark):
