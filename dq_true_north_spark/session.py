@@ -93,24 +93,21 @@ def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...]) -> dic
     (round-6 measurement; the floor, not the compute, dominated the small
     queries). Only the lazy plan is cached — every materialization still
     scans the parquet files, so this is metadata caching, never result
-    caching. Temp views are re-registered whenever the requested sf_dir
-    differs from the one currently pointed at, so a session that switches
-    scale factors (the test harness does) stays correct."""
+    caching. Each view remembers the sf_dir it points at and is
+    re-registered whenever a call asks for it from another sf_dir, so a
+    session that switches scale factors (the test harness does) stays
+    correct; a call whose views already point at sf_dir reads nothing and
+    registers nothing."""
     cache = spark.__dict__.setdefault("_dq_table_cache", {})
+    view_dirs = cache.setdefault("_view_sf_dirs", {})
     out = {}
-    stale = []
     for n in names:
         key = (sf_dir, n)
         df = cache.get(key)
         if df is None:
-            df = spark.read.parquet(f"{sf_dir}/{n}.parquet")
-            cache[key] = df
-            stale.append(n)
+            df = cache[key] = spark.read.parquet(f"{sf_dir}/{n}.parquet")
+        if view_dirs.get(n) != sf_dir:
+            df.createOrReplaceTempView(n)
+            view_dirs[n] = sf_dir
         out[n] = df
-    current = cache.get("_views_sf_dir")
-    if current != sf_dir:
-        stale = list(names)
-        cache["_views_sf_dir"] = sf_dir
-    for n in stale:
-        out[n].createOrReplaceTempView(n)
     return out

@@ -1,8 +1,7 @@
 """Scalar/numpy mirror of the MinHash→LSH→cluster AND SimHash pipelines
 (round 5) — the independent spec used to generate DuckDB VALUES oracles
 for `minhash_pairs_pages`, `near_dup_clusters_pages` and
-`simhash_pairs_pages`, which until now were rows-only entries (the first
-two sat in the driver window; only iterative k-means remains rows-only).
+`simhash_pairs_pages`.
 
 Fidelity contract (every step mirrors dedup.py exactly; any divergence
 hash-fails the driver check, and tests/test_dedup_similarity.py pins the

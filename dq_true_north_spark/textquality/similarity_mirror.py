@@ -1,10 +1,8 @@
 """Scalar/numpy mirror of the hyperplane-LSH ANN path (round 5) — the
 independent spec behind `ann_lsh_embeddings`' DuckDB VALUES oracle.
 
-Unlike the k-means-trained indexes (IVF/PQ — float averages over Spark's
-partial-aggregation merge order, honestly rows-only), hyperplane LSH is
-deterministic end to end: the planes come from a seeded generator
-(similarity._hyperplanes, imported here — same literals, not a
+Hyperplane LSH is deterministic end to end: the planes come from a seeded
+generator (similarity._hyperplanes, imported here — same literals, not a
 re-implementation), and every float reduction in the production plan is a
 SEQUENTIAL left fold (`aggregate(..., 0.0, (acc, v) -> acc + v)`), which
 np.cumsum reproduces bit-for-bit (0.0 + v0 == v0 exactly; both

@@ -19,7 +19,7 @@ from dq_true_north_spark.catalog import DEFAULT_CATALOG
 from dq_true_north_spark.engine import run_catalog
 from dq_true_north_spark.io import ResultSink
 from dq_true_north_spark.session import load_tables
-from tests.conftest import SF_DIR, TABLES
+from tests.conftest import SF_DIR, SF_SMOKE, TABLES
 
 
 @pytest.fixture(scope="module")
@@ -658,3 +658,27 @@ def test_catalog_params_are_outside_input(spark, tmp_path):
     negatives = sorted((r["rule_name"], r["field_name"], r["record_id"], r["negative_value"])
                        for r in s.read(spark, "dq_negative_value_details").collect())
     assert negatives == [(neg_name, amount, "1", -2.5), (neg_name, amount, "3", -1.25)]
+
+
+def test_load_tables_views_follow_each_calls_sf_dir(spark, py4j_calls):
+    """Rules read their sources by view name, so each view must point at
+    the sf_dir of the last call that asked for it, whatever other views
+    that call or an earlier one moved; a call whose views already point
+    there makes no JVM call at all (no read, no job, no re-register)."""
+    import duckdb
+
+    def rows(sf_dir, table):
+        return duckdb.sql(f"SELECT count(*) FROM '{sf_dir}/{table}.parquet'").fetchone()[0]
+
+    names = ("documents", "events")
+    assert rows(SF_DIR, "events") != rows(SF_SMOKE, "events")
+    try:
+        load_tables(spark, SF_DIR, names)
+        load_tables(spark, SF_SMOKE, names)
+        load_tables(spark, SF_DIR, ("documents",))
+        load_tables(spark, SF_DIR, ("events",))
+        for t in names:
+            assert spark.table(t).count() == rows(SF_DIR, t), t
+        assert py4j_calls(lambda: load_tables(spark, SF_DIR, names)) == 0
+    finally:
+        load_tables(spark, SF_DIR, TABLES)

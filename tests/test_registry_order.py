@@ -48,27 +48,20 @@ def test_load_bearing_queries_inside_window():
 
 
 def test_window_is_oracle_dense():
-    """Every window entry has an oracle, and every oracle-checked query
-    sits inside the window unless its tail placement is deliberate
-    (documented at _PRIORITY). The allowed oracled-tail set is pinned here
-    so adding an oracled query without placing it is a test failure, not a
-    silent evidence loss."""
+    """Every registered entry has an oracle, window and tail alike, and
+    every entry sits inside the window unless its tail placement is
+    deliberate (documented at _PRIORITY). The allowed tail is pinned here
+    so adding a query without placing it is a test failure, not a silent
+    evidence loss."""
     reg = Q.registry()
     names = list(reg)
-    window = names[: Q._DRIVER_WINDOW]
-    unoracled = [n for n in window if not reg[n]["oracle"]]
-    assert not unoracled, f"window entries without an oracle: {unoracled}"
-    tail = names[Q._DRIVER_WINDOW:]
-    oracled_tail = sorted(n for n in tail if reg[n]["oracle"])
-    assert oracled_tail == [
+    unoracled = [n for n in names if not reg[n]["oracle"]]
+    assert not unoracled, f"entries without an oracle: {unoracled}"
+    tail = sorted(names[Q._DRIVER_WINDOW:])
+    assert tail == [
         "doc_chunks_tokens",           # token-aware twin of doc_chunks
                                        # (in-window); same explode shape
-        "doc_top_bigram_fraction",     # supplementary to doc_quality_score
-        "ngram_jaccard_pairs",         # 1-row, near-redundant with
-                                       # benchmark_contamination (r5 swap
-                                       # that put doc_chunks in-window)
-        "token_budget_packs",          # spec form of ..._sharded (in-window)
-    ], f"unplanned oracled queries in the tail: {oracled_tail}"
+    ], f"unplanned queries in the tail: {tail}"
 
 
 def test_star_clusters_not_registered():
