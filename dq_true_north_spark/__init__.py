@@ -9,7 +9,7 @@ Architecture (reference parity, Spark-first implementation):
               (reference: dq_engine.py:87-138)
   rules/   -> the 8 rule families re-expressed as Catalyst plans
               (reference: dq_rules_library.py)
-  textquality/ -> the web-text payload: heuristics as Column expressions,
+  textquality/ -> the web-text payload: heuristics as SQL expressions,
               langid/perplexity/scrub as Arrow-vectorized pandas UDFs
   lineage  -> run manifest + per-partition lineage rows + resume
 """

@@ -252,17 +252,15 @@ def q_doc_metrics(d: str) -> str:
     cols = ",\n      ".join(
         f"{fn(d, 'text')} AS {name}" for name, fn in spec.METRICS.items()
     )
-    return f"SELECT doc_id,\n      {cols}\nFROM {_par_scan(d, 'documents')}"
+    src = spec.staged(d, _par_scan(d, 'documents'), ["doc_id"])
+    return f"SELECT doc_id,\n      {cols}\nFROM {src}"
 
 
 @sql_query("doc_drop_flags")
 def q_doc_drop_flags(d: str) -> str:
     """Per-document 0/1 flag per heuristic drop reason (Gopher/C4 rules)."""
-    cols = ",\n      ".join(
-        f"CAST(COALESCE(({pred}), FALSE) AS INT) AS {reason}"
-        for reason, pred in spec.heuristic_drop_predicates(d, "text")
-    )
-    return f"SELECT doc_id,\n      {cols}\nFROM documents"
+    cols = ",\n      ".join(spec.drop_flags(d, "text"))
+    return f"SELECT doc_id,\n      {cols}\nFROM {spec.staged(d, 'documents', ['doc_id'])}"
 
 
 def _verdict_cte(d: str) -> str:
@@ -273,17 +271,14 @@ def _verdict_cte(d: str) -> str:
     recast as keep-first semantics for corpus dedup. Deterministic tie-break
     per SURVEY.md §7 hard-point 3 (stable key, never first() unordered).
     """
-    flags = ",\n      ".join(
-        f"CAST(COALESCE(({pred}), FALSE) AS INT) AS {reason}"
-        for reason, pred in spec.heuristic_drop_predicates(d, "text")
-    )
+    flags = ",\n      ".join(spec.drop_flags(d, "text"))
     langs = ", ".join(f"'{x}'" for x in C.ALLOWED_LANGS)
     return f"""
 WITH flagged AS (
   SELECT doc_id, lang,
       {flags},
       md5(text) AS text_hash
-  FROM {_par_scan(d, 'documents')}
+  FROM {spec.staged(d, _par_scan(d, 'documents'), ['doc_id', 'lang'])}
 ), verd AS (
   SELECT *,
       CASE WHEN row_number() OVER (PARTITION BY text_hash ORDER BY doc_id) > 1
@@ -338,7 +333,8 @@ def q_doc_token_counts(d: str) -> str:
     bpe = spec.bpe_token_count(d, "text")
     return (
         f"SELECT doc_id, CAST({ws} AS BIGINT) AS ws_tokens, "
-        f"CAST({bpe} AS BIGINT) AS bpe_tokens FROM documents"
+        f"CAST({bpe} AS BIGINT) AS bpe_tokens "
+        f"FROM {spec.staged(d, 'documents', ['doc_id'])}"
     )
 
 
@@ -356,7 +352,8 @@ def q_doc_quality_score(d: str) -> str:
     return (
         f"SELECT doc_id, (floor((("
         f"least(coalesce({stop}, 0.0) * 10.0, 1.0) + {alpha} + {lensig}"
-        f") / 3.0) * 1e4 + 0.5) / 1e4) AS quality_score FROM documents"
+        f") / 3.0) * 1e4 + 0.5) / 1e4) AS quality_score "
+        f"FROM {spec.staged(d, 'documents', ['doc_id'])}"
     )
 
 
@@ -934,7 +931,7 @@ SELECT coalesce(lang, 'ALL') AS lang,
        coalesce(source, 'ALL') AS source,
        COUNT(*) AS n_docs,
        CAST(SUM(CAST({nw} >= {C.MIN_WORDS} AS INT)) AS BIGINT) AS long_enough
-FROM documents
+FROM {spec.staged(d, 'documents', ['lang', 'source'])}
 GROUP BY ROLLUP(lang, source)"""
 
 
@@ -1039,28 +1036,17 @@ GROUP BY event_type"""
 # ============================================ dedup / similarity search ====
 
 
-def q_cosine_topk(d: str) -> str:
-    """Brute-force cosine top-k over the embeddings table for a probe set
-    (vec_id % 100 = 0). Spark: broadcast probe side + JVM higher-order
-    functions (zip_with/aggregate); the corpus is scanned once. Ties broken
-    by neighbor_id for cross-engine determinism.
-
-    Scale discipline (VERDICT r2 #3): each side's norm is computed ONCE per
-    vector in its CTE projection, never inside the joined frame — a per-pair
-    norm is Q× redundant aggregates per corpus row (the shape
-    embedding_near_dup_pairs pioneered)."""
-    if d == SPARK:
-        dot = ("aggregate(zip_with(q.qe, e.ne, (x,y) -> x*y), "
-               "CAST(0.0 AS DOUBLE), (a,v)->a+v)")
-        nrm = ("sqrt(aggregate(transform(embedding, "
-               "x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE)), "
-               "CAST(0.0 AS DOUBLE), (a,v)->a+v))")
-        emb = "transform(embedding, x -> CAST(x AS DOUBLE))"
-    else:
-        dot = "list_dot_product(q.qe, e.ne)"
-        nrm = ("sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), "
-               "CAST(embedding AS DOUBLE[])))")
-        emb = "CAST(embedding AS DOUBLE[])"
+def _cosine_topk_oracle() -> str:
+    """DuckDB oracle for cosine_topk_embeddings: brute-force cosine top-k
+    over the embeddings table for a probe set (vec_id % 100 = 0). Each
+    side's norm is computed ONCE per vector in its CTE projection, never
+    inside the joined frame. Ties broken by neighbor_id for cross-engine
+    determinism. The Spark arm is similarity.cosine_topk, whose numpy
+    folds give the same doubles."""
+    dot = "list_dot_product(q.qe, e.ne)"
+    nrm = ("sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), "
+           "CAST(embedding AS DOUBLE[])))")
+    emb = "CAST(embedding AS DOUBLE[])"
     return f"""
 WITH q AS (
   SELECT vec_id AS qid, {emb} AS qe, {nrm} AS qn
@@ -1082,72 +1068,19 @@ FROM ranked WHERE rank <= {C.COSINE_TOPK}"""
 
 
 def _cosine_topk_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """numpy executor for the cosine_topk_embeddings spec above (round 6):
-    the plan keeps the broadcast probe join and the JVM ranking window, but
-    the per-pair cosine moves from the interpreted aggregate/zip_with fold
-    to ONE Arrow hop whose numpy loop runs the identical sequential
-    per-dimension folds (dot and both norms) vectorized across pairs —
-    bit-identical doubles, same rank order. The DUCK rendering of the
-    template stays the frozen driver oracle (parity re-verified at sf0.01
-    and sf0.1)."""
-    import numpy as np
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import DoubleType
+    from .textquality.similarity import cosine_topk
 
     load_tables(spark, sf_dir, TABLES)
-    emb = spark.table("embeddings")
-
-    @F.pandas_udf(DoubleType())
-    def cos_udf(qe: pd.Series, ne: pd.Series) -> pd.Series:
-        if not len(qe):
-            return pd.Series(np.empty(0, np.float64))
-        Q = np.stack([np.asarray(a, dtype=np.float64) for a in qe])
-        N = np.stack([np.asarray(a, dtype=np.float64) for a in ne])
-        n_rows, dim = Q.shape
-        dot = np.zeros(n_rows)
-        qn = np.zeros(n_rows)
-        nn = np.zeros(n_rows)
-        for d_ in range(dim):            # sequential folds, as the SQL
-            x, y = Q[:, d_], N[:, d_]
-            dot += x * y
-            qn += x * x
-            nn += y * y
-        return pd.Series(dot / (np.sqrt(qn) * np.sqrt(nn)))
-
-    q = emb.filter("vec_id % 100 = 0").select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qemb")
-    )
-    c = emb.select(
-        F.col("vec_id").alias("nid"), F.col("embedding").alias("nemb")
-    )
-    pairs = c.join(F.broadcast(q), F.col("nid") != F.col("qid"))
-    scored = pairs.select(
-        F.col("qid").alias("query_id"),
-        F.col("nid").alias("neighbor_id"),
-        cos_udf("qemb", "nemb").alias("sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= C.COSINE_TOPK)
-        .select(
-            "query_id", "neighbor_id", "rank",
-            spec.round4_col(F.col("sim")).alias("cosine_sim"),
-        )
-    )
+    return cosine_topk(spark.table("embeddings"), "vec_id % 100 = 0")
 
 
 _REGISTRY["cosine_topk_embeddings"] = {
     "spark": _cosine_topk_spark,
-    "oracle": q_cosine_topk(DUCK),
-    "template": q_cosine_topk,   # spec of record; guard-scanned
+    "oracle": _cosine_topk_oracle(),
 }
 
 
-def q_embedding_near_dup(d: str) -> str:
+def _embedding_near_dup_oracle() -> str:
     """Embedding-cosine near-duplicate pairs: (a, b) within the same
     blocking key with cosine(emb_a, emb_b) >= threshold. The test
     embeddings are random, so the threshold (0.35) sits in the observable
@@ -1160,25 +1093,12 @@ def q_embedding_near_dup(d: str) -> str:
     An unblocked self-join re-deriving norms per pair was 20x slower at
     sf0.1 and quadratic in corpus size.
 
-    Round 6: the SPARK side no longer executes this template — the
-    interpreted aggregate/zip_with fold cost ~26 µs per pair (~200k pairs
-    at sf0.1 → ~4 s); _embedding_near_dup_spark below computes the SAME
-    sequential left folds vectorized across pairs in numpy (guide §4.2),
-    bit-identical by construction. The DUCK rendering remains the frozen
-    driver oracle, and this template stays the readable spec of record
-    (the no-native-round guard still scans both renderings)."""
-    if d == SPARK:
-        emb = "embedding"
-        dot = ("aggregate(zip_with(a.emb, b.emb, "
-               "(x,y) -> CAST(x AS DOUBLE)*CAST(y AS DOUBLE)), "
-               "CAST(0.0 AS DOUBLE), (s,v)->s+v)")
-        nrm = ("sqrt(aggregate(transform(emb, "
-               "x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE)), "
-               "CAST(0.0 AS DOUBLE), (s,v)->s+v))")
-    else:
-        emb = "CAST(embedding AS DOUBLE[])"
-        dot = "list_dot_product(a.emb, b.emb)"
-        nrm = "sqrt(list_dot_product(emb, emb))"
+    The Spark arm, _embedding_near_dup_spark below, computes the same
+    sequential left folds vectorized across pairs in numpy; this DuckDB
+    SQL is its oracle."""
+    emb = "CAST(embedding AS DOUBLE[])"
+    dot = "list_dot_product(a.emb, b.emb)"
+    nrm = "sqrt(list_dot_product(emb, emb))"
     return f"""
 WITH n AS (
   SELECT vec_id, label, emb, {nrm} AS nrm
@@ -1191,10 +1111,10 @@ WHERE {dot} / (a.nrm * b.nrm) >= 0.35"""
 
 
 def _embedding_near_dup_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """numpy-vectorized executor for the embedding_near_dup_pairs spec
-    above: one shuffle by the blocking label (exactly what the self-join
-    shuffled), then per-group pair scoring where every float operation is
-    the SAME sequential left fold the SQL template's aggregate() performs
+    """numpy-vectorized executor for embedding_near_dup_pairs: one
+    shuffle by the blocking label (what the oracle's self-join shuffles),
+    then per-group pair scoring where every float operation is a
+    sequential left fold over the dimensions
     — `acc += A[:, d] * B[:, d]` iterates dimensions in order, vectorized
     ACROSS pairs, so each pair's sum has the identical IEEE operation
     sequence and the hash-checked cosine values are bit-identical (pinned
@@ -1266,8 +1186,7 @@ def _embedding_near_dup_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _REGISTRY["embedding_near_dup_pairs"] = {
     "spark": _embedding_near_dup_spark,
-    "oracle": q_embedding_near_dup(DUCK),
-    "template": q_embedding_near_dup,   # spec of record; guard-scanned
+    "oracle": _embedding_near_dup_oracle(),
 }
 
 

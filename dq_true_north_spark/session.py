@@ -54,7 +54,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         # AQE: runtime coalescing + skew-join splitting — the config half of
-        # the skew story (the other half is salted repartition in dedup.py)
+        # the skew story (the other half is salted repartition in partitioning.py)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

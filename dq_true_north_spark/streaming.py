@@ -183,10 +183,11 @@ def stream_near_dup_pairs(
     checkpointed GroupState). The streaming analog of
     minhash_candidate_pairs for a live crawl feed.
 
-    Shape: signatures are the same JVM-side reduce fold as batch
-    (with_minhash works unchanged on a streaming frame — pure column
-    expressions), banding is the same xxhash64 key, and the stateful
-    operator is applyInPandasWithState keyed by (band_idx, band_hash):
+    Shape: signatures are the same fold as batch (with_minhash works
+    unchanged on a streaming frame: column expressions plus its numpy
+    pandas-UDF signature fold), banding is the same xxhash64 key, and the
+    stateful operator is applyInPandasWithState keyed by (band_idx,
+    band_hash):
     state holds the bucket's members (url, signature), capped at
     max_bucket exactly like the batch path — a boilerplate bucket stops
     ACCEPTING members once full (arrival-order truncation; the batch

@@ -156,10 +156,10 @@ def with_minhash(df: DataFrame, text_col: str = "text",
     degenerate. Found by the scalar xxh mirror (dedup_mirror.py); pinned
     by test_minhash_signature_is_not_degenerate and mirror-equality
     tests — which also pin this round's numpy fold."""
-    from .spec import SPARK, word_ngrams
+    from .spec import SPARK, word_ngrams, words
 
-    words = f"filter(split(lower({text_col}), '\\\\s+'), w -> w <> '')"
-    df = df.withColumn("_mh_words", F.expr(words)).withColumn(
+    lowered = words(SPARK, f"lower({text_col})")
+    df = df.withColumn("_mh_words", F.expr(lowered)).withColumn(
         "shingles",
         F.array_distinct(
             F.expr(word_ngrams(SPARK, "_mh_words", C.MINHASH_SHINGLE_WORDS))
@@ -284,29 +284,6 @@ def _minhash_banded(
     )
 
 
-def _minhash_banded_materialized(
-    df: DataFrame, id_col: str, text_col: str, bands: int, n_perms: int
-) -> DataFrame:
-    """Batch-path variant of _minhash_banded: the per-doc signature table
-    is localCheckpointed (LAZILY — the first downstream job materializes
-    it), so the census phase and the collect phase of the two-phase bucket
-    build read ONE evaluation of the expensive subtree (text scan →
-    shingles → hashes → signature UDF) instead of recomputing it each
-    (round-6 plan audit: the whole generation+signature subtree appeared
-    twice per query, three times in the cluster query). This is the
-    guide-§8 proxy-table shape: signatures are ~520 B/doc — the same
-    order as what the band groupBy shuffles anyway — and the heavy text
-    column is read exactly once. Streaming stays on _minhash_banded
-    (checkpointing is a batch-only operation)."""
-    r = n_perms // bands
-    signed = with_minhash(df.select(id_col, text_col), text_col, n_perms)
-    signed = (
-        signed.select(F.col(id_col).alias("doc"), "minhash")
-        .localCheckpoint(eager=False)
-    )
-    return _band_explode(signed, bands, r)
-
-
 def minhash_candidate_pairs(
     df: DataFrame,
     id_col: str = "url",
@@ -324,7 +301,14 @@ def minhash_candidate_pairs(
     Reference analog: the duplicate check's groupBy-count pattern
     (dq_rules_library.py:318-321) generalized to near-duplicates.
     """
-    banded = _minhash_banded_materialized(df, id_col, text_col, bands, n_perms)
+    # the signature table is checkpointed lazily: the bucket census and the
+    # bucket collect read one evaluation of the text scan, shingles and
+    # signature UDF instead of recomputing them (signatures are ~520 B/doc,
+    # the order of what the band groupBy shuffles anyway)
+    sig = with_minhash(df.select(id_col, text_col), text_col, n_perms).select(
+        F.col(id_col).alias("doc"), "minhash"
+    ).localCheckpoint(eager=False)
+    banded = _band_explode(sig, bands, n_perms // bands)
     buckets = _bucketed(banded, ["minhash"], max_bucket)
     pairs = _pairs_from_buckets(
         buckets, max_bucket,

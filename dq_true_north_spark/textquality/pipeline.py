@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .. import constants as C
-from .heuristics import fast_drop_flag_columns
+from . import spec
 from .scrub import scrub_sql_expr
 from .udfs import lang_ppl_udf
 
@@ -112,19 +112,21 @@ def compute_verdicts(
         dropDuplicates'd on that key so a violating input degrades to
         marking every copy as dup instead of inflating the row count.
       'shuffle': single full-width exchange + window — always correct.
+    Any other value raises ValueError.
     """
+    if dedup_strategy not in ("auto", "broadcast", "shuffle"):
+        raise ValueError("dedup_strategy must be 'auto', 'broadcast' or "
+                         f"'shuffle', got {dedup_strategy!r}")
     model = lang_ppl_udf(F.col("text"))   # one Arrow hop for both models
-    # staged flags (round 6): the words/lines arrays are hoisted into one
-    # helper projection so the nine flag predicates read bound references
-    # — the self-contained spec rendering re-derived them per flag and the
-    # higher-order pieces escape codegen subexpression elimination (see
-    # heuristics.fast_drop_flag_columns; value-identity test-pinned)
-    helpers, flags = fast_drop_flag_columns("text")
-    flagged = pages.select("url", "warc_ts", "text", *helpers).select(
+    # the heuristic flags read the words/lines arrays of spec's staged
+    # projection — the same rendering the doc_* queries and their oracles run
+    flagged = pages.selectExpr(
+        "url", "warc_ts", "text", *spec.hoisted(spec.SPARK, "text")
+    ).select(
         "url",
         "warc_ts",
         "text",
-        *flags,
+        *map(F.expr, spec.drop_flags(spec.SPARK, "text")),
         model.getField("pred_lang").alias("pred_lang"),
         model.getField("lang_confidence").alias("lang_confidence"),
         model.getField("perplexity").alias("perplexity"),

@@ -1,10 +1,11 @@
 """Dual-dialect expression spec for the Gopher/C4-style heuristic metrics.
 
-Every per-document metric is defined ONCE here and rendered into two SQL
-dialects: Spark SQL (executed via F.expr inside the distributed pipeline —
-whole-stage-codegen, no Python in the hot path) and DuckDB SQL (the
-correctness oracle the driver runs side-by-side). A third rendering — plain
-Python in tests/golden.py — shares the same constants module.
+Every per-document metric and drop predicate is defined ONCE here, over one
+staged projection (`staged`/`hoisted`), and rendered into two SQL dialects:
+Spark SQL (run by compute_verdicts and the doc_* queries — whole-stage
+codegen, no Python in the hot path) and DuckDB SQL (the correctness oracle
+the driver runs side-by-side). tests/golden.py re-implements the rules in
+plain Python over the same constants module, as the independent reference.
 
 Reference analog: the reference evaluates per-column checks one scan per
 column (dq_rules_library.py:675-699); here every metric is a column in ONE
@@ -198,10 +199,39 @@ def word_ngrams(d: str, words_expr: str, n: int) -> str:
 
 
 # --------------------------------------------------------------- metrics ---
-# Each metric is a function (dialect, text_expr) -> SQL expression string.
+# Each metric is a function (dialect, text_col) -> SQL expression, rendered
+# over a row that also carries the two arrays `hoisted` adds: the lowered
+# words (WORDS) and the non-empty lines (LINES). The higher-order functions
+# that build the arrays escape whole-stage codegen's subexpression
+# elimination, so a predicate building its own would derive them again per
+# predicate; read from one staged projection they are derived once per row.
+# Spark keeps the staging: CollapseProject does not inline a non-cheap
+# expression that is referenced more than once.
+#
+# The word count is the size of WORDS: splitting on \s+ and dropping the
+# empty pieces enumerates exactly the \S+ runs, and lower() never alters
+# whitespace. The character, symbol, alpha-word and BPE counts stay regex
+# passes over the raw text (lower() can change a string's length on some
+# code points).
+
+WORDS, LINES = "_h_words", "_h_nl"
+
+
+def hoisted(d: str, t: str) -> list[str]:
+    """Select items for the two arrays every metric below reads."""
+    nonempty = arr_filter(d, lines(d, t), "l -> l <> ''")
+    return [f"{words(d, f'lower({t})')} AS {WORDS}", f"{nonempty} AS {LINES}"]
+
+
+def staged(d: str, source: str, cols: list[str]) -> str:
+    """A FROM item: `source`'s `cols` and `text` column, plus the hoisted
+    arrays the metrics read."""
+    items = ", ".join([*cols, "text", *hoisted(d, "text")])
+    return f"(SELECT {items} FROM {source}) staged"
+
 
 def n_words(d: str, t: str) -> str:
-    return rx_count(d, t, r"\S+")
+    return size(d, WORDS)
 
 
 def n_word_chars(d: str, t: str) -> str:
@@ -222,14 +252,10 @@ def symbol_word_ratio(d: str, t: str) -> str:
     return round4(f"CAST({sym} AS DOUBLE) / nullif({n_words(d, t)}, 0)")
 
 
-def _lower_words(d: str, t: str) -> str:
-    return words(d, f"lower({t})")
-
-
 def stopword_count(d: str, t: str) -> str:
     stops = arr_lit(d, C.STOPWORDS)
     lam = f"w -> {arr_contains(d, stops, 'w')}"
-    return size(d, arr_filter(d, _lower_words(d, t), lam))
+    return size(d, arr_filter(d, WORDS, lam))
 
 
 def stopword_fraction(d: str, t: str) -> str:
@@ -240,7 +266,7 @@ def stopword_fraction(d: str, t: str) -> str:
 
 def distinct_stopwords(d: str, t: str) -> str:
     stops = arr_lit(d, C.STOPWORDS)
-    return size(d, arr_intersect(d, arr_distinct(d, _lower_words(d, t)), stops))
+    return size(d, arr_intersect(d, arr_distinct(d, WORDS), stops))
 
 
 def alpha_word_count(d: str, t: str) -> str:
@@ -255,28 +281,23 @@ def non_alpha_word_fraction(d: str, t: str) -> str:
     )
 
 
-def _nonempty_lines(d: str, t: str) -> str:
-    return arr_filter(d, lines(d, t), "l -> l <> ''")
+def _line_fraction(d: str, pred: str) -> str:
+    hit = arr_filter(d, LINES, f"l -> {pred}")
+    return round4(f"CAST({size(d, hit)} AS DOUBLE) / nullif({size(d, LINES)}, 0)")
 
 
 def ellipsis_line_fraction(d: str, t: str) -> str:
-    nl = _nonempty_lines(d, t)
-    hit = arr_filter(d, nl, "l -> l LIKE '%...'")
-    return round4(f"CAST({size(d, hit)} AS DOUBLE) / nullif({size(d, nl)}, 0)")
+    return _line_fraction(d, "l LIKE '%...'")
 
 
 def bullet_line_fraction(d: str, t: str) -> str:
-    nl = _nonempty_lines(d, t)
-    pred = "l -> l LIKE '- %' OR l LIKE '* %' OR l LIKE '•%'"
-    hit = arr_filter(d, nl, pred)
-    return round4(f"CAST({size(d, hit)} AS DOUBLE) / nullif({size(d, nl)}, 0)")
+    return _line_fraction(d, "l LIKE '- %' OR l LIKE '* %' OR l LIKE '•%'")
 
 
 def dup_line_fraction(d: str, t: str) -> str:
-    nl = _nonempty_lines(d, t)
     return round4(
-        f"1.0 - CAST({size(d, arr_distinct(d, nl))} AS DOUBLE) / "
-        f"nullif({size(d, nl)}, 0)"
+        f"1.0 - CAST({size(d, arr_distinct(d, LINES))} AS DOUBLE) / "
+        f"nullif({size(d, LINES)}, 0)"
     )
 
 
@@ -323,6 +344,13 @@ def heuristic_drop_predicates(d: str, t: str) -> list[tuple[str, str]]:
         (C.REASON_BULLET, f"coalesce({bullet_line_fraction(d, t)}, 0.0) > {C.MAX_BULLET_LINE_FRACTION}"),
         (C.REASON_DUP_LINES, f"coalesce({dup_line_fraction(d, t)}, 0.0) > {C.MAX_DUP_LINE_FRACTION}"),
     ]
+
+
+def drop_flags(d: str, t: str) -> list[str]:
+    """One 0/1 select item per heuristic drop reason, named by the reason,
+    over the staged row."""
+    return [f"CAST(COALESCE(({p}), FALSE) AS INT) AS {r}"
+            for r, p in heuristic_drop_predicates(d, t)]
 
 
 METRICS = {

@@ -268,38 +268,47 @@ def test_canonical_url_three_way_and_idempotent(spark, duck):
         assert r["c"] == canonical_url(r["url"])
 
 
-def test_fast_flags_equal_spec_flags(spark):
-    """Round-6 optimization pin: heuristics.fast_drop_flag_columns (staged
-    helper columns, used by the pipeline hot path) must produce flag values
-    IDENTICAL to the self-contained spec rendering (drop_flag_columns) for
-    every reason code — on the planted corpus AND whitespace/empty edge
-    rows. The spec rendering remains the source of truth (doc_drop_flags'
-    dual-dialect oracle runs it); this pins the fast path to it."""
-    from pyspark.sql import functions as F
+def test_spark_flags_match_python_golden(spark):
+    """The Spark rendering of spec's staged heuristic flags (what
+    compute_verdicts runs) raises exactly golden.heuristic_reasons on the
+    planted corpus and on whitespace/empty/line edge rows, and no flag on a
+    NULL text. The DuckDB rendering is held to the same golden by
+    tests/test_properties.py."""
+    from dq_true_north_spark.textquality import spec
+    from tests.golden import heuristic_reasons
 
-    from dq_true_north_spark.textquality.heuristics import (
-        drop_flag_columns,
-        fast_drop_flag_columns,
+    edge = [
+        ("e-empty", ""),
+        ("e-ws", "   \n\t \n"),
+        ("e-oneword", "hello"),
+        ("e-bullets", "- a b\n* c d\n•e f\n- g h"),
+        ("e-ellipsis", "one two three...\nfour five..."),
+        ("e-dup", "same line here\nsame line here\nsame line here"),
+        ("e-null", None),
+    ]
+    df = pages_df(spark, 500).select("url", "text").unionByName(
+        spark.createDataFrame(edge, "url string, text string")
     )
+    staged = df.selectExpr("url", "text", *spec.hoisted(spec.SPARK, "text"))
+    flags = staged.selectExpr("url", "text", *spec.drop_flags(spec.SPARK, "text"))
+    reasons = [r for r, _ in spec.heuristic_drop_predicates(spec.SPARK, "text")]
+    rows = flags.collect()
+    assert len(rows) == 507
+    for r in rows:
+        hits = [c for c in reasons if r[c] == 1]
+        want = [] if r["text"] is None else heuristic_reasons(r["text"])
+        assert hits == want, (r["url"], r["text"])
 
-    pages = pages_df(spark, 500).select("url", "text")
-    edge = spark.createDataFrame(
-        [
-            ("e-empty", ""),
-            ("e-ws", "   \n\t \n"),
-            ("e-oneword", "hello"),
-            ("e-bullets", "- a b\n* c d\n•e f\n- g h"),
-            ("e-ellipsis", "one two three...\nfour five..."),
-            ("e-dup", "same line here\nsame line here\nsame line here"),
-        ],
-        "url string, text string",
-    )
-    df = pages.unionByName(edge)
-    slow = df.select("url", *drop_flag_columns("text"))
-    helpers, flags = fast_drop_flag_columns("text")
-    fast = df.select("url", "text", *helpers).select("url", *flags)
-    reasons = [c for c in slow.columns if c != "url"]
-    assert [c for c in fast.columns if c != "url"] == reasons
-    s = {r["url"]: tuple(r[c] for c in reasons) for r in slow.collect()}
-    f = {r["url"]: tuple(r[c] for c in reasons) for r in fast.collect()}
-    assert s == f
+
+def test_unknown_dedup_strategy_raises(spark, tmp_path):
+    """An unknown dedup_strategy is an error, not a silent shuffle plan —
+    also through run_quality_pipeline, which passes it on."""
+    from dq_true_north_spark.lineage import run_quality_pipeline
+
+    pages = pages_df(spark, 20)
+    for bad in ("Broadcast", "hash", ""):
+        with pytest.raises(ValueError, match="dedup_strategy"):
+            compute_verdicts(pages, dedup_strategy=bad)
+    with pytest.raises(ValueError, match="dedup_strategy"):
+        run_quality_pipeline(spark, pages, str(tmp_path), "r1",
+                             dedup_strategy="Broadcast")

@@ -37,15 +37,17 @@ def test_scrub_idempotent_on_domain(t):
 @settings(max_examples=150, deadline=None)
 @given(st.lists(texts, min_size=1, max_size=8))
 def test_duckdb_metrics_match_python_golden(batch):
-    """DuckDB rendering of every metric+predicate == independent Python
-    implementation (golden). The Spark rendering is pinned to DuckDB by
-    tests/test_oracle_parity.py on real tables, closing the triangle."""
+    """DuckDB rendering of every predicate over spec's staged projection ==
+    independent Python implementation (golden). The Spark rendering is
+    held to the same golden by tests/test_pipeline.py and pinned to DuckDB
+    by tests/test_oracle_parity.py on real tables, closing the triangle."""
     con = duckdb.connect()
     con.execute("CREATE TABLE docs(i INT, text VARCHAR)")
     con.executemany("INSERT INTO docs VALUES (?, ?)", list(enumerate(batch)))
     preds = spec.heuristic_drop_predicates(spec.DUCK, "text")
     cols = ", ".join(f"CAST(({p}) AS INT) AS {r}" for r, p in preds)
-    rows = con.execute(f"SELECT i, {cols} FROM docs ORDER BY i").fetchall()
+    src = spec.staged(spec.DUCK, "docs", ["i"])
+    rows = con.execute(f"SELECT i, {cols} FROM {src} ORDER BY i").fetchall()
     for row, text in zip(rows, batch):
         duck_reasons = [
             r for (r, _), hit in zip(preds, row[1:]) if hit == 1
