@@ -31,16 +31,21 @@ Python workers, even for zero or one row.
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import tempfile
 import threading
 
 import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
+
+#: the footer key under which Spark records the schema it wrote
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 def local_rows(spark: SparkSession, rows: list[tuple], schema_ddl: str) -> DataFrame:
@@ -90,21 +95,27 @@ class ResultSink:
     def _schema_types(schema) -> dict[str, str]:
         return {f.name.lower(): f.dataType.simpleString() for f in schema.fields}
 
-    def _heal_mode(self, spark: SparkSession, table: str, incoming) -> str:
+    def _heal_mode(self, table: str, incoming: dict[str, str]) -> str:
         """'append' when the existing table is write-compatible, else
         'overwrite' — the reference's recreate-on-schema-error
         (dq_engine.py:64-85). Parquet resolves columns by name per file, so
         column ORDER differences are compatible; a column set or type
-        change is the drift that would poison reads."""
+        change is the drift that would poison reads.
+
+        The schema is the one Spark recorded in a part file's footer, read
+        without a Spark job. Only a footer that cannot be parsed also
+        recreates the table; any other failure to read it (an I/O error)
+        raises, so a transient fault never drops the table's rows."""
         if not self.exists(table):
             return "append"
+        dest = self.path(table)
+        part = min(f for f in os.listdir(dest) if f.endswith(".parquet"))
         try:
-            existing = self._schema_types(
-                spark.read.parquet(self.path(table)).schema
-            )
-        except Exception:
-            return "overwrite"      # unreadable table dir: recreate
-        if existing == self._schema_types(incoming.schema):
+            footer = pq.read_schema(os.path.join(dest, part)).metadata or {}
+            existing = StructType.fromJson(json.loads(footer[_SPARK_SCHEMA_KEY]))
+        except (ValueError, KeyError):
+            return "overwrite"      # unparseable footer: recreate
+        if self._schema_types(existing) == incoming:
             return "append"
         return "overwrite"
 
@@ -123,7 +134,7 @@ class ResultSink:
                 if self._verified.get(table) == incoming:
                     mode = "append"      # probe already paid for this layout
                 else:
-                    mode = self._heal_mode(df.sparkSession, table, out)
+                    mode = self._heal_mode(table, incoming)
                 dest = self.path(table)
                 if mode == "overwrite":
                     shutil.rmtree(dest)

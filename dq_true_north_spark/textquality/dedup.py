@@ -2,17 +2,19 @@
 
 Scale design notes (the whole point of these implementations):
 
-MinHash: signatures are computed WITHOUT exploding shingles — one JVM-side
-`reduce` over the shingle array folds all 64 permutation hashes into a
-running element-wise min per row (no shuffle, no Python). The
-only shuffle in the whole LSH path is the band-bucket groupBy, which is the
-theoretical minimum for LSH. Candidate pairs are verified by comparing
-signatures (estimated Jaccard), never by re-reading text.
+MinHash: signatures are computed WITHOUT exploding shingles — one JVM
+xxhash64 per shingle, then one Arrow hop folds all 64 permutation hashes
+into the element-wise min per row in numpy (no shuffle). The data shuffle
+of the LSH path is the band-bucket groupBy, the theoretical minimum for
+LSH; the census before it moves keys only. Candidate pairs are verified by
+comparing signatures (estimated Jaccard), never by re-reading text.
 
 At 10^12 docs: band buckets on near-identical boilerplate can be huge —
 bucket membership is built in TWO phases (keys-only census → prune
 singletons and oversized buckets → collect survivors), so an oversized
-bucket is never materialized in any reducer, let alone pair-expanded.
+bucket is never materialized in any reducer, let alone pair-expanded. The
+prune join builds on the survivor keys, broadcast or sort-merged by their
+measured count, never on the member rows (`_bucket_pairs`).
 Truncation is NOT silent: `lsh_bucket_report` computes per-run bucket
 statistics (total / oversize / largest) from the census, so a
 boilerplate-heavy corpus shows its capped-bucket count next to the pair
@@ -30,13 +32,14 @@ MinHash, never an uncapped self-join.
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 from pyspark.sql.types import ArrayType, LongType
 
 from .. import constants as C
-from .spec import round4_col
 
 DEFAULT_MAX_BUCKET = 64
 
@@ -84,9 +87,11 @@ def _xxh64_int_with_seed(value: int, seeds: np.ndarray) -> np.ndarray:
     return acc ^ (acc >> np.uint64(32))
 
 
+@functools.lru_cache(maxsize=None)
 def _minhash_fold_udf(n_perms: int):
     """pandas UDF folding per-shingle xxhash64 values into the n_perms-min
-    signature. Input: array<long> of JVM `xxhash64(s)` per shingle.
+    signature. Input: array<long> of JVM `xxhash64(s)` per shingle. One UDF
+    per n_perms: its JVM function is built on first use and reused.
 
     Bit-identity with the previous all-JVM reduce fold is by CONSTRUCTION
     of Spark's chained hash: `xxhash64(s, i)` == hashInt(i, seed =
@@ -156,89 +161,107 @@ def with_minhash(df: DataFrame, text_col: str = "text",
     degenerate. Found by the scalar xxh mirror (dedup_mirror.py); pinned
     by test_minhash_signature_is_not_degenerate and mirror-equality
     tests — which also pin this round's numpy fold."""
+    return _minhashed(df, "*", text_col, n_perms)
+
+
+def _minhashed(df: DataFrame, keep: str, text_col: str,
+               n_perms: int) -> DataFrame:
+    """The select item `keep` over df, plus `shingles` and `minhash` (see
+    with_minhash)."""
     from .spec import SPARK, word_ngrams, words
 
     lowered = words(SPARK, f"lower({text_col})")
-    df = df.withColumn("_mh_words", F.expr(lowered)).withColumn(
-        "shingles",
-        F.array_distinct(
-            F.expr(word_ngrams(SPARK, "_mh_words", C.MINHASH_SHINGLE_WORDS))
-        ),
-    ).drop("_mh_words")
-    shingle_hashes = F.expr("transform(shingles, s -> xxhash64(s))")
-    return df.withColumn("minhash", _minhash_fold_udf(n_perms)(shingle_hashes))
-
-
-def _bucket_sizes(keyed: DataFrame) -> DataFrame:
-    """Keys-only bucket census — a partial-aggregated count, never the
-    members themselves. The cap/report decisions read THIS, so an oversized
-    bucket is never materialized anywhere."""
-    return keyed.groupBy("band_idx", "band_hash").agg(
-        F.count(F.lit(1)).alias("bucket_size")
-    )
-
-
-def _bucketed(keyed: DataFrame, payload_cols: list[str],
-              max_bucket: int) -> DataFrame:
-    """Two-phase bucket build: census → prune singletons AND oversized
-    buckets → collect_list only over the survivors.
-
-    A single-phase `collect_list + filter(size <= cap)` would materialize a
-    10^8-member boilerplate bucket in one reducer BEFORE discarding it —
-    the exact OOM the cap exists to prevent. The census pass is keys-only
-    and the prune join is co-partitioned with the collect shuffle (same
-    keys), so the extra exchange carries only (band_idx, band_hash)."""
-    ok = (
-        _bucket_sizes(keyed)
-        .filter(
-            (F.col("bucket_size") > 1) & (F.col("bucket_size") <= max_bucket)
-        )
-        .select("band_idx", "band_hash")
-    )
-    return keyed.join(ok, ["band_idx", "band_hash"]).groupBy(
-        "band_idx", "band_hash"
-    ).agg(
-        F.sort_array(
-            F.collect_list(F.struct("doc", *payload_cols))
-        ).alias("members")
-    )
-
-
-def _pairs_from_buckets(buckets: DataFrame, max_bucket: int,
-                        a_cols: dict, b_cols: dict) -> DataFrame:
-    """Within-bucket pair expansion (buckets arrive pre-pruned to
-    2..max_bucket members; the filter is a cheap defensive recheck).
-
-    Deliberately NO cross-band dedup here: a (doc_a, doc_b) pair can
-    surface from several bands — and, when an id is non-unique (the
-    corpus's class-13 url reuse), with DIFFERENT payload signatures.
-    A dropDuplicates at this layer would keep a partition-order-dependent
-    row (the CLAUDE.md never-first()-unordered rule; round-5 review catch
-    — the frozen mirror oracles would hash-flake). Callers compute their
-    score per row and reduce per pair with a DETERMINISTIC aggregate
-    (max est / min hamming)."""
-    usable = buckets.filter(
-        (F.size("members") > 1) & (F.size("members") <= max_bucket)
-    )
-    sel_a = ", ".join(f"a.{src} as {dst}" for src, dst in a_cols.items())
-    sel_b = ", ".join(f"b.{src} as {dst}" for src, dst in b_cols.items())
+    shingles = word_ngrams(SPARK, "_mh_words", C.MINHASH_SHINGLE_WORDS)
+    fold = _minhash_fold_udf(n_perms)
     return (
-        usable.select(
-            F.explode(
-                F.expr(
-                    f"""flatten(transform(members, (a, i) ->
-                        transform(slice(members, i + 2, size(members)), b ->
-                            struct(a.doc as doc_a, b.doc as doc_b,
-                                   {sel_a}, {sel_b}))))"""
-                )
-            ).alias("p")
-        )
-        .select("p.*")
-        # a non-unique id_col (the synthetic corpus reuses a url, class 13)
-        # would otherwise emit self-pairs, violating the id_a < id_b
-        # contract (round-2 ADVICE #2)
-        .filter(F.col("doc_a") != F.col("doc_b"))
+        df.selectExpr(keep, f"{lowered} AS _mh_words")
+        .selectExpr("* EXCEPT (_mh_words)", f"array_distinct({shingles}) AS shingles")
+        .withColumn("minhash", fold(F.expr("transform(shingles, s -> xxhash64(s))")))
     )
+
+
+def _minhash_signed(df: DataFrame, id_col: str, text_col: str,
+                    n_perms: int) -> DataFrame:
+    """(doc, minhash) rows of df."""
+    from .spec import SPARK, ident
+
+    return _minhashed(
+        df, f"{ident(SPARK, id_col)} AS doc", text_col, n_perms
+    ).drop("shingles")
+
+
+#: Keys-only bucket census over a bound `keyed` frame: a partial-aggregated
+#: count, never the members themselves. The cap and report decisions read
+#: THIS, so an oversized bucket is never materialized anywhere.
+_CENSUS = ("SELECT band_idx, band_hash, count(1) AS bucket_size FROM {keyed} "
+           "GROUP BY band_idx, band_hash")
+
+# One survivor key (band_idx INT, band_hash BIGINT) as an UnsafeRow: a
+# null-bit word and two 8-byte slots. n keys are n times this in the rows a
+# broadcast collects to the driver, the size autoBroadcastJoinThreshold
+# bounds. (The hash relation built from them reports more: its first
+# memory page, 16 MiB on 4 cores, whatever the key count.)
+_KEY_BYTES = 24
+
+
+def _checkpoint_counted(df: DataFrame) -> tuple[DataFrame, int]:
+    """df checkpointed eagerly, and its row count, observed in the
+    checkpointing job (a count() afterwards would be two more jobs)."""
+    obs = Observation()
+    done = df.observe(obs, F.expr("count(1) AS n")).localCheckpoint(eager=True)
+    return done, obs.get["n"]
+
+
+def _bucket_pairs(keyed: DataFrame, payload: str, score: str,
+                  max_bucket: int) -> DataFrame:
+    """(doc, <payload>, band_idx, band_hash) rows → one (doc_a, doc_b,
+    <score>) row per two members of a bucket with 2..max_bucket members.
+    `score` is a SQL item `<expr> AS <name>` over the two members'
+    payloads, `a.<payload>` and `b.<payload>`. The plan is parsed from SQL
+    text: a Column-DSL node costs a driver round trip each.
+
+    Two phases: the keys-only census is pruned to the surviving buckets,
+    and only their members are collected. A single-phase `collect_list +
+    filter(size <= cap)` would materialize a 10^8-member boilerplate bucket
+    in one reducer BEFORE discarding it — the exact OOM the cap exists to
+    prevent.
+
+    The survivor keys are checkpointed and counted in one job, and the
+    prune join builds on them: broadcast when count × _KEY_BYTES fits
+    spark.sql.autoBroadcastJoinThreshold, otherwise a hinted sort-merge
+    join, whose key exchange the collect's groupBy reuses. The member rows
+    are never the build side. Spark sizes them from the signature
+    checkpoint, whose LogicalRDD inherits the text scan's estimate (0.76 MB
+    for 126 MB of member rows at 10k pages), so left unhinted it broadcasts
+    them.
+
+    Members are sorted by (doc, payload), so doc_a <= doc_b; the self-pairs
+    of a non-unique id (the corpus's class-13 url reuse) are dropped. There
+    is deliberately NO cross-band dedup here: a pair can surface from
+    several bands — and, for a non-unique id, with DIFFERENT payloads — so
+    a dropDuplicates would keep a partition-order-dependent row (the
+    CLAUDE.md never-first()-unordered rule; round-5 review catch). Callers
+    reduce per pair with a DETERMINISTIC aggregate (max est / min
+    hamming)."""
+    from .pipeline import broadcast_limit
+
+    spark = keyed.sparkSession
+    survivors, n = _checkpoint_counted(spark.sql(
+        f"SELECT band_idx, band_hash FROM ({_CENSUS}) "
+        f"WHERE bucket_size BETWEEN 2 AND {int(max_bucket)}", keyed=keyed,
+    ))
+    hint = "BROADCAST" if 0 <= n * _KEY_BYTES <= broadcast_limit(spark) else "MERGE"
+    return spark.sql(f"""
+        SELECT * FROM (
+          SELECT inline(flatten(transform(members, (a, i) ->
+            transform(slice(members, i + 2, size(members)), b ->
+              struct(a.doc AS doc_a, b.doc AS doc_b, {score})))))
+          FROM (
+            SELECT /*+ {hint}(s) */
+                   sort_array(collect_list(struct(doc, {payload}))) AS members
+            FROM {{keyed}} JOIN {{survivors}} s USING (band_idx, band_hash)
+            GROUP BY band_idx, band_hash))
+        WHERE doc_a <> doc_b""", keyed=keyed, survivors=survivors)
 
 
 def lsh_bucket_report(keyed: DataFrame, max_bucket: int) -> DataFrame:
@@ -247,7 +270,7 @@ def lsh_bucket_report(keyed: DataFrame, max_bucket: int) -> DataFrame:
     (n_buckets, n_multi, n_capped, largest_bucket, docs_in_capped).
     Computed from the keys-only census, so even reporting on a pathological
     corpus never materializes a bucket's members."""
-    return _bucket_sizes(keyed).agg(
+    return keyed.sparkSession.sql(_CENSUS, keyed=keyed).agg(
         F.count(F.lit(1)).alias("n_buckets"),
         F.sum((F.col("bucket_size") > 1).cast("bigint")).alias("n_multi"),
         F.sum((F.col("bucket_size") > max_bucket).cast("bigint")).alias("n_capped"),
@@ -277,11 +300,8 @@ def _band_explode(signed: DataFrame, bands: int, r: int) -> DataFrame:
 def _minhash_banded(
     df: DataFrame, id_col: str, text_col: str, bands: int, n_perms: int
 ) -> DataFrame:
-    r = n_perms // bands
-    signed = with_minhash(df.select(id_col, text_col), text_col, n_perms)
-    return _band_explode(
-        signed.select(F.col(id_col).alias("doc"), "minhash"), bands, r
-    )
+    signed = _minhash_signed(df, id_col, text_col, n_perms)
+    return _band_explode(signed, bands, n_perms // bands)
 
 
 def minhash_candidate_pairs(
@@ -295,40 +315,35 @@ def minhash_candidate_pairs(
 ) -> DataFrame:
     """LSH candidate pairs with estimated Jaccard >= threshold.
 
-    Returns (id_a, id_b, est_jaccard) with id_a < id_b, deduplicated across
-    bands. Buckets above max_bucket are skipped; run
+    Returns (doc_a, doc_b, est_jaccard) with doc_a < doc_b, deduplicated
+    across bands. Buckets above max_bucket are skipped; run
     `minhash_bucket_report` on the same inputs to quantify the truncation.
     Reference analog: the duplicate check's groupBy-count pattern
     (dq_rules_library.py:318-321) generalized to near-duplicates.
+
+    The call runs the bucket census (see _bucket_pairs); the pairs
+    themselves are computed when the returned frame is.
     """
-    # the signature table is checkpointed lazily: the bucket census and the
-    # bucket collect read one evaluation of the text scan, shingles and
-    # signature UDF instead of recomputing them (signatures are ~520 B/doc,
-    # the order of what the band groupBy shuffles anyway)
-    sig = with_minhash(df.select(id_col, text_col), text_col, n_perms).select(
-        F.col(id_col).alias("doc"), "minhash"
-    ).localCheckpoint(eager=False)
-    banded = _band_explode(sig, bands, n_perms // bands)
-    buckets = _bucketed(banded, ["minhash"], max_bucket)
-    pairs = _pairs_from_buckets(
-        buckets, max_bucket,
-        {"minhash": "mh_a"}, {"minhash": "mh_b"},
-    )
-    est = pairs.withColumn(
-        "est_jaccard",
-        round4_col(
-            F.size(F.expr("filter(zip_with(mh_a, mh_b, (x, y) -> x = y), v -> v)"))
-            / F.lit(C.MINHASH_PERMS)
-        ),
+    from .pipeline import _double
+    from .spec import round4
+
+    # the signature table is checkpointed lazily: the census job evaluates
+    # the text scan, shingles and signature UDF once, and the member collect
+    # reads the checkpointed rows (signatures are ~520 B/doc, the order of
+    # what the band groupBy shuffles anyway)
+    sig = _minhash_signed(df, id_col, text_col, n_perms).localCheckpoint(eager=False)
+    matches = "size(filter(zip_with(a.minhash, b.minhash, (x, y) -> x = y), v -> v))"
+    pairs = _bucket_pairs(
+        _band_explode(sig, bands, n_perms // bands), "minhash",
+        f"{round4(f'{matches} / {C.MINHASH_PERMS}')} AS est_jaccard", max_bucket,
     )
     # per-pair deterministic reduction: multi-band duplicates carry the
     # same est; duplicate-URL ids can carry DIFFERENT signatures — MAX is
     # order-independent where a dropDuplicates pick would not be
-    agg = est.groupBy("doc_a", "doc_b").agg(
-        F.max("est_jaccard").alias("est_jaccard")
-    )
-    return agg.filter(F.col("est_jaccard") >= threshold).select(
-        "doc_a", "doc_b", "est_jaccard"
+    return pairs.sparkSession.sql(
+        "SELECT doc_a, doc_b, max(est_jaccard) AS est_jaccard FROM {pairs} "
+        "GROUP BY doc_a, doc_b "
+        f"HAVING max(est_jaccard) >= {_double(float(threshold))}", pairs=pairs,
     )
 
 
@@ -411,18 +426,22 @@ def with_simhash(df: DataFrame, text_col: str = "text") -> DataFrame:
     return df.withColumn("simhash", simhash_fold_udf(word_hashes))
 
 
-def _simhash_chunked(sh: DataFrame) -> DataFrame:
-    return sh.select(
-        "doc",
-        "simhash",
-        F.posexplode(
-            F.array(
-                *[
-                    (F.shiftrightunsigned("simhash", k * 16).bitwiseAND(F.lit(0xFFFF)))
-                    for k in range(4)
-                ]
-            )
-        ).alias("band_idx", "band_hash"),
+def _simhash_signed(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(doc, simhash) rows of df."""
+    from .spec import SPARK, ident
+
+    return with_simhash(
+        df.selectExpr(f"{ident(SPARK, id_col)} AS doc", text_col), text_col
+    ).selectExpr("doc", "simhash")
+
+
+def _simhash_chunked(signed: DataFrame) -> DataFrame:
+    """(doc, simhash) → one row per 16-bit chunk of the signature."""
+    chunks = ", ".join(
+        f"shiftrightunsigned(simhash, {k * 16}) & 65535" for k in range(4)
+    )
+    return signed.selectExpr(
+        "doc", "simhash", f"posexplode(array({chunks})) AS (band_idx, band_hash)"
     )
 
 
@@ -437,25 +456,20 @@ def simhash_near_pairs(
     chunk bucketing (pigeonhole over 4 chunks covers distance <= 3).
     Chunk buckets above max_bucket are skipped — a common 16-bit chunk on
     boilerplate corpora would otherwise explode O(n^2) (VERDICT r1 #6);
-    quantify with `simhash_bucket_report`."""
-    sh = with_simhash(df.select(id_col, text_col), text_col).select(
-        F.col(id_col).alias("doc"), "simhash"
-    ).localCheckpoint(eager=False)   # one signature pass feeds census+collect
-    buckets = _bucketed(_simhash_chunked(sh), ["simhash"], max_bucket)
-    cand = _pairs_from_buckets(
-        buckets, max_bucket,
-        {"simhash": "sh_a"}, {"simhash": "sh_b"},
-    )
-    ham = cand.withColumn(
-        "hamming", F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
+    quantify with `simhash_bucket_report`. Like minhash_candidate_pairs,
+    the call runs the bucket census."""
+    # one signature pass feeds the census and the collect
+    sig = _simhash_signed(df, id_col, text_col).localCheckpoint(eager=False)
+    pairs = _bucket_pairs(
+        _simhash_chunked(sig), "simhash",
+        "bit_count(a.simhash ^ b.simhash) AS hamming", max_bucket,
     )
     # MIN per pair — deterministic across chunk multiplicity and
-    # duplicate-URL signature variants (see _pairs_from_buckets)
-    agg = ham.groupBy("doc_a", "doc_b").agg(
-        F.min("hamming").alias("hamming")
-    )
-    return agg.filter(F.col("hamming") <= max_hamming).select(
-        "doc_a", "doc_b", "hamming"
+    # duplicate-URL signature variants (see _bucket_pairs)
+    return pairs.sparkSession.sql(
+        "SELECT doc_a, doc_b, min(hamming) AS hamming FROM {pairs} "
+        f"GROUP BY doc_a, doc_b HAVING min(hamming) <= {int(max_hamming)}",
+        pairs=pairs,
     )
 
 
@@ -465,10 +479,8 @@ def simhash_bucket_report(
     text_col: str = "text",
     max_bucket: int = DEFAULT_MAX_BUCKET,
 ) -> DataFrame:
-    sh = with_simhash(df.select(id_col, text_col), text_col).select(
-        F.col(id_col).alias("doc"), "simhash"
-    )
-    return lsh_bucket_report(_simhash_chunked(sh), max_bucket)
+    signed = _simhash_signed(df, id_col, text_col)
+    return lsh_bucket_report(_simhash_chunked(signed), max_bucket)
 
 
 def losers_broadcastable(n_losers: int, n_total: int) -> bool:
@@ -602,13 +614,14 @@ def star_contract_clusters(pairs: DataFrame, max_rounds: int = 20,
     while edges still moved. Pass `stats` to receive {'rounds': n}, the
     number of distributed rounds run (0 when the driver finishes at once).
 
-    The pairs plan is evaluated once, into a local checkpoint; every later
-    read, the driver collect included, comes from checkpointed rows."""
+    The pairs plan is evaluated once, into a local checkpoint whose job also
+    counts the live edges; every later read, the driver collect included,
+    comes from checkpointed rows."""
     if stats is None:
         stats = {}
     stats["rounds"] = 0
-    edges = _canonical_edges(pairs).localCheckpoint(eager=True)
-    live, moved = edges.count(), -1
+    edges, live = _checkpoint_counted(_canonical_edges(pairs))
+    moved = -1
     while live > _DRIVER_FINISH_MAX_EDGES:
         if stats["rounds"] == max_rounds:
             raise RuntimeError(

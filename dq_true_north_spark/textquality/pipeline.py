@@ -32,7 +32,7 @@ Language gates (mirrored exactly in tests/golden.py):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import constants as C
@@ -61,14 +61,17 @@ def estimate_dup_fraction(pages: DataFrame) -> float:
     return max(0.0, 1.0 - row["d"] / row["n"])
 
 
+def broadcast_limit(spark: SparkSession) -> int:
+    """spark.sql.autoBroadcastJoinThreshold in bytes (-1: broadcast off)."""
+    return spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+
+
 def _broadcastable(df: DataFrame) -> bool:
     """Spark's join planner's own size test, read without running a job:
     the optimized plan's size estimate is within
     spark.sql.autoBroadcastJoinThreshold."""
     size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-    limit = (df.sparkSession._jsparkSession.sessionState().conf()
-             .autoBroadcastJoinThreshold())
-    return 0 <= size <= limit
+    return 0 <= size <= broadcast_limit(df.sparkSession)
 
 
 def _double(x: float) -> str:

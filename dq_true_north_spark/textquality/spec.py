@@ -65,30 +65,14 @@ def lines(dialect: str, expr: str) -> str:
     return f"string_split({expr}, chr(10))"
 
 
-def arr_lit(dialect: str, items) -> str:
-    quoted = ", ".join("'" + i.replace("'", "''") + "'" for i in items)
-    return f"array({quoted})" if dialect == SPARK else f"[{quoted}]"
-
-
 def arr_filter(dialect: str, arr: str, lam: str) -> str:
     fn = "filter" if dialect == SPARK else "list_filter"
     return f"{fn}({arr}, {lam})"
 
 
-def arr_contains(dialect: str, arr: str, elem: str) -> str:
-    fn = "array_contains" if dialect == SPARK else "list_contains"
-    return f"{fn}({arr}, {elem})"
-
-
 def arr_distinct(dialect: str, arr: str) -> str:
     fn = "array_distinct" if dialect == SPARK else "list_distinct"
     return f"{fn}({arr})"
-
-
-def arr_intersect(dialect: str, a: str, b: str) -> str:
-    fn = "array_intersect" if dialect == SPARK else "list_intersect"
-    return f"{fn}({a}, {b})"
-
 
 
 def str_t(d: str) -> str:
@@ -252,10 +236,16 @@ def symbol_word_ratio(d: str, t: str) -> str:
     return round4(f"CAST({sym} AS DOUBLE) / nullif({n_words(d, t)}, 0)")
 
 
+def _stopwords(d: str) -> str:
+    """The stop words among WORDS, kept by `IN` over the literal list, which
+    Spark optimizes to a hash-set lookup (INSET) where array_contains would
+    scan all 50 literals per word."""
+    stops = ", ".join(lit(d, w) for w in C.STOPWORDS)
+    return arr_filter(d, WORDS, f"w -> w IN ({stops})")
+
+
 def stopword_count(d: str, t: str) -> str:
-    stops = arr_lit(d, C.STOPWORDS)
-    lam = f"w -> {arr_contains(d, stops, 'w')}"
-    return size(d, arr_filter(d, WORDS, lam))
+    return size(d, _stopwords(d))
 
 
 def stopword_fraction(d: str, t: str) -> str:
@@ -265,8 +255,7 @@ def stopword_fraction(d: str, t: str) -> str:
 
 
 def distinct_stopwords(d: str, t: str) -> str:
-    stops = arr_lit(d, C.STOPWORDS)
-    return size(d, arr_intersect(d, arr_distinct(d, WORDS), stops))
+    return size(d, arr_distinct(d, _stopwords(d)))
 
 
 def alpha_word_count(d: str, t: str) -> str:

@@ -3,7 +3,9 @@
 from __future__ import annotations
 
 import random
+import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from dq_true_north_spark.corpus import pages_df
@@ -567,6 +569,25 @@ def test_star_contraction_hands_off_to_driver_mid_run(spark, monkeypatch):
         assert 1 <= stats["rounds"] < full["rounds"], (stats, full)
 
 
+def test_star_contraction_counts_live_edges_in_its_checkpoint(spark, jobs_run_by):
+    """The live-edge count is observed in the job that checkpoints the
+    pairs: a call on a 10,000-node chain runs the checkpoint (a shuffle
+    stage and its result) and the driver finish's collect, and no count()
+    job of its own."""
+    import pyarrow as pa
+
+    from dq_true_north_spark.textquality.dedup import star_contract_clusters
+
+    n = 10_000
+    chain = spark.createDataFrame(pa.table({
+        "doc_a": [f"c{i:05d}" for i in range(n)],
+        "doc_b": [f"c{i + 1:05d}" for i in range(n)],
+    }))
+    clusters = []
+    assert len(jobs_run_by(lambda: clusters.append(star_contract_clusters(chain)))) <= 3
+    assert clusters[0].count() == n + 1
+
+
 def test_bmp_resize_and_wav_features_are_real(spark):
     """Codec-free media ops do REAL work: BMP resize round-trips pixels
     through decode -> nearest-neighbor -> re-encode; WAV features match the
@@ -908,3 +929,100 @@ def test_ann_lsh_mirror_equals_spark(spark):
                               n_planes=4, n_tables=8).collect()
     )
     assert sp == mirror
+
+
+# ------------------------------------------- LSH bucket join build side ----
+
+LSH_PAGES = 500
+
+
+@pytest.fixture(scope="module")
+def lsh_mirror_pairs():
+    from dq_true_north_spark.corpus import generate_pages_pdf
+    from dq_true_north_spark.textquality.dedup_mirror import (
+        minhash_pairs_mirror,
+        simhash_pairs_mirror,
+    )
+
+    pdf = generate_pages_pdf(LSH_PAGES)
+    urls, texts = list(pdf["url"]), list(pdf["text"])
+    return {"minhash": minhash_pairs_mirror(urls, texts),
+            "simhash": simhash_pairs_mirror(urls, texts)}
+
+
+def _lsh(algo):
+    """(pairs function, its bucket report, its score column)."""
+    from dq_true_north_spark.textquality import dedup
+
+    return {
+        "minhash": (dedup.minhash_candidate_pairs, dedup.minhash_bucket_report,
+                    "est_jaccard"),
+        "simhash": (dedup.simhash_near_pairs, dedup.simhash_bucket_report,
+                    "hamming"),
+    }[algo]
+
+
+def _formatted_plan(df) -> str:
+    mode = df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode
+    return df._jdf.queryExecution().explainString(mode.fromString("formatted"))
+
+
+def _broadcast_inputs(plan: str) -> list[list[str]]:
+    """The input columns of every BroadcastExchange in a formatted plan."""
+    return [
+        [c.split("#")[0] for c in m.group(1).split(", ")]
+        for m in re.finditer(r"\) BroadcastExchange\nInput \[\d+\]: \[([^\]]*)\]",
+                             plan)
+    ]
+
+
+@pytest.mark.parametrize("algo", ["minhash", "simhash"])
+def test_lsh_bucket_join_builds_on_survivor_keys(spark, lsh_mirror_pairs, algo):
+    """The bucket join's build side is the survivor keys, chosen from their
+    measured count, never the member rows that carry the signatures.
+
+    At the session's threshold, and at a threshold of exactly the keys'
+    broadcast size (count × _KEY_BYTES, the count read independently from
+    the bucket report), the keys are the only broadcast. One byte below it
+    nothing is broadcast: the join sort-merges. Under every threshold and
+    at partitionings 1, 4 and 13 the pairs equal the scalar mirror's."""
+    from dq_true_north_spark.textquality.dedup import _KEY_BYTES
+
+    pairs_of, report_of, score = _lsh(algo)
+    rep = report_of(pages_df(spark, LSH_PAGES, partitions=4)).first()
+    keys_bytes = (rep["n_multi"] - rep["n_capped"]) * _KEY_BYTES
+    assert keys_bytes > 0
+    conf = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(conf)
+    runs = [(saved, True, p) for p in (1, 4, 13)] + [(str(keys_bytes), True, 4)]
+    runs += [(str(keys_bytes - 1), False, p) for p in (1, 4, 13)]
+    try:
+        for limit, broadcast, parts in runs:
+            spark.conf.set(conf, limit)
+            pairs = pairs_of(pages_df(spark, LSH_PAGES, partitions=parts))
+            got = sorted((r["doc_a"], r["doc_b"], r[score]) for r in pairs.collect())
+            assert got == lsh_mirror_pairs[algo], (limit, parts)
+            plan = _formatted_plan(pairs)
+            inputs = _broadcast_inputs(plan)
+            if broadcast:
+                assert inputs, (limit, parts)
+                assert all(cols == ["band_idx", "band_hash"] for cols in inputs), inputs
+            else:
+                assert inputs == [], inputs
+                assert "SortMergeJoin" in plan
+    finally:
+        spark.conf.set(conf, saved)
+
+
+@pytest.mark.parametrize("algo", ["minhash", "simhash"])
+def test_lsh_plan_building_py4j_budget(spark, py4j_calls, algo):
+    """The LSH plan is parsed from SQL text: a call (its census job
+    included) makes at most 100 driver-to-JVM round trips, where the
+    Column-DSL build made ~520. The least of three calls is taken, since
+    py4j's collection of earlier objects' JVM references shares the
+    connection."""
+    pairs_of = _lsh(algo)[0]
+    pages = pages_df(spark, 400, partitions=4)
+    pairs_of(pages)   # first use resolves JVM classes and the fold UDF
+    calls = min(py4j_calls(lambda: pairs_of(pages)) for _ in range(3))
+    assert calls <= 100, calls

@@ -194,6 +194,41 @@ def test_sink_schema_self_heal(spark, tmp_path):
     assert s.read(spark, "t").count() == 2
 
 
+def test_sink_keeps_rows_when_schema_read_fails(spark, tmp_path, monkeypatch):
+    """A failure to read the table's schema that is not a schema mismatch
+    (an I/O error here) raises from append, and the table keeps its rows:
+    it is never taken for drift and recreated."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.readwriter import DataFrameReader
+
+    base = str(tmp_path / "keep")
+    ResultSink(base).append(spark.createDataFrame([("a", 1)], "name string, n int"), "t")
+
+    def unreadable(*args, **kwargs):
+        raise OSError("transient read failure")
+
+    with monkeypatch.context() as m:
+        m.setattr(pq, "read_schema", unreadable)
+        m.setattr(DataFrameReader, "parquet", unreadable)
+        with pytest.raises(OSError, match="transient"):
+            # a new sink has not verified the table yet, so it reads the schema
+            ResultSink(base).append(
+                spark.createDataFrame([("b", 2)], "name string, n int"), "t")
+    rows = ResultSink(base).read(spark, "t").collect()
+    assert [r["name"] for r in rows] == ["a"]
+
+
+def test_sink_recreates_table_with_unparseable_footer(spark, tmp_path):
+    """A part file whose footer cannot be parsed is the one read failure
+    that recreates the table, like a schema mismatch."""
+    base = tmp_path / "corrupt"
+    (base / "t").mkdir(parents=True)
+    (base / "t" / "part-0.parquet").write_bytes(b"not a parquet file")
+    s = ResultSink(str(base))
+    s.append(spark.createDataFrame([("b", 2)], "name string, n int"), "t")
+    assert [r["name"] for r in s.read(spark, "t").collect()] == ["b"]
+
+
 def test_sink_concurrent_appends_same_table(spark, tmp_path):
     """Per-table lock: N driver threads appending to ONE details table must
     lose no rows (two FileOutputCommitter jobs on one path share the

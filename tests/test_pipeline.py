@@ -215,9 +215,10 @@ def test_verdict_plans_build_without_jobs(spark, jobs_run_by):
 
 
 #: py4j round trips to build compute_verdicts(pages) plus
-#: minhash_candidate_pairs(pages), measured on PySpark 4.1.2 (3,824
-#: before the wide projections were parsed from SQL text)
-PLAN_BUILD_ROUND_TRIPS = 1_012
+#: minhash_candidate_pairs(pages), its bucket census included, measured on
+#: PySpark 4.1.2 (3,824 before the wide projections were parsed from SQL
+#: text, 1,012 before the LSH stage was)
+PLAN_BUILD_ROUND_TRIPS = 533
 
 
 def test_plan_building_py4j_budget(spark, py4j_calls):

@@ -101,8 +101,12 @@ def main() -> None:
         "folds all 64 permutation hashes to the element-wise min in "
         "vectorized numpy (chained-seed identity, bit-identical to the "
         "all-JVM fold; round 6). The per-doc signature table is "
-        "localCheckpointed so census and collect read one evaluation; the "
-        "band-bucket groupBy is the only data shuffle; pair expansion "
+        "localCheckpointed so census and collect read one evaluation. The "
+        "census job checkpoints and counts the survivor keys, and the prune "
+        "join builds on them: BroadcastExchange of (band_idx, band_hash) "
+        "only, or a MERGE-hinted sort-merge join when count x 24 B exceeds "
+        "autoBroadcastJoinThreshold; the member rows are never broadcast. "
+        "The band-bucket groupBy is the only data shuffle; pair expansion "
         "happens inside capped buckets (max 64 members).",
     )
     cap(
