@@ -20,10 +20,10 @@ from pyspark.sql import functions as F
 
 from . import constants as C
 
-# THE host extractor — shared by partitioning AND streaming (streaming.py
-# imports it). No trailing-slash requirement: 'https://h.io' and
-# 'https://h.io?x=1' must group under h.io, not under '' (round-2 fix
-# landed in streaming only; VERDICT r2 #2 unified it here).
+# THE host extractor — used by partitioning AND the registry's host
+# queries (queries.py, whose oracle compiles the same HOST_RE). No
+# trailing-slash requirement: 'https://h.io' and 'https://h.io?x=1' must
+# group under h.io, not under '' (VERDICT r2 #2).
 HOST_RE = r"^[A-Za-z]+://([^/?#]+)"
 
 

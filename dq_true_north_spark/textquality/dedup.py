@@ -297,13 +297,6 @@ def _band_explode(signed: DataFrame, bands: int, r: int) -> DataFrame:
     )
 
 
-def _minhash_banded(
-    df: DataFrame, id_col: str, text_col: str, bands: int, n_perms: int
-) -> DataFrame:
-    signed = _minhash_signed(df, id_col, text_col, n_perms)
-    return _band_explode(signed, bands, n_perms // bands)
-
-
 def minhash_candidate_pairs(
     df: DataFrame,
     id_col: str = "url",
@@ -355,7 +348,8 @@ def minhash_bucket_report(
     n_perms: int = C.MINHASH_PERMS,
     max_bucket: int = DEFAULT_MAX_BUCKET,
 ) -> DataFrame:
-    banded = _minhash_banded(df, id_col, text_col, bands, n_perms)
+    signed = _minhash_signed(df, id_col, text_col, n_perms)
+    banded = _band_explode(signed, bands, n_perms // bands)
     return lsh_bucket_report(banded, max_bucket)   # census only: one pass
 
 

