@@ -10,10 +10,7 @@ from __future__ import annotations
 
 import json
 
-from pyspark.sql import DataFrame, SparkSession
-
 from . import constants as C
-from .io import local_rows
 
 
 def _r(rule_id, name, rtype, impl, logic="", seg="", **params) -> dict:
@@ -81,20 +78,6 @@ DEFAULT_CATALOG: list[dict] = [
            "THEN 1 ELSE 0 END) FROM orders"
        )),
 ]
-
-
-def catalog_df(spark: SparkSession, rules: list[dict] | None = None) -> DataFrame:
-    rules = rules if rules is not None else DEFAULT_CATALOG
-    return local_rows(
-        spark,
-        [tuple(r[k] for k in (
-            "rule_id", "rule_name", "rule_type", "logic_implementation",
-            "logic_definition", "parameters", "segment_value", "is_active",
-        )) for r in rules],
-        "rule_id int, rule_name string, rule_type string, "
-        "logic_implementation string, logic_definition string, "
-        "parameters string, segment_value string, is_active boolean",
-    )
 
 
 def summary_oracle_sql() -> str:

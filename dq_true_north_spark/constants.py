@@ -51,9 +51,6 @@ STOPWORDS = (
     "was", "are", "been", "has", "had", "were", "can", "said", "who", "its",
 )
 
-BULLET_PREFIXES = ("- ", "* ", "•")  # line starts
-ELLIPSIS_SUFFIX = "..."
-
 # drop-reason codes, frozen order (verdict arrays are emitted in this order)
 REASON_TOO_SHORT = "too_short"
 REASON_TOO_LONG = "too_long"

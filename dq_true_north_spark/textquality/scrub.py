@@ -5,7 +5,7 @@ The spec (constants.PII_PATTERNS order + lexicon) is executed:
      path (whole-stage codegen, no Python): `scrub_sql_expr(True, ...)`
      parsed into the verdict projection (pipeline.compute_verdicts);
   2. Python-side (`scrub_text`) — the golden-fixture reference
-     implementation AND the pandas-UDF fallback;
+     implementation;
   3. DuckDB-side (oracle SQL via `scrub_sql_expr`).
 Byte-identical output across all three is enforced by tests
 (BASELINE.json: "byte-identical extracted text per url"). Patterns are
@@ -16,10 +16,6 @@ agree; idempotence (scrub∘scrub == scrub) is property-tested.
 from __future__ import annotations
 
 import re
-
-import pandas as pd
-from pyspark.sql import functions as F
-from pyspark.sql.types import StringType
 
 from .. import constants as C
 
@@ -59,9 +55,3 @@ def scrub_sql_expr(dialect_spark: bool, expr: str) -> str:
             out = f"regexp_replace({out}, {lit}, '{repl}', 'g')"
     return out
 
-
-@F.pandas_udf(StringType())
-def scrub_udf(texts: pd.Series) -> pd.Series:
-    """Arrow-batched fallback path; byte-identical to scrub_text by
-    construction (same compiled patterns)."""
-    return texts.map(scrub_text)
