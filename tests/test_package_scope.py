@@ -14,6 +14,12 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = "dq_true_north_spark"
 ENTRY_POINTS = ("bench.py", "submit_pipeline.py", "perfbench/run.py")
 
+# Unreached modules whose deletion is planned but not yet landed (ROADMAP D7:
+# the media codecs retire 37 test ids, more than one change may retire, so the
+# deletion is split). Exact match: a new unreached module fails, and so does
+# deleting one of these without taking it off this list.
+AWAITING_DELETION = ("textquality.multimodal",)
+
 
 # sys.path of the entry scripts: the repo root, plus each script's own
 # directory (perfbench/run.py imports its siblings by bare name)
@@ -71,4 +77,5 @@ def test_every_package_module_is_reached_from_an_entry_point():
         os.path.relpath(p, os.path.join(ROOT, PKG))[:-3].replace(os.sep, ".")
         for p in package - seen
     )
-    assert unreached == [], f"package modules no entry point imports: {unreached}"
+    assert unreached == sorted(AWAITING_DELETION), (
+        f"package modules no entry point imports: {unreached}")
